@@ -17,19 +17,21 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Relational.queries("q05_nation_revenue")(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Relational.queries ++ Relational2.queries ++ Relational3.queries ++ Relational4.queries ++ Relational5.queries ++ TextOps.queries ++
-      SimilarityOps.queries ++ MinHashDedup.queries ++ Multimodal.queries ++
-      TemporalJoins.queries ++ DedupClusters.queries ++ EventsStream.queries ++
-      CorpusFilters.queries ++ CorpusStream.queries ++ GraphOps.queries ++
-      LakeOps.queries ++ EventAnalytics.queries ++ Relational6.queries
+  /** Every query module, in registration order (the key order of
+    * [[queries]] and [[oracleSql]]). A new module is one entry here.
+    */
+  lazy val suites: Seq[QuerySuite] = Seq(
+    Relational, Relational2, Relational3, Relational4, Relational5, TextOps,
+    SimilarityOps, MinHashDedup, Multimodal, TemporalJoins, DedupClusters,
+    EventsStream, CorpusFilters, CorpusStream, GraphOps, LakeOps,
+    EventAnalytics, Relational6)
 
-  def oracleSql: Map[String, String] =
-    Relational.oracle ++ Relational2.oracle ++ Relational3.oracle ++ Relational4.oracle ++ Relational5.oracle ++ TextOps.oracle ++
-      SimilarityOps.oracle ++ MinHashDedup.oracle ++ Multimodal.oracle ++
-      TemporalJoins.oracle ++ DedupClusters.oracle ++ EventsStream.oracle ++
-      CorpusFilters.oracle ++ CorpusStream.oracle ++ GraphOps.oracle ++
-      LakeOps.oracle ++ EventAnalytics.oracle ++ Relational6.oracle
+  private lazy val registry = QuerySuite.merge(suites)
+
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.queries
+
+  def oracleSql: Map[String, String] = registry.oracle
 
   /** [[oracleSql]] with the LSH-geometry-dependent entries (dd07, dd08,
     * ss05, gr01–gr03, rec01 — everything spliced over the embedding pairs
@@ -44,20 +46,14 @@ object SparkEntry {
     */
   def oracleSqlFor(spark: SparkSession, dir: String): Map[String, String] = {
     val n = SimilarityOps.embCount(spark, dir)
-    oracleSql ++ SimilarityOps.oracleAt(n) ++
-      DedupClusters.oracleAt(n) ++ GraphOps.oracleAt(n)
+    suites.foldLeft(oracleSql)(_ ++ _.oracleAt(n))
   }
 
   /** The keys [[oracleSqlFor]] regenerates — resolved WITHOUT touching
     * data (the generators are pure given n), so Verify can skip the
     * embeddings count when a subset run selects none of them (a dir
     * carrying only the tables a subset needs must not crash on a table
-    * that subset never reads). A lazy val: each generator materializes
-    * full oracle SQL (hundreds of inlined plane literals) just to read
-    * its keySet, so the construction should happen once, not per call
-    * (r18 ADVICE).
+    * that subset never reads).
     */
-  lazy val scaleDependentOracleKeys: Set[String] =
-    (SimilarityOps.oracleAt(1) ++ DedupClusters.oracleAt(1) ++
-      GraphOps.oracleAt(1)).keySet
+  def scaleDependentOracleKeys: Set[String] = registry.scaleDependentKeys
 }

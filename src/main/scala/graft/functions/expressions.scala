@@ -458,10 +458,9 @@ case class DeletionVariants(child: Expression) extends UnaryExpression {
   * corpus-scan paths (the integer-exact vector operators quantize EVERY
   * embedding element this way, multiple plan branches each; same
   * promotion as [[WordNgrams]]/[[LongVecFold]]). Semantics mirror the
-  * lambda form on its live domain: a NULL element stays NULL, finite
-  * values floor toward −∞ then narrow to BIGINT. (Non-finite elements
-  * would ANSI-error in the SQL cast; embeddings are parquet floats, and
-  * FxQuantSpec pins kernel == lambda over the real corpus.)
+  * lambda form: a NULL element stays NULL, finite values floor toward −∞
+  * then narrow to BIGINT, and an element whose product is NaN, infinite or
+  * outside the BIGINT range raises, like the ANSI cast ([[FxQuantKernel]]).
   */
 case class FxQuant(child: Expression) extends UnaryExpression {
   override def dataType: DataType = ArrayType(LongType,
@@ -483,12 +482,12 @@ case class FxQuant(child: Expression) extends UnaryExpression {
     val out = new Array[Any](m)
     var i = 0
     while (i < m) {
+      // unconditional: a wrong containsNull=false in the input's metadata
+      // must not read a null slot as 0
       out(i) =
-        if (hasNulls && xs.isNullAt(i)) null
-        else {
-          val x = if (isFloat) xs.getFloat(i).toDouble else xs.getDouble(i)
-          math.floor(x * 10000.0).toLong
-        }
+        if (xs.isNullAt(i)) null
+        else FxQuantKernel.quant(
+          if (isFloat) xs.getFloat(i).toDouble else xs.getDouble(i))
       i += 1
     }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
@@ -509,7 +508,7 @@ case class FxQuant(child: Expression) extends UnaryExpression {
          |for (int $i = 0; $i < $m; $i++) {
          |  $nullProbe
          |  $out[$i] = java.lang.Long.valueOf(
-         |    (long) Math.floor(((double) $c.$get($i)) * 10000.0));
+         |    graft.functions.FxQuantKernel.quant((double) $c.$get($i)));
          |}
          |${ev.value} =
          |  new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
@@ -518,6 +517,20 @@ case class FxQuant(child: Expression) extends UnaryExpression {
   }
   override protected def withNewChildInternal(c: Expression): FxQuant =
     copy(child = c)
+}
+
+/** Runtime kernel for [[FxQuant]], shared by eval and generated code. */
+object FxQuantKernel {
+  private val Bound = 9.223372036854775808e18 // 2^63, exact as a double
+
+  def quant(x: Double): Long = {
+    val f = math.floor(x * 10000.0)
+    // NaN fails both comparisons; ±Infinity and overflow fail one
+    if (!(f >= -Bound && f < Bound))
+      throw new ArithmeticException(
+        s"fx_quant: floor($x * 10000) is not a BIGINT")
+    f.toLong
+  }
 }
 
 /** Runtime kernel for [[NfcNormalize]] — kept as a static helper so the

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{QuerySuite, Tables}
 
 /** Corpus-hygiene operators a large-scale training-data pipeline runs after
   * dedup (builder brief / SURVEY §2.3 extension surface): benchmark
@@ -25,9 +25,7 @@ import graft.Tables
   *  - tx12: per-source quotas from a tiny broadcast aggregate; selection
   *    via the bounded BottomKPerKey aggregator, never a stratum window.
   */
-object CorpusFilters {
-  type Q = (SparkSession, String) => DataFrame
-
+object CorpusFilters extends QuerySuite {
   private def docs(s: SparkSession, dir: String): DataFrame =
     Tables(s, dir, "documents")
 

@@ -5,7 +5,7 @@ import scala.collection.immutable.ListMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{QuerySuite, Tables}
 
 /** Duplicate-cluster assignment: near-dup PAIRS (from the LSH path) →
   * connected components → one canonical representative per component (the
@@ -28,9 +28,7 @@ import graft.Tables
   * executor-local by default, reliable `checkpoint` to shared storage when
   * `spark.graft.checkpoint.dir` is set (the 1000-executor mode).
   */
-object DedupClusters {
-  type Q = (SparkSession, String) => DataFrame
-
+object DedupClusters extends QuerySuite {
   /** Releases a superseded checkpoint round — BOTH backing stores:
     *  - `localCheckpoint` mode: drops the executor block storage behind the
     *    LogicalRDD leaf (without this every round stays in executor memory
@@ -619,7 +617,7 @@ object DedupClusters {
        |FROM walk GROUP BY id
        |ORDER BY vec_id""".stripMargin
 
-  private[graft] def oracleAt(n: Long): Map[String, String] = Map(
+  private[graft] override def oracleAt(n: Long): Map[String, String] = Map(
     "dd08_semantic_clusters" ->
       dd08Sql(SimilarityOps.nearDupPairsCteSqlFor(n)))
 

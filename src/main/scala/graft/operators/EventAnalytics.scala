@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{QuerySuite, Tables}
 
 /** Behavioral event analytics over the `events` stream table: the
   * product-analytics operator family (funnel conversion, cohort
@@ -23,9 +23,7 @@ import graft.Tables
   * every ratio is integer fixed point (ppm via BIGINT floor division) so
   * the DuckDB oracle hashes bit-equal under any partial-agg schedule.
   */
-object EventAnalytics {
-  type Q = (SparkSession, String) => DataFrame
-
+object EventAnalytics extends QuerySuite {
   private def events(s: SparkSession, dir: String): DataFrame =
     Tables(s, dir, "events")
 

@@ -5,6 +5,8 @@ import scala.collection.immutable.ListMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QuerySuite
+
 /** Graph analytics over the near-duplicate graph — the step after clustering
   * (dd06/dd08): WHICH member of a duplicate group is the canonical one?
   * Degree/PageRank centrality ranks representatives (the doc most connected
@@ -28,9 +30,7 @@ import org.apache.spark.sql.functions._
   * `spark.graft.checkpoint.dir` points at shared storage (the multi-node
   * mode: rounds survive executor loss).
   */
-object GraphOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object GraphOps extends QuerySuite {
   private val Iters = 5
   private val Scale = 1000000000L // rank fixed-point: 1.0 == 10^9
   private val Base = 150000000L   // (1 - d) × Scale with d = 0.85
@@ -417,7 +417,7 @@ object GraphOps {
     * geometry is corpus-size-dependent on the Spark side — regenerated per
     * input dir via [[SparkEntry.oracleSqlFor]] like dd07/dd08/ss05.
     */
-  private[graft] def oracleAt(n: Long): Map[String, String] =
+  private[graft] override def oracleAt(n: Long): Map[String, String] =
     oracleOver(SimilarityOps.nearDupPairsCteSqlFor(n))
 
   val oracle: Map[String, String] =

@@ -5,7 +5,7 @@ import scala.collection.immutable.ListMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{QuerySuite, Tables}
 
 /** Lake-maintenance operators — the mutation side of a 100 TB table: MERGE
   * (upsert/delete apply), CDC compaction (latest row per key), and
@@ -28,9 +28,7 @@ import graft.Tables
   *    is the "dedup tomorrow's crawl against yesterday's corpus" pattern:
   *    cost scales with the NEW batch, not with history re-processing.
   */
-object LakeOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object LakeOps extends QuerySuite {
   val queries: Map[String, Q] = ListMap[String, Q](
     // MERGE INTO semantics over the orders snapshot: a derived changeset
     // (keys %10==0 update status+price, %10==3 delete, %10==7 insert under

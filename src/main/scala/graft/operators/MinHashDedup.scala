@@ -5,7 +5,7 @@ import scala.collection.immutable.ListMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{QuerySuite, Tables}
 
 /** Near-duplicate detection at scale: MinHash+LSH and SimHash over
   * `documents` (builder brief / SURVEY §2.3).
@@ -42,9 +42,7 @@ import graft.Tables
   * with its signature table. Without this the plan recomputes shingling
   * once per branch (4× for dd02: two band sides + two shingle join-backs).
   */
-object MinHashDedup {
-  type Q = (SparkSession, String) => DataFrame
-
+object MinHashDedup extends QuerySuite {
   private val K = 32       // minhash functions
   private val BANDS = 16   // bands of 2 rows each
 

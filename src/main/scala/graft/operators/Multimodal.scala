@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{QuerySuite, Tables}
 
 /** Multimodal-column plumbing (builder brief / SURVEY §2.3): treat media as
   * opaque `binary` columns with typed metadata, and run decode /
@@ -23,9 +23,7 @@ import graft.Tables
   * decode is a narrow mapPartitions (no shuffle); metadata extraction
   * (mm01) is pure codegen'd expressions.
   */
-object Multimodal {
-  type Q = (SparkSession, String) => DataFrame
-
+object Multimodal extends QuerySuite {
   /** Feature schema produced by the decode step. */
   val featureSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType),

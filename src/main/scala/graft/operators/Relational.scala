@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
 
-import graft.Tables
+import graft.{QuerySuite, Tables}
 
 /** Relational/analyst query surface over the TPC-H-ish testdata
   * (SURVEY.md §2.2, §7.1 M3). The reference materializes typed tables for
@@ -30,9 +30,7 @@ import graft.Tables
   * converts to broadcast at runtime when small enough. All aggregations are
   * partial (map-side combine) by construction; no collect()s anywhere.
   */
-object Relational {
-  type Q = (SparkSession, String) => DataFrame
-
+object Relational extends QuerySuite {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables(s, dir, name)
 

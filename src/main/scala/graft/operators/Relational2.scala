@@ -6,16 +6,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.Tables
+import graft.{QuerySuite, Tables}
 
 /** Second tranche of the relational surface (SURVEY §2.2): the SQL entry
   * point, distinct/statistical aggregates, exact percentiles, array
   * explode/unnest, pivot, gap-based sessionization, and null-handling
   * scalars. Same determinism policy as [[Relational]].
   */
-object Relational2 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Relational2 extends QuerySuite {
   val queries: Map[String, Q] = ListMap(
     // SQL API entry point: same engine, text-SQL front door.
     "q24_sql_entrypoint" -> ((s, dir) => {

@@ -5,16 +5,14 @@ import scala.collection.immutable.ListMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{QuerySuite, Tables}
 
 /** Third tranche (SURVEY §2.2 tail): map functions, multiset set-ops
   * (UNION ALL / EXCEPT ALL), and array sorting/positioning. The oracle only
   * has to produce the same *result* — DuckDB computes the scalars directly
   * where its map surface differs.
   */
-object Relational3 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Relational3 extends QuerySuite {
   val queries: Map[String, Q] = ListMap(
     // Map construction, lookup, merge, cardinality.
     "q31_map_funcs" -> ((s, dir) => {

@@ -7,14 +7,12 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
-import graft.Tables
+import graft.{QuerySuite, Tables}
 
 /** Fourth tranche: full outer join, edit distance, structured JSON parsing,
   * and the rank family of window functions.
   */
-object Relational4 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Relational4 extends QuerySuite {
   val queries: Map[String, Q] = ListMap(
     // Full outer join with per-side counts and null-key handling.
     "q39_full_outer" -> ((s, dir) => {

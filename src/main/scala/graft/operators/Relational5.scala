@@ -5,7 +5,7 @@ import scala.collection.immutable.ListMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{QuerySuite, Tables}
 
 /** Fifth tranche: array higher-order functions, bitmap-style bit
   * aggregates, exact median + deterministic mode, and Spark 4 VARIANT
@@ -15,9 +15,7 @@ import graft.Tables
   * cannot move under partial-aggregation reordering (the house
   * determinism policy, DESIGN.md).
   */
-object Relational5 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Relational5 extends QuerySuite {
   val queries: Map[String, Q] = ListMap(
     // Array higher-order functions (transform / filter / aggregate /
     // exists / forall) over per-order quantity lists. Scale shape: ONE

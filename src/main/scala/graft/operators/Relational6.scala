@@ -5,16 +5,14 @@ import scala.collection.immutable.ListMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{QuerySuite, Tables}
 
 /** Sixth tranche: customer-value scoring (RFM segmentation with
   * broadcast rank-based boundaries) and integer-exact statistical
   * outlier flags — both shaped so no global window ever sorts the full
   * fact table on one task.
   */
-object Relational6 {
-  type Q = (SparkSession, String) => DataFrame
-
+object Relational6 extends QuerySuite {
   /** Rank-based tertile boundaries of `valueCol` over a pre-aggregated
     * (value, freq) table — the q59 equi-depth pattern via the shared
     * [[DistributedCumsum]] prefix sum: the cumsum runs per value-range

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.Tables
+import graft.{QuerySuite, Tables}
 import graft.functions.GraftFunctions
 
 /** Similarity search over the `embeddings` table (builder brief / SURVEY §2.3).
@@ -27,9 +27,7 @@ import graft.functions.GraftFunctions
   *    plane count grows with log₂(corpus / target-bucket-size) — see
   *    [[planesFor]] — pinning at 4 across every oracle-scale corpus.
   */
-object SimilarityOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object SimilarityOps extends QuerySuite {
   /** Embeddings with L2 norm. The dot-product kernel is the native
     * codegen'd [[graft.functions.DotProduct]] expression — double-precision
     * sequential accumulation directly over the float arrays, bit-identical
@@ -796,7 +794,7 @@ object SimilarityOps {
     * vectors — SimilarityOps' own; DedupClusters and GraphOps expose their
     * spliced-CTE twins the same way, merged in [[SparkEntry.oracleSqlFor]].
     */
-  private[graft] def oracleAt(n: Long): Map[String, String] = Map(
+  private[graft] override def oracleAt(n: Long): Map[String, String] = Map(
     "ss03_ann_lsh" -> ss03Sql(n),
     "ss08_filtered_ann" -> ss08Sql(n),
     "ss05_ann_rerank" -> ss05Sql(n),

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{QuerySuite, Tables}
 
 /** Temporal join operators Spark lacks as built-ins: AS-OF join and
   * range/interval join (builder brief: custom operators, preference (a) —
@@ -15,9 +15,7 @@ import graft.Tables
   * Both are oracle-gated: DuckDB has a native `ASOF LEFT JOIN`, and the
   * range join is a plain inequality join there.
   */
-object TemporalJoins {
-  type Q = (SparkSession, String) => DataFrame
-
+object TemporalJoins extends QuerySuite {
   /** AS-OF join: attach to each left row the LATEST right row with
     * `right.ts <= left.ts` within the same key.
     *

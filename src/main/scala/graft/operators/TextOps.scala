@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{QuerySuite, Tables}
 
 /** Text-analysis + document-dedup operators over the `documents` table — the
   * training-data-pipeline surface (builder brief; SURVEY.md §2.3 / §7.1 M4).
@@ -21,9 +21,7 @@ import graft.Tables
   * candidate pairs (id delta ≤ 20) — the unbounded version is MinHash-LSH in
   * [[MinHashDedup]], whose band join is the scalable path.
   */
-object TextOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object TextOps extends QuerySuite {
   private def docs(s: SparkSession, dir: String): DataFrame =
     Tables(s, dir, "documents")
 

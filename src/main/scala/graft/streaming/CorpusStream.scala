@@ -5,7 +5,7 @@ import scala.collection.immutable.ListMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{QuerySuite, Tables}
 import graft.operators.TextOps
 
 /** Streaming twin of the tx07 corpus-cleaning pipeline: the SAME row-local
@@ -24,9 +24,7 @@ import graft.operators.TextOps
   * event-time column the same plan takes `dropDuplicatesWithinWatermark`
   * to bound state by time instead of corpus size.
   */
-object CorpusStream {
-  type Q = (SparkSession, String) => DataFrame
-
+object CorpusStream extends QuerySuite {
   val queries: Map[String, Q] = ListMap(
     // Rides EventsStream's shared drive-and-stop harness (cloned session,
     // unique sink, stop-in-finally) with the DOCUMENTS source swapped in —

@@ -5,7 +5,7 @@ import scala.collection.immutable.ListMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{QuerySuite, Tables}
 import graft.operators.LakeOps
 
 /** Structured Streaming over the `events` table (SURVEY §2.2 streaming row,
@@ -23,9 +23,7 @@ import graft.operators.LakeOps
   * the window agg is a standard partial-agg shuffle on (window, event_type).
   * Append-mode + late-data-drop semantics are exercised in the test suite.
   */
-object EventsStream {
-  type Q = (SparkSession, String) => DataFrame
-
+object EventsStream extends QuerySuite {
   private val nameCounter = new java.util.concurrent.atomic.AtomicInteger(0)
 
   def hourlyAgg(df: DataFrame): DataFrame =

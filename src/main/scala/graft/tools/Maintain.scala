@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import graft.Bench
 import graft.operators.TxLog
 import graft.pipeline.SnapshotLayout
 
@@ -43,26 +44,15 @@ import graft.pipeline.SnapshotLayout
   */
 object Maintain {
 
-  /** JSON string-escape for operator-supplied paths: a quote or backslash
-    * must not break the one-line JSON a cron log parser reads (r13 review;
-    * now shared by Report and the mixed-marker skip line — the r14 review
-    * caught the skip line re-introducing the raw interpolation).
-    */
-  private def jsonEscape(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-
   final case class Report(
       table: String,
       head: Long,
       cleanedCommits: Seq[String],
       vacuumedDirs: Seq[String]) {
     override def toString: String = {
-      val esc = jsonEscape(table)
-      s"""{"table":"$esc","head":$head,""" +
+      // Bench.jstr: an operator-supplied path's quote or backslash must
+      // not break the one-line JSON a cron log parser reads
+      s"""{"table":${Bench.jstr(table)},"head":$head,""" +
         s""""cleaned_commits":${cleanedCommits.size},""" +
         s""""vacuumed_dirs":${vacuumedDirs.size}}"""
     }
@@ -164,9 +154,9 @@ object Maintain {
       val (roots, mixed) = classifyLake(Paths.get(out))
       mixed.foreach(m => System.err.println(
         s"""{"maintain":"SKIPPED mixed-marker table (TxLog + rename-mode """ +
-          s"""artifacts)","table":"${jsonEscape(m)}"}"""))
+          s"""artifacts)","table":${Bench.jstr(m)}}"""))
       if (roots.isEmpty && mixed.isEmpty)
-        println(s"""{"maintain":"no TxLog tables under ${jsonEscape(out)}"}""")
+        println(s"""{"maintain":${Bench.jstr(s"no TxLog tables under $out")}}""")
       roots.foreach(t =>
         println(maintainTable(t, keep.toInt, retain.toLong)))
       if (mixed.nonEmpty) 3 else 0

@@ -10,7 +10,7 @@ class BenchSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   test("a throwing query is reported as an error, not a timing") {
-    val queries: Map[String, Bench.Q] = Map(
+    val queries: Map[String, QuerySuite#Q] = Map(
       "good" -> ((s, _) => s.range(10).toDF("x")),
       "broken_plan" -> ((s, _) =>
         s.range(1).selectExpr("assert_true(id > 0, 'boom')")),
@@ -24,7 +24,7 @@ class BenchSpec extends AnyFunSuite {
 
   test("scratch-build seconds are attributed to the building query") {
     operators.MinHashDedup.drainBuildSeconds() // isolate from other specs
-    val queries: Map[String, Bench.Q] = Map(
+    val queries: Map[String, QuerySuite#Q] = Map(
       // q59 is a scratch builder (materializes its counts table); q01 is
       // scratch-free — builds must land on the former only
       "q59_equidepth_hist" -> SparkEntry.queries("q59_equidepth_hist"),

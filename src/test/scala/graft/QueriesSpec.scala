@@ -33,6 +33,33 @@ class QueriesSpec extends AnyFunSuite {
     assert(missing.isEmpty, s"oracle without query: $missing")
   }
 
+  test("the registry holds exactly 170 distinct query names") {
+    val declared = SparkEntry.suites.map(_.queries.size).sum
+    assert(declared == 170)
+    assert(SparkEntry.queries.size == 170)
+  }
+
+  private def stub(names: String*)(oracleKeys: String*): QuerySuite =
+    new QuerySuite {
+      val queries: Map[String, Q] =
+        names.map(n => n -> ((_: org.apache.spark.sql.SparkSession,
+          _: String) => ???)).toMap
+      val oracle: Map[String, String] = oracleKeys.map(_ -> "SELECT 1").toMap
+    }
+
+  test("two suites declaring one query name fail the registry") {
+    val e = intercept[IllegalArgumentException](
+      QuerySuite.merge(Seq(stub("a", "x")(), stub("x", "b")())))
+    assert(e.getMessage.contains("x"))
+  }
+
+  test("an oracle key naming no query of its own suite fails the registry") {
+    intercept[IllegalArgumentException](
+      QuerySuite.merge(Seq(stub("a")(), stub("b")("a"))))
+    assert(QuerySuite.merge(Seq(stub("a")("a"), stub("b")())).oracle.keySet
+      == Set("a"))
+  }
+
   test("ss02 top-k: ranks in 1..5, cosine within [-1,1], descending per query") {
     val rows = SparkEntry.queries("ss02_topk_bruteforce")(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))

@@ -30,7 +30,6 @@ declare -A FAM=(
   [pipeline]="graft.pipeline.*"
   [operators]="graft.operators.*"
   [functions]="graft.functions.*"
-  [sources]="graft.sources.* *SourceFormatsSpec"
   [plans]="graft.plans.*"
 )
 NFAM=0
