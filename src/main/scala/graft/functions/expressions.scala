@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, CollationFactory}
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -21,6 +21,18 @@ private[functions] object ArgCheck {
     case _: StringType => TypeCheckResult.TypeCheckSuccess
     case other => TypeCheckResult.TypeCheckFailure(
       s"$name requires a STRING argument, got ${other.sql}")
+  }
+  /** For kernels that dedup or compare by bytes: a collation whose
+    * equality is not binary (e.g. `UTF8_LCASE`) would make the SQL form
+    * they mirror compare differently, so it fails analysis instead.
+    */
+  def binaryEquality(st: StringType): Boolean =
+    CollationFactory.fetchCollation(st.collationId).supportsBinaryEquality
+  def binaryString(name: String, dt: DataType): TypeCheckResult = dt match {
+    case st: StringType if binaryEquality(st) =>
+      TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"$name requires a binary-collation STRING argument, got ${other.sql}")
   }
   def floatArray(name: String, dt: DataType): TypeCheckResult = dt match {
     case ArrayType(FloatType | DoubleType, _) =>
@@ -391,9 +403,11 @@ case class WordBigrams(child: Expression) extends UnaryExpression {
   }
   override def checkInputDataTypes(): TypeCheckResult =
     child.dataType match {
-      case ArrayType(_: StringType, _) => TypeCheckResult.TypeCheckSuccess
+      case ArrayType(st: StringType, _) if ArgCheck.binaryEquality(st) =>
+        TypeCheckResult.TypeCheckSuccess
       case other => TypeCheckResult.TypeCheckFailure(
-        s"word_bigrams requires an ARRAY<STRING> argument, got ${other.sql}")
+        "word_bigrams requires an ARRAY<STRING> argument of a binary " +
+          s"collation, got ${other.sql}")
     }
   override def nullSafeEval(v: Any): Any =
     BigramKernel.pairs(v.asInstanceOf[ArrayData])
@@ -442,7 +456,7 @@ case class DeletionVariants(child: Expression) extends UnaryExpression {
   override def dataType: DataType =
     ArrayType(child.dataType, containsNull = false)
   override def checkInputDataTypes(): TypeCheckResult =
-    ArgCheck.string("deletion_variants", child.dataType)
+    ArgCheck.binaryString("deletion_variants", child.dataType)
   override def nullSafeEval(v: Any): Any =
     DeletionKernel.variants(v.asInstanceOf[UTF8String])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =

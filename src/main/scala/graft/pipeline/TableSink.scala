@@ -247,7 +247,7 @@ class ParquetSink(outDir: String, versioned: Boolean = false)
           fs.rename(backup, finalPath)
       } catch { case _: java.io.FileNotFoundException => () }
     }
-    spark.read.parquet(finalPath.toString)
+    SnapshotLayout.readParquet(spark, finalPath.toString)
   }
 }
 

@@ -21,12 +21,7 @@ object QueryProbe {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
     // experiment aid: SPARK_GRAFT_EXTRA_CONFS="k=v;k=v" for A/B conf probes
-    sys.env.get("SPARK_GRAFT_EXTRA_CONFS").foreach(
-      _.split(";").filter(_.contains("=")).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        builder.config(k, v)
-      })
-    val spark = builder.getOrCreate()
+    val spark = ExtraConfs(builder).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val fn = graft.SparkEntry.queries(name)
     fn(spark, sfDir).write.format("noop").mode("overwrite").save()

@@ -46,12 +46,7 @@ object StreamProbe {
     // SparkConf, so the per-query CLONED sessions inherit them — the only
     // way to A/B a conf (e.g. the state-store provider) that must reach
     // the stream's own session.
-    sys.env.get("SPARK_GRAFT_EXTRA_CONFS").foreach(
-      _.split(";").filter(_.contains("=")).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        builder.config(k, v)
-      })
-    val spark = builder.getOrCreate()
+    val spark = ExtraConfs(builder).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val fn = graft.SparkEntry.queries(name)
     // warmup (JIT + page cache), mirroring Bench's steady-state methodology

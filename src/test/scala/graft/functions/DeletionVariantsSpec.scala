@@ -54,4 +54,21 @@ class DeletionVariantsSpec extends AnyFunSuite {
       .select(GraftFunctions.deletion_variants(col("nm")).as("k")).collect()(0)
     assert(n.isNullAt(0))
   }
+
+  test("a non-binary collation (UTF8_LCASE) fails analysis, for " +
+    "deletion_variants and word_bigrams alike") {
+    import spark.implicits._
+    val df = Seq("Ab").toDF("nm")
+    val lcase = expr("nm COLLATE UTF8_LCASE")
+    val e1 = intercept[org.apache.spark.sql.AnalysisException](
+      df.select(GraftFunctions.deletion_variants(lcase)))
+    assert(e1.getMessage.contains("binary-collation"), e1.getMessage)
+    val e2 = intercept[org.apache.spark.sql.AnalysisException](
+      df.select(GraftFunctions.word_bigrams(array(lcase, lcase))))
+    assert(e2.getMessage.contains("binary"), e2.getMessage)
+    // the default collation, spelled out, still passes
+    val bin = expr("nm COLLATE UTF8_BINARY")
+    assert(df.select(GraftFunctions.deletion_variants(bin)).head()
+      .getSeq[String](0) == Seq("Ab", "b", "A"))
+  }
 }

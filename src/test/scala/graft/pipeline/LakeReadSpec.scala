@@ -1,0 +1,148 @@
+package graft.pipeline
+
+import java.io.FileOutputStream
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Path => JPath}
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.zip.{ZipEntry, ZipOutputStream}
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{AnalysisException, DataFrame}
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.TestSpark
+import graft.operators.TxLog
+
+/** Lake reads ([[ParquetSink.readBack]], [[TxLog.readVersion]]) take their
+  * schema from one parquet footer read on the driver
+  * ([[SnapshotLayout.readParquet]]). Each case pins the frame's schema and
+  * rows to `spark.read.parquet` on the same dir, and that building the
+  * frame launches no Spark job.
+  */
+class LakeReadSpec extends AnyFunSuite {
+  private lazy val spark = TestSpark.spark
+  import spark.implicits._
+
+  private def assertSameAsPlainRead(got: DataFrame, dir: String): Unit = {
+    val plain = spark.read.parquet(dir)
+    assert(got.schema === plain.schema)
+    assert(got.collect().map(_.toString).sorted ===
+      plain.collect().map(_.toString).sorted)
+  }
+
+  /** (result, jobs started while `body` ran). Jobs are told apart by a job
+    * group on this thread; a marker job in a second group flushes the
+    * listener bus, which delivers events in order.
+    */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"lake-read-${java.util.UUID.randomUUID}"
+    val seen = new ConcurrentLinkedQueue[Int]()
+    val flushed = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => seen.add(e.jobId)
+          case Some(g) if g == s"$group-flush" => flushed.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "lake read")
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-flush", "listener flush")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(flushed.await(60, TimeUnit.SECONDS), "listener bus never flushed")
+      (out, seen.size)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def mkZip(dir: JPath, zipName: String, name: String,
+      bytes: Array[Byte]): Unit = {
+    val z = new ZipOutputStream(
+      new FileOutputStream(dir.resolve(zipName).toFile))
+    try { z.putNextEntry(new ZipEntry(name)); z.write(bytes); z.closeEntry() }
+    finally z.close()
+  }
+
+  test("a pipeline-written RFB table reads back as spark.read.parquet " +
+    "does, with no Spark job") {
+    val src = Files.createTempDirectory("rfb-src")
+    val work = Files.createTempDirectory("rfb-work")
+    val out = Files.createTempDirectory("rfb-out").toString
+    mkZip(src, "Cnaes.zip", "K1.D509.CNAECSV",
+      "0111301;Cultivo de café\n0111302;Ação agrícola\n"
+        .getBytes(StandardCharsets.ISO_8859_1))
+    Files.write(src.resolve("listing.html"),
+      """<html><a href="Cnaes.zip">Cnaes.zip</a></html>"""
+        .getBytes(StandardCharsets.UTF_8))
+    val done = new RfbPipeline(spark, work, out, "202601",
+      new LocalFetcher(src), backoffMs = 0L).run("file://rfb/")
+    assert(done.map(_.statusCarga) === Seq(Status.Sucesso))
+    val (df, jobs) = jobsDuring(
+      new ParquetSink(out).readBack(spark, "rfb_cnaes", "202601"))
+    assert(jobs === 0)
+    assertSameAsPlainRead(df, s"$out/rfb_cnaes/ref_month=202601")
+    assert(df.count() === 2L)
+  }
+
+  test("an ad-hoc two-column frame, and its schema-inference job is gone") {
+    val out = Files.createTempDirectory("lake-read").toString
+    val sink = new ParquetSink(out)
+    sink.overwrite(Seq((BigDecimal("12.50"), Seq("a", null)),
+      (null, Seq.empty[String])).toDF("amount", "tags"), "t", "202401")
+    val dir = s"$out/t/ref_month=202401"
+    val (df, jobs) = jobsDuring(sink.readBack(spark, "t", "202401"))
+    assert(jobs === 0)
+    assertSameAsPlainRead(df, dir)
+    // the plain read this replaces launches the footer job
+    assert(jobsDuring(spark.read.parquet(dir))._2 === 1)
+  }
+
+  test("an empty-frame overwrite reads back its schema and no rows") {
+    val out = Files.createTempDirectory("lake-read").toString
+    val sink = new ParquetSink(out)
+    sink.overwrite(Seq.empty[(Long, String)].toDF("k", "v"), "t", "202401")
+    val (df, jobs) = jobsDuring(sink.readBack(spark, "t", "202401"))
+    assert(jobs === 0)
+    assertSameAsPlainRead(df, s"$out/t/ref_month=202401")
+    assert(df.columns.toSeq === Seq("k", "v"))
+  }
+
+  test("a versioned TxLog version, through readVersion and the versioned " +
+    "sink") {
+    val root = Files.createTempDirectory("lake-read").toString
+    val v1 = TxLog.write(spark, root, Seq((1, "a"), (2, "b")).toDF("k", "v"), 0L)
+    val v2 = TxLog.write(spark, root, Seq((3, 4.5)).toDF("k", "x"), v1)
+    val dirs = new java.io.File(root).list().filter(_.matches("v\\d+-.*"))
+    def dataDir(v: Long) = s"$root/${dirs.find(_.startsWith(s"v$v-")).get}"
+    Seq(v1, v2).foreach { v =>
+      val (df, jobs) = jobsDuring(TxLog.readVersion(spark, root, v))
+      assert(jobs === 0, s"version $v")
+      assertSameAsPlainRead(df, dataDir(v))
+    }
+    val out = Files.createTempDirectory("lake-read").toString
+    val sink = new ParquetSink(out, versioned = true)
+    sink.overwrite(Seq(("x", 1L)).toDF("c0", "c1"), "t", "202401")
+    val (df, jobs) = jobsDuring(sink.readBack(spark, "t", "202401"))
+    assert(jobs === 0)
+    assert(df.collect().map(_.toString).toSeq === Seq("[x,1]"))
+  }
+
+  test("a dir whose data files are gone raises the plain read's error") {
+    val out = Files.createTempDirectory("lake-read").toString
+    val sink = new ParquetSink(out)
+    sink.overwrite(Seq(("x", "y")).toDF("c0", "c1"), "t", "202401")
+    val dir = new Path(s"$out/t/ref_month=202401")
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.listStatus(dir).map(_.getPath)
+      .filter(_.getName.startsWith("part-")).foreach(fs.delete(_, false))
+    val plain = intercept[AnalysisException](spark.read.parquet(dir.toString))
+    val got = intercept[AnalysisException](sink.readBack(spark, "t", "202401"))
+    assert(got.getClass === plain.getClass)
+    assert(got.getCondition === plain.getCondition)
+    assert(got.getCondition === "UNABLE_TO_INFER_SCHEMA")
+  }
+}

@@ -31,6 +31,7 @@ declare -A FAM=(
   [operators]="graft.operators.*"
   [functions]="graft.functions.*"
   [plans]="graft.plans.*"
+  [tools]="graft.tools.*"
 )
 NFAM=0
 for dir in "${!FAM[@]}"; do
