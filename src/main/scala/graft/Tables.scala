@@ -7,8 +7,10 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 /** Loaders for the harness testdata tables (TESTDATA.md).
   *
   * All tables are single parquet files under `sfDir`. At 100 TB these would be
-  * partitioned directories; nothing here assumes a single file — `spark.read
-  * .parquet(path)` takes files or directories alike, and every downstream
+  * partitioned directories; nothing here assumes a single file — every read
+  * goes through [[ParquetRead]], which takes a file or a dir of part files
+  * alike and takes the schema from one footer read on the driver, so
+  * building a table's frame launches no Spark job. Every downstream
   * operator relies on Catalyst pushdown (filters/column pruning reach the
   * scan) rather than on data being small.
   */
@@ -20,7 +22,7 @@ object Tables {
 
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
     if (name == "events") events(spark, sfDir)
-    else spark.read.parquet(s"$sfDir/$name.parquet")
+    else ParquetRead(spark, s"$sfDir/$name.parquet")
 
   /** `events.parquet` carries a nanosecond-precision timestamp (INT64
     * TIMESTAMP(NANOS)), which Parquet readers expose inconsistently. If Spark
@@ -33,7 +35,8 @@ object Tables {
 
   /** Raw events read; ts may surface as LONG nanos (legacy mode). The
     * legacy conf is SCOPED to this read — the schema is resolved eagerly
-    * inside `spark.read.parquet`, so restoring the prior value afterwards
+    * inside [[ParquetRead]] (whose footer conversion reads the flag exactly
+    * as Spark's own inference does), so restoring the prior value afterwards
     * keeps nanos-as-long semantics from leaking to every later parquet
     * read in the caller's session (r10 review; the CorpusStream
     * convention).
@@ -43,7 +46,7 @@ object Tables {
     val prev = try Some(spark.conf.get(key)) catch { case _: Throwable => None }
     try {
       try spark.conf.set(key, "true") catch { case _: Throwable => () }
-      spark.read.parquet(s"$sfDir/events.parquet")
+      ParquetRead(spark, s"$sfDir/events.parquet")
     } finally {
       try prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
       catch { case _: Throwable => () }

@@ -5,7 +5,7 @@ import scala.collection.immutable.ListMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{QuerySuite, Tables}
+import graft.{ParquetRead, QuerySuite, Tables}
 
 /** Near-duplicate detection at scale: MinHash+LSH and SimHash over
   * `documents` (builder brief / SURVEY §2.3).
@@ -118,7 +118,7 @@ object MinHashDedup extends QuerySuite {
           scratchCache.remove(key, task)
           throw e.getCause
       }
-    s.read.parquet(path)
+    ParquetRead(s, path)
   }
 
   // Build-cost meter: seconds spent WRITING scratch tables since the last
@@ -176,7 +176,7 @@ object MinHashDedup extends QuerySuite {
       .flatMap(t => try Some(t.get()) catch {
         case _: Exception => scratchCache.remove(key, t); None
       })
-      .map(s.read.parquet(_))
+      .map(ParquetRead(s, _))
   }
 
   /** Content fingerprint of `df`'s source files: md5 over each file's

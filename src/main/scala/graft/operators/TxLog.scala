@@ -381,7 +381,7 @@ object TxLog {
   def readVersion(spark: SparkSession, table: String, version: Long)
       : DataFrame = {
     val rec = commitRecord(table, version)
-    graft.pipeline.SnapshotLayout.readParquet(spark, s"$table/${rec.dataDir}")
+    graft.ParquetRead(spark, s"$table/${rec.dataDir}")
   }
 
   /** Delete data dirs no commit references (orphans from crashed or losing

@@ -21,7 +21,7 @@ object SnapshotDiff {
     * Snapshots are read THROUGH the sink (`sink0`, default a rename-mode
     * [[ParquetSink]] on `outDir`), never via a raw directory read: a
     * versioned (TxLog) table's root holds every published version's
-    * `v{N}-{uuid}` data dir, so `spark.read.parquet(root)` unions ALL
+    * `v{N}-{uuid}` data dir, so a parquet read of `root` unions ALL
     * versions into one frame — every key doubled, the diff silently wrong
     * — and a raw read also skips readBack's mid-swap crash recovery in
     * rename mode (r15 review). Callers of versioned tables pass their

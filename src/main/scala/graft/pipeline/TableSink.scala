@@ -247,7 +247,7 @@ class ParquetSink(outDir: String, versioned: Boolean = false)
           fs.rename(backup, finalPath)
       } catch { case _: java.io.FileNotFoundException => () }
     }
-    SnapshotLayout.readParquet(spark, finalPath.toString)
+    graft.ParquetRead(spark, finalPath.toString)
   }
 }
 

@@ -49,7 +49,7 @@ object FileArrivalLoad {
     * `outDir` must be OWNED by this sink from its first write: the file
     * sink's `_spark_metadata` log is the source of truth for readers, so
     * parquet files written to the same directory by anything else are
-    * invisible to `spark.read.parquet(outDir)` once the log exists.
+    * invisible to a batch parquet read of `outDir` once the log exists.
     */
   def start(
       spark: SparkSession,

@@ -86,7 +86,7 @@ object ScaleUp {
     // output dir that read like a corpus with dims but no facts (r13
     // review wave)
     require(factor >= 1, s"blow-up factor must be >= 1, got $factor")
-    def read(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
+    def read(t: String): DataFrame = graft.ParquetRead(spark, s"$src/$t.parquet")
     def save(t: String)(df: DataFrame): Unit =
       df.write.mode("overwrite").parquet(s"$out/$t.parquet")
 

@@ -18,6 +18,12 @@ object TestSpark {
     .getOrCreate()
 
   spark.sparkContext.setLogLevel("WARN")
+  // unpersisting a localCheckpoint'ed RDD logs "lineage has been truncated"
+  // at WARN, a known consequence of the Checkpoints default; repeated per
+  // iterative round it pushed failing tests' summaries out of the log tail
+  org.apache.logging.log4j.core.config.Configurator.setLevel(
+    "org.apache.spark.rdd.MapPartitionsRDD",
+    org.apache.logging.log4j.Level.ERROR)
 
   val sf0001 = "/root/testdata/sf0.001"
 }

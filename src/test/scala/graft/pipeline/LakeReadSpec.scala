@@ -3,61 +3,25 @@ package graft.pipeline
 import java.io.FileOutputStream
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path => JPath}
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 import java.util.zip.{ZipEntry, ZipOutputStream}
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{AnalysisException, DataFrame}
+import org.apache.spark.sql.AnalysisException
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.ReadJobs.{assertSameAsPlainRead, jobsDuring}
 import graft.TestSpark
 import graft.operators.TxLog
 
 /** Lake reads ([[ParquetSink.readBack]], [[TxLog.readVersion]]) take their
   * schema from one parquet footer read on the driver
-  * ([[SnapshotLayout.readParquet]]). Each case pins the frame's schema and
+  * ([[graft.ParquetRead]]). Each case pins the frame's schema and
   * rows to `spark.read.parquet` on the same dir, and that building the
   * frame launches no Spark job.
   */
 class LakeReadSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def assertSameAsPlainRead(got: DataFrame, dir: String): Unit = {
-    val plain = spark.read.parquet(dir)
-    assert(got.schema === plain.schema)
-    assert(got.collect().map(_.toString).sorted ===
-      plain.collect().map(_.toString).sorted)
-  }
-
-  /** (result, jobs started while `body` ran). Jobs are told apart by a job
-    * group on this thread; a marker job in a second group flushes the
-    * listener bus, which delivers events in order.
-    */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"lake-read-${java.util.UUID.randomUUID}"
-    val seen = new ConcurrentLinkedQueue[Int]()
-    val flushed = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => seen.add(e.jobId)
-          case Some(g) if g == s"$group-flush" => flushed.countDown()
-          case _ => ()
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "lake read")
-      val out = try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$group-flush", "listener flush")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(flushed.await(60, TimeUnit.SECONDS), "listener bus never flushed")
-      (out, seen.size)
-    } finally sc.removeSparkListener(listener)
-  }
 
   private def mkZip(dir: JPath, zipName: String, name: String,
       bytes: Array[Byte]): Unit = {

@@ -39,6 +39,12 @@ for dir in "${!FAM[@]}"; do
     SPECS="$SPECS ${FAM[$dir]}"; NFAM=$((NFAM + 1))
   fi
 done
+# top-level graft/*.scala (Tables, Bench, QuerySuite, ...) has no package
+# dir of its own; its specs are the root-package loader and Bench specs
+if echo "$TOUCHED" | grep -qE '^src/main/scala/graft/[^/]+\.scala$'; then
+  SPECS="$SPECS graft.TablesNanosSpec graft.SourceFormatsSpec graft.BenchSpec graft.ParquetReadSpec"
+  NFAM=$((NFAM + 1))
+fi
 # streaming runs unconditionally as a slice but still counts toward width
 if echo "$TOUCHED" | grep -q "graft/streaming/"; then NFAM=$((NFAM + 1)); fi
 # Wide rounds escape slice selection's premise (that untouched families
