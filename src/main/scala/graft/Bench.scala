@@ -51,15 +51,15 @@ object Bench {
   def run(spark: SparkSession, sfDir: String,
       queries: Seq[(String, QuerySuite#Q)])
       : (Map[String, Double], Map[String, String], Map[String, Double]) = {
-    operators.MinHashDedup.drainBuildSeconds() // reset the meter
+    operators.Scratch.drainBuildSeconds() // reset the meter
     val results = queries.map { case (name, fn) =>
       scratchOwner.get(name).foreach(prefixes =>
-        operators.MinHashDedup.clearScratch(t => prefixes.exists(t.startsWith)))
+        operators.Scratch.clear(t => prefixes.exists(t.startsWith)))
       val t0 = System.nanoTime()
       val err =
         try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); None }
         catch { case t: Throwable => Some(t.toString) }
-      val buildS = operators.MinHashDedup.drainBuildSeconds().values.sum
+      val buildS = operators.Scratch.drainBuildSeconds().values.sum
       (name, (System.nanoTime() - t0) / 1e9, err, buildS)
     }
     (results.collect { case (k, v, None, _) => (k, v) }.toMap,
@@ -220,6 +220,10 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // expected: Checkpoints.release logs "lineage has been truncated" per round
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.rdd.MapPartitionsRDD",
+      org.apache.logging.log4j.Level.ERROR)
     // Steady-state measurement: one UNTIMED pass of the full query surface
     // first. A parquet count() warms nothing real (it answers from footer
     // metadata), so the old per-table touch left the first measured queries
@@ -236,7 +240,7 @@ object Bench {
       // would measure a small parquet re-read, not the operator. Clearing
       // here keeps intra-pass sharing (dd02+dd06 share one signature build
       // within the timed pass) while making each pass compute its own work.
-      operators.MinHashDedup.clearScratch()
+      operators.Scratch.clear()
     }
     // Probe-then-fire (r17 verdict #1): the spread retry below heals a
     // session where ONE pass drifted, but not one where every pass runs on
@@ -293,7 +297,7 @@ object Bench {
     // computes its own materializations.
     val passes = scala.collection.mutable.ArrayBuffer(
       run(spark, sfDir, selected))
-    operators.MinHashDedup.clearScratch()
+    operators.Scratch.clear()
     passes += run(spark, sfDir, selected.reverse)
     // Self-HEALING retry (r16 verdict #1): the r16 driver artifact proved
     // the drift detector works (control spread 782: trio pass-1 12.2 s vs
@@ -305,7 +309,7 @@ object Bench {
     // whether the published numbers are min-of-two-quiet or still
     // contaminated after the cap.
     if (shouldRetry(passes.map(p => controlSum(p._1)).toSeq)) {
-      operators.MinHashDedup.clearScratch()
+      operators.Scratch.clear()
       passes += run(spark, sfDir, selected)
     }
     val oks = passes.map(_._1).toSeq
@@ -441,7 +445,7 @@ object Bench {
       if (full.length < 1900) full
       else
         s"""{"metric":"total","value":${num(total)},"unit":"sec","queries":{},"errors":{"_overflow":${jstr(s"line ${full.length} chars; ${okClean.size} ok, ${errMap.size} err — see bench_detail.json")}},"sf":${jstr(sfName)}}"""
-    operators.MinHashDedup.clearScratch() // all consuming actions are done
+    operators.Scratch.clear() // all consuming actions are done
     spark.stop()
     // Emitted LAST — after spark.stop() — so no shutdown logging lands
     // between the line and sbt's "[success]" trailer inside the driver's

@@ -10,7 +10,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 
 /** The one parquet batch read in the engine: the testdata tables
-  * ([[Tables]]), scratch read-backs ([[graft.operators.MinHashDedup]]) and
+  * ([[Tables]]), scratch read-backs ([[graft.operators.Scratch]]) and
   * lake snapshots (`ParquetSink.readBack`, [[graft.operators.TxLog]]) all go
   * through it.
   */

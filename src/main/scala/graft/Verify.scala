@@ -32,6 +32,10 @@ object Verify {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // expected: Checkpoints.release logs "lineage has been truncated" per round
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.rdd.MapPartitionsRDD",
+      org.apache.logging.log4j.Level.ERROR)
     new java.io.File(outDir).mkdirs()
     selected(SparkEntry.queries).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
@@ -73,7 +77,7 @@ object Verify {
       .map { case (k, v) => s"${Bench.jstr(k)}: ${Bench.jstr(v)}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    operators.MinHashDedup.clearScratch() // all consuming actions are done
+    operators.Scratch.clear() // all consuming actions are done
     spark.stop()
   }
 }

@@ -19,11 +19,11 @@ import org.apache.spark.sql.DataFrame
   * Eager in both modes: one job materializes the round. Disk growth in
   * reliable mode is bounded by the CALLERS, not Spark (which never reclaims
   * reliable checkpoints before context stop): every iterative loop releases
-  * round N−1 through [[DedupClusters.unpersistCheckpoint]] — which deletes
-  * the superseded round's checkpoint FILES — as soon as round N is
-  * materialized, and releases the final round in a `finally` after the
-  * result lands in scratch parquet. At most two rounds' file sets exist at
-  * any instant; zero after the query returns.
+  * round N−1 through [[release]] — which deletes the superseded round's
+  * checkpoint FILES — as soon as round N is materialized, and releases the
+  * final round in a `finally` after the result lands in scratch parquet.
+  * At most two rounds' file sets exist at any instant; zero after the
+  * query returns.
   */
 private[graft] object Checkpoints {
   def truncate(df: DataFrame): DataFrame = {
@@ -55,4 +55,22 @@ private[graft] object Checkpoints {
       case _ => df.localCheckpoint()
     }
   }
+
+  /** Releases a superseded round — BOTH backing stores: the executor
+    * block storage behind the LogicalRDD leaf (otherwise every round stays
+    * in executor memory until GC) and, in reliable mode, the round's
+    * checkpoint files, which Spark never reclaims before context stop.
+    * Safe once the next round is materialized: its recovery path reads its
+    * own files, never the previous round's (the GraphX
+    * PeriodicCheckpointer discipline). The delete is best-effort, so a
+    * failed reclaim never skips the unpersist or aborts the round loop.
+    */
+  def release(df: DataFrame): Unit =
+    df.queryExecution.analyzed.foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        r.rdd.getCheckpointFile.foreach(Scratch.deleteQuietly(_,
+          df.sparkSession.sparkContext.hadoopConfiguration))
+        r.rdd.unpersist(blocking = false)
+      case _ => ()
+    }
 }

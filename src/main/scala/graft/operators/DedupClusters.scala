@@ -29,42 +29,6 @@ import graft.{QuerySuite, Tables}
   * `spark.graft.checkpoint.dir` is set (the 1000-executor mode).
   */
 object DedupClusters extends QuerySuite {
-  /** Releases a superseded checkpoint round — BOTH backing stores:
-    *  - `localCheckpoint` mode: drops the executor block storage behind the
-    *    LogicalRDD leaf (without this every round stays in executor memory
-    *    until GC — the session-lifetime persist leak the round-1 verdict
-    *    flagged for signatures);
-    *  - reliable mode: also DELETES the round's checkpoint files from the
-    *    shared dir. Spark never reclaims reliable checkpoints before
-    *    context stop on its own, so an iterative job accumulated
-    *    O(rounds × frame) disk (the r10 verdict's remaining gap #3). Safe
-    *    because callers release round N−1 only after round N's checkpoint
-    *    is fully materialized: N's recovery path reads N's own files, never
-    *    N−1's (the GraphX PeriodicCheckpointer discipline). At most two
-    *    rounds' file sets exist at any instant; the `finally` release of
-    *    the last round brings a completed query to zero.
-    */
-  private[operators] def unpersistCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case r: org.apache.spark.sql.execution.LogicalRDD =>
-        r.rdd.getCheckpointFile.foreach { p =>
-          // best-effort reclaim, NonFatal not just IOException: a
-          // RuntimeException from Path construction/getFileSystem
-          // (malformed URI, missing scheme FS) must not abort the caller's
-          // round loop and skip the block-storage unpersist below — a
-          // cleanup helper never gets to kill the query (r11 ADVICE;
-          // matches MinHashDedup.deleteQuietly's discipline)
-          try {
-            val path = new org.apache.hadoop.fs.Path(p)
-            path.getFileSystem(
-              df.sparkSession.sparkContext.hadoopConfiguration)
-              .delete(path, true)
-          } catch { case scala.util.control.NonFatal(_) => () }
-        }
-        r.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
   /** Fast-path gates (r13 verdict order-book #1). The star-contraction
     * kernel below converges in O(log² n) rounds on ANY topology — the
     * 30×-proven scale property — but on the shallow near-clique graphs
@@ -161,7 +125,7 @@ object DedupClusters extends QuerySuite {
     * `nodes` (id). Returns (id, cluster_id = component min id).
     *
     * `scratch` = (tag, cacheKey): the FINAL labels land in a scratch
-    * parquet table (the lake pattern — [[MinHashDedup.materialized]]), so
+    * parquet table (the lake pattern — [[Scratch.materialized]]), so
     * every intermediate round's checkpoint storage is released eagerly
     * before return and the query leaves ZERO persisted RDDs behind. Stable
     * keys (dd06/dd08 pass the input dir) let repeat invocations reuse the
@@ -182,7 +146,7 @@ object DedupClusters extends QuerySuite {
     // alone, and every propagation round below is an EAGER job — without
     // this, dd06/tx16/dd13 each re-ran the whole loop and the cache only
     // saved the final write (r10 review)
-    val cached = MinHashDedup.cachedScratch(nodes.sparkSession,
+    val cached = Scratch.peek(nodes.sparkSession,
       scratch._1, scratch._2, Seq(nodes, edges))
     if (cached.isDefined) return cached.get
     // LARGE-STAR / SMALL-STAR contraction (Kiveris et al., "Connected
@@ -224,7 +188,7 @@ object DedupClusters extends QuerySuite {
     def freeSuperseded(): Unit = {
       // keep the newest two frames (current star + its input may still be
       // referenced by the next phase's lazy plan until materialized)
-      while (cps.length > 2) { unpersistCheckpoint(cps.remove(0)) }
+      while (cps.length > 2) { Checkpoints.release(cps.remove(0)) }
     }
     def signature(e: DataFrame): (Long, BigDecimal) = {
       val r = e.agg(count(lit(1)),
@@ -288,13 +252,13 @@ object DedupClusters extends QuerySuite {
       if (violations > 0) throw new IllegalStateException(
         s"connectedComponents certificate failed: $violations original " +
           "edges connect different labels after convergence")
-      // fingerprint from nodes+edges: the labels frame itself ends at a
+      // keyed on nodes+edges: the labels frame itself ends at a
       // checkpoint (no input files), so without them a rewritten source
       // would serve stale cluster ids from the scratch cache
-      MinHashDedup.materialized(
+      Scratch.materialized(
         Option(fullLabels).getOrElse(loopLabels)
           .select(col("id"), col("lab").as("cluster_id")),
-        scratch._1, scratch._2, fingerprintOf = Seq(nodes, edges))
+        scratch._1, scratch._2, Seq(nodes, edges))
     }
     // bounded min-label propagation prefix (fast path — see the gate
     // scaladoc above). Returns Right(labels) when a zero-change round
@@ -379,12 +343,12 @@ object DedupClusters extends QuerySuite {
         prevChanged = changed
         labels = next.select(col("id"), col("lab"))
         round += 1
-        while (rounds.length > 2) { unpersistCheckpoint(rounds.remove(0)) }
+        while (rounds.length > 2) { Checkpoints.release(rounds.remove(0)) }
       }
-      unpersistCheckpoint(sym)
+      Checkpoints.release(sym)
       // the final round's frame is the live result either way; release the
       // one superseded frame still in the buffer
-      rounds.dropRight(1).foreach(unpersistCheckpoint)
+      rounds.dropRight(1).foreach(Checkpoints.release)
       lastPropagationRounds = round
       if (converged) Right(labels) else Left(labels)
     }
@@ -477,12 +441,12 @@ object DedupClusters extends QuerySuite {
       if (preLabels.isEmpty) certifyAndMaterialize(labels)
       else certifyAndMaterialize(labels, extendToAll(labels))
     } finally {
-      preLabels.foreach(unpersistCheckpoint)
+      preLabels.foreach(Checkpoints.release)
       // failure paths (non-convergence, a failed certificate or scratch
       // write) must not strand the round checkpoints in executor memory
       // for the session's lifetime
-      cps.foreach(unpersistCheckpoint)
-      unpersistCheckpoint(ids)
+      cps.foreach(Checkpoints.release)
+      Checkpoints.release(ids)
     }
   }
 

@@ -130,7 +130,7 @@ object GraphOps extends QuerySuite {
     * LSH candidate join + cosine scoring into their own edge tables).
     */
   private def sharedPairs(s: SparkSession, dir: String): DataFrame =
-    MinHashDedup.materialized(
+    Scratch.materialized(
       SimilarityOps.embeddingNearDupPairs(s, dir)
         .select(col("id1"), col("id2")), "gr_pairs", dir)
 
@@ -147,7 +147,7 @@ object GraphOps extends QuerySuite {
     val sym = pairs.select(col("id1").as("src"), col("id2").as("dst"))
       .union(pairs.select(col("id2").as("src"), col("id1").as("dst")))
     val deg = sym.groupBy("src").agg(count(lit(1)).as("deg"))
-    MinHashDedup.materialized(sym.join(deg, "src"), "gr01_edges", dir)
+    Scratch.materialized(sym.join(deg, "src"), "gr01_edges", dir)
   }
 
   /** gr01's iteration loop behind a scratch-cache PEEK (the rounds are
@@ -159,7 +159,7 @@ object GraphOps extends QuerySuite {
     */
   private def pageRanks(s: SparkSession, dir: String,
       edges: DataFrame): DataFrame = {
-    val hit = MinHashDedup.cachedScratch(s, "gr01_ranks", dir, Seq(edges))
+    val hit = Scratch.peek(s, "gr01_ranks", dir, Seq(edges))
     if (hit.isDefined) return hit.get
     // edges is a materialized parquet scratch table, so the count is a
     // footer-metadata job — it sizes the small-loop mode (see
@@ -189,20 +189,20 @@ object GraphOps extends QuerySuite {
           .select(col("dst").as("node"),
             (lit(Base) + expr("(csum * 17) div 20")).as("r"))
           .transform(Checkpoints.truncate)
-        lastCp.foreach(DedupClusters.unpersistCheckpoint) // superseded round
+        lastCp.foreach(Checkpoints.release) // superseded round
         lastCp = Some(ranks)
       }
       // final ranks land in a scratch table (lake pattern) so the last
       // checkpoint's executor storage is released too — the query leaves
-      // zero persisted RDDs behind. Fingerprint from the edges scratch:
+      // zero persisted RDDs behind. Keyed on the edges scratch:
       // ranks' lineage ends at a checkpoint (no input files), and the
       // edges path changes whenever the embeddings content does.
-      MinHashDedup.materialized(
+      Scratch.materialized(
         ranks.select(col("node"), col("r").as("rank_scaled")),
-        "gr01_ranks", dir, fingerprintOf = Seq(edges))
+        "gr01_ranks", dir, Seq(edges))
     } finally {
-      lastCp.foreach(DedupClusters.unpersistCheckpoint)
-      DedupClusters.unpersistCheckpoint(pe)
+      lastCp.foreach(Checkpoints.release)
+      Checkpoints.release(pe)
     }
     }
   }
@@ -220,7 +220,7 @@ object GraphOps extends QuerySuite {
     */
   private def bfsHops(s: SparkSession, dir: String,
       edges: DataFrame, pairs: DataFrame): DataFrame = {
-    val hit = MinHashDedup.cachedScratch(s, "gr03_hops", dir, Seq(edges))
+    val hit = Scratch.peek(s, "gr03_hops", dir, Seq(edges))
     if (hit.isDefined) return hit.get
     DedupClusters.withSmallLoopConfs(s, edges.count()) {
     // loop-invariant edge frame pre-partitioned on the join key, like
@@ -243,20 +243,20 @@ object GraphOps extends QuerySuite {
           .select(col("dst").as("node"), (col("h") + 1).as("h"))
         dist = dist.union(prop).groupBy("node").agg(min("h").as("h"))
           .transform(Checkpoints.truncate)
-        lastCp.foreach(DedupClusters.unpersistCheckpoint)
+        lastCp.foreach(Checkpoints.release)
         lastCp = Some(dist)
         val nowReached = dist.filter(col("h").isNotNull).count()
         frontierOpen = nowReached != reached
         reached = nowReached
         hops += 1
       }
-      MinHashDedup.materialized(
+      Scratch.materialized(
         dist.filter(col("h").isNotNull)
           .select(col("node"), col("h").cast("int").as("hops")),
-        "gr03_hops", dir, fingerprintOf = Seq(edges))
+        "gr03_hops", dir, Seq(edges))
     } finally {
-      lastCp.foreach(DedupClusters.unpersistCheckpoint)
-      DedupClusters.unpersistCheckpoint(pe)
+      lastCp.foreach(Checkpoints.release)
+      Checkpoints.release(pe)
     }
     }
   }

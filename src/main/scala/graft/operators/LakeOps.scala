@@ -123,14 +123,14 @@ object LakeOps extends QuerySuite {
 
   /** md01's MERGE result without the presentation sort — shared by the
     * merge query itself and the snapshot-diff operator. MATERIALIZED to the
-    * scratch lake (content-fingerprint keyed, [[MinHashDedup.materialized]])
+    * scratch lake (content-fingerprint keyed, [[Scratch.materialized]])
     * so chained lake queries (md01 upsert → md02 diff) read ONE computed
     * MERGE instead of each recomputing the full-outer join — the same
     * pattern the dedup signature tables use; a rewritten orders snapshot
     * invalidates the entry via the fingerprint.
     */
   private def mergedOrders(s: SparkSession, dir: String): DataFrame =
-    MinHashDedup.materialized(mergedOrdersPlan(s, dir), "md01_merge", dir)
+    Scratch.materialized(mergedOrdersPlan(s, dir), "md01_merge", dir)
 
   private def mergedOrdersPlan(s: SparkSession, dir: String): DataFrame = {
       // a NULL merge key has no identity to merge ON — drop it on BOTH
@@ -354,7 +354,7 @@ object LakeOps extends QuerySuite {
     "md08_time_travel" -> ((s, dir) => {
       val lake = java.nio.file.Files
         .createTempDirectory("md08_lake").toString
-      MinHashDedup.registerScratchDir(lake)
+      Scratch.registerDir(lake)
       val base = Tables(s, dir, "orders").select(col("o_orderkey"),
         round(col("o_totalprice") * 100).cast("long").as("cents"))
       val v1 = TxLog.write(s, lake, base, 0L, action = "snapshot")

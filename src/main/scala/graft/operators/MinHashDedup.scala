@@ -5,7 +5,7 @@ import scala.collection.immutable.ListMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{ParquetRead, QuerySuite, Tables}
+import graft.{QuerySuite, Tables}
 
 /** Near-duplicate detection at scale: MinHash+LSH and SimHash over
   * `documents` (builder brief / SURVEY §2.3).
@@ -46,241 +46,10 @@ object MinHashDedup extends QuerySuite {
   private val K = 32       // minhash functions
   private val BANDS = 16   // bands of 2 rows each
 
-  /** Write `df` to a scratch parquet table and read it back: the
-    * multi-branch consumers downstream share one computation without any
-    * session-lifetime cache.
-    *
-    * Lifecycle (a long-lived engine session must not accumulate
-    * corpus-sized temp tables, and a cluster must be able to read them from
-    * every executor):
-    *  - the scratch ROOT is `spark.graft.scratch.dir` when set (on a
-    *    multi-node cluster: a shared path — HDFS/S3/NFS; all paths go
-    *    through the Hadoop FileSystem API, so any supported scheme works),
-    *    defaulting to the driver-local java tmpdir, which is only correct
-    *    for local mode;
-    *  - materializations are CACHED per (tag, cache key, input fingerprint):
-    *    re-running dd02 after dd06 reuses the signature tables instead of
-    *    re-writing the corpus. The fingerprint covers the source files'
-    *    paths, sizes and modification times (one listStatus per distinct
-    *    parent dir — no per-file RPC), so a table rewritten in place under
-    *    the same path invalidates the entry instead of silently serving
-    *    stale results to a long-lived session;
-    *  - [[clearScratch]] deletes everything eagerly — call it when the
-    *    consuming actions are done (Verify/Bench do); a JVM shutdown hook
-    *    backstops sessions that never call it.
+  /** The old name of [[Scratch.clear]], kept for the perfbench harness;
+    * code under `src/` calls [[Scratch.clear]].
     */
-  private[operators] def materialized(
-      df: DataFrame, tag: String, cacheKey: String,
-      fingerprintOf: Seq[DataFrame] = Nil): DataFrame = {
-    val s = df.sparkSession
-    // A frame whose lineage ends at a localCheckpoint (LogicalRDD) has no
-    // inputFiles, so its own fingerprint is a CONSTANT and the cache key
-    // degrades to (tag, cacheKey) — a rewritten source table would serve
-    // stale results. Iterative callers (connected components, pagerank,
-    // BFS) pass their TRUE inputs via `fingerprintOf`; content sensitivity
-    // then comes from those frames' source files.
-    val fp = (df +: fingerprintOf).map(inputFingerprint).mkString("+")
-    val key = (tag, cacheKey + "#" + fp)
-    // the corpus-sized WRITE must not run inside computeIfAbsent: the
-    // compute holds the map's bin lock for its whole duration, so two
-    // concurrent materializations of UNRELATED tags could serialize for
-    // minutes on a hash-bin collision (r17 review). computeIfAbsent now
-    // only CREATES a FutureTask (cheap, correct same-key dedup); run() is
-    // idempotent — the first caller computes, concurrent same-key callers
-    // block on get() until the one build finishes.
-    val task = scratchCache.computeIfAbsent(key,
-      _ => new java.util.concurrent.FutureTask[String](() => {
-        val root = new org.apache.hadoop.fs.Path(
-          s.conf.getOption("spark.graft.scratch.dir")
-            .getOrElse(System.getProperty("java.io.tmpdir")))
-        val dir = new org.apache.hadoop.fs.Path(
-          root, s"graft_${tag}_${java.util.UUID.randomUUID}")
-        val p = dir.toString
-        // register BEFORE the write: a failed/interrupted write would
-        // otherwise leave a corpus-sized partial dir no cleanup path knows
-        // about (retries mint a fresh UUID, permanently orphaning it)
-        hadoopConf.compareAndSet(null, s.sparkContext.hadoopConfiguration)
-        scratchDirs.add(p)
-        val t0 = System.nanoTime()
-        df.write.mode("overwrite").parquet(p)
-        buildSeconds.merge(tag, (System.nanoTime() - t0) / 1e9,
-          (a, b) => a + b)
-        p
-      }))
-    task.run()
-    val path =
-      try task.get()
-      catch {
-        case e: java.util.concurrent.ExecutionException =>
-          // a failed build must not poison the key forever — the old
-          // computeIfAbsent semantics left no mapping behind on failure,
-          // so a retry rebuilt; remove(key, task) restores exactly that
-          scratchCache.remove(key, task)
-          throw e.getCause
-      }
-    ParquetRead(s, path)
-  }
-
-  // Build-cost meter: seconds spent WRITING scratch tables since the last
-  // drain, keyed by tag. Bench drains it after each timed query so the
-  // scratch-build share of an owner query's wall time is reported
-  // separately (`scratch_build_s` in bench_detail.json) instead of
-  // silently inflating the owner's number — q59's r9 "regression"
-  // (1.7 → 2.7 s) was exactly this attribution artifact.
-  private val buildSeconds =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Double]()
-
-  /** Snapshot-and-reset the per-tag scratch build seconds accumulated
-    * since the previous drain (or JVM start). Removal is the ATOMIC
-    * `remove(key)`, not read-then-iterator-remove: a `merge` racing
-    * between those two steps was discarded — its seconds vanished from
-    * every future drain, the exact under-attribution the meter exists to
-    * prevent (r14 review; unreachable in the single-threaded bench loop,
-    * live the moment two queries build scratch concurrently).
-    */
-  private[graft] def drainBuildSeconds(): Map[String, Double] = {
-    val snap = scala.collection.mutable.Map[String, Double]()
-    val it = buildSeconds.keySet().iterator()
-    while (it.hasNext) {
-      val k = it.next()
-      val v = buildSeconds.remove(k)
-      if (v != null) snap(k) = v
-    }
-    snap.toMap
-  }
-
-  /** Cache PEEK for iterative operators: the scratch frame the eventual
-    * `materialized(result, tag, cacheKey, fingerprintOf)` call would
-    * serve, for a `result` whose lineage ends at a checkpoint (no input
-    * files — its own fingerprint contribution is the md5-of-nothing
-    * constant). Checked BEFORE the rounds run: the cache used to be
-    * consulted only after the eager propagation loop had already executed
-    * every iteration, so a repeat invocation saved nothing but the final
-    * parquet write (r10 review).
-    */
-  private[operators] def cachedScratch(s: SparkSession, tag: String,
-      cacheKey: String, fingerprintOf: Seq[DataFrame]): Option[DataFrame] = {
-    val emptyFp = java.security.MessageDigest.getInstance("MD5")
-      .digest().map("%02x".format(_)).mkString
-    val fp = (emptyFp +: fingerprintOf.map(inputFingerprint)).mkString("+")
-    // non-blocking peek: only a COMPLETED successful build counts as a hit
-    // (an in-flight or failed task reads as a miss, and the caller's
-    // materialized() then blocks on / replaces it) — matching the old
-    // map-of-paths semantics where nothing was visible until the write
-    // finished. A completed-but-FAILED task is evicted right here (r17
-    // ADVICE): peek-only callers otherwise kept hitting the poisoned
-    // entry until some materialized() call happened to remove it.
-    val key = (tag, cacheKey + "#" + fp)
-    Option(scratchCache.get(key))
-      .filter(_.isDone)
-      .flatMap(t => try Some(t.get()) catch {
-        case _: Exception => scratchCache.remove(key, t); None
-      })
-      .map(ParquetRead(s, _))
-  }
-
-  /** Content fingerprint of `df`'s source files: md5 over each file's
-    * (path, length, modificationTime), gathered with ONE listStatus per
-    * distinct parent directory (the statuses of all part-files in a dir
-    * come back in a single namenode/object-store call — no per-file RPC).
-    * Files that vanish between planning and listing hash as absent, which
-    * still changes the fingerprint — exactly what invalidation wants.
-    */
-  private[operators] def inputFingerprint(df: DataFrame): String = {
-    val hc = df.sparkSession.sparkContext.hadoopConfiguration
-    // normalize through Path: inputFiles says "file:///x", FileStatus says
-    // "file:/x" — new Path(...).toString canonicalizes both to the latter
-    val paths = df.inputFiles.map(new org.apache.hadoop.fs.Path(_))
-    val files = paths.map(_.toString).toSet
-    val md = java.security.MessageDigest.getInstance("MD5")
-    paths.map(_.getParent)
-      .distinct.sortBy(_.toString)
-      .foreach { parent =>
-        val fs = parent.getFileSystem(hc)
-        val statuses =
-          try fs.listStatus(parent)
-          catch { case _: java.io.FileNotFoundException =>
-            Array.empty[org.apache.hadoop.fs.FileStatus] }
-        statuses.filter(st => files.contains(st.getPath.toString))
-          .sortBy(_.getPath.toString)
-          .foreach { st =>
-            md.update(s"${st.getPath}|${st.getLen}|${st.getModificationTime}\n"
-              .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          }
-      }
-    md.digest().map("%02x".format(_)).mkString
-  }
-
-  private val scratchCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), java.util.concurrent.FutureTask[String]]()
-  private val scratchDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  // captured at first materialization: the shutdown-hook path must not
-  // touch SparkContext.getOrCreate (it could spawn a context mid-shutdown)
-  private val hadoopConf =
-    new java.util.concurrent.atomic.AtomicReference[
-      org.apache.hadoop.conf.Configuration](null)
-
-  /** Enroll an externally-created scratch directory (e.g. st16's versioned
-    * lake) in the shared cleanup: deleted by [[clearScratch]] and the JVM
-    * shutdown hook, exactly like [[materialized]]'s tables.
-    */
-  private[graft] def registerScratchDir(p: String): Unit = scratchDirs.add(p)
-
-  /** Best-effort recursive delete; TRUE iff the dir is verifiably gone.
-    * One implementation for both clearScratch variants and (through them)
-    * the shutdown hook — the hand-copied blocks had already drifted on
-    * when tracking was dropped (r11 review).
-    */
-  private def deleteQuietly(p: String): Boolean = {
-    val hc = Option(hadoopConf.get())
-      .getOrElse(new org.apache.hadoop.conf.Configuration())
-    try {
-      val path = new org.apache.hadoop.fs.Path(p)
-      val fs = path.getFileSystem(hc)
-      fs.delete(path, true)
-      !fs.exists(path)
-    } catch { case _: Exception => false }
-  }
-
-  /** Delete every scratch table written by [[materialized]] and drop the
-    * cache. Safe to call between queries; the next invocation re-writes.
-    * A dir whose delete FAILS stays enrolled in [[scratchDirs]] so a later
-    * clearScratch (or the shutdown hook) retries it — dropping tracking on
-    * a transient IOException permanently orphaned corpus-sized scratch on
-    * shared storage, defeating the backstop the registration-before-write
-    * comment promises (r11 review).
-    */
-  def clearScratch(): Unit = {
-    scratchCache.clear()
-    scratchDirs.removeIf(p => deleteQuietly(p))
-  }
-
-  /** Selective variant: drop only the entries whose TAG satisfies `pred`.
-    * Bench uses this to charge each scratch group's build cost to the
-    * group's owning query — clearing just that group's tags right before
-    * timing the owner, in both passes, so attribution is deterministic
-    * regardless of pass order and other groups' scratch stays shared.
-    */
-  def clearScratch(pred: String => Boolean): Unit = {
-    val it = scratchCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      // only COMPLETED builds are deleted here: yanking a dir out from
-      // under an in-flight write corrupts it — the in-flight dir is
-      // already enrolled in scratchDirs, so the end-of-run clearScratch()
-      // (or the shutdown hook) still reclaims it
-      if (pred(e.getKey._1) && e.getValue.isDone) {
-        val p = try e.getValue.get() catch { case _: Exception => null }
-        it.remove()
-        // tracking is dropped only on a VERIFIED delete — see clearScratch
-        if (p != null && deleteQuietly(p)) scratchDirs.remove(p)
-      }
-    }
-  }
-
-  Runtime.getRuntime.addShutdownHook(new Thread(() =>
-    try clearScratch() catch { case _: Exception => () }))
+  def clearScratch(): Unit = Scratch.clear()
 
   /** doc_id + distinct 3-word shingles (whole text if shorter than 3 words).
     * `words` is materialized first so the per-shingle lambda slices a column
@@ -316,13 +85,13 @@ object MinHashDedup extends QuerySuite {
     */
   private[operators] def lshPairs(
       s: SparkSession, dir: String, threshold: Double = 0.8): DataFrame = {
-    val sh = materialized(shingled(s, dir), "dd02_shingles", dir)
+    val sh = Scratch.materialized(shingled(s, dir), "dd02_shingles", dir)
     val mh = sh.select(col("doc_id"),
       graft.functions.MinHashArray(col("shingles"), K).as("mhs"))
     // (doc_id, band, band-hash): only ids travel through the band shuffle;
     // shingle arrays are joined back per *candidate pair*, not per band.
     // Materialized so the self-join's two sides don't re-minhash the corpus.
-    val bands = materialized(
+    val bands = Scratch.materialized(
       mh.select(col("doc_id"), explode(array(
         (0 until BANDS).map(j => struct(lit(j).as("band"),
           xxhash64(element_at(col("mhs"), 2 * j + 1),
@@ -393,7 +162,7 @@ object MinHashDedup extends QuerySuite {
     "dd03_simhash" -> ((s, dir) => {
       // materialized: both sides of the chunk self-join share one signature
       // computation (the lake's persisted signature table)
-      val sigs = materialized(
+      val sigs = Scratch.materialized(
         Tables(s, dir, "documents")
           .select(col("doc_id"),
             graft.functions.SimHashArray(split(col("text"), " ")).as("sig")),

@@ -156,7 +156,7 @@ object Relational5 extends QuerySuite {
       // cut, and as bare lineage the fact table was scanned + aggregated
       // twice per run (the zero-exchange-reuse shape q59 fixed the same
       // way — r11 review); the per-key count table is NDV-bounded, tiny
-      val counts = MinHashDedup.materialized(
+      val counts = Scratch.materialized(
         li.groupBy("l_suppkey").agg(count(lit(1)).as("cnt")),
         "q55_counts", dir)
       val totals = counts.agg(sum(col("cnt")).as("total"),
@@ -250,7 +250,7 @@ object Relational5 extends QuerySuite {
       // NDV-sized aggregate is materialized once through the scratch
       // cache — the standard stats-build shape: one corpus scan, then
       // every pass runs over the tiny (value, freq) table.
-      val counts = MinHashDedup.materialized(
+      val counts = Scratch.materialized(
         Tables(s, dir, "lineitem")
           .select(round(col("l_extendedprice") * 100).cast("long").as("cents"))
           .groupBy("cents").agg(count(lit(1)).as("freq")),
@@ -319,7 +319,7 @@ object Relational5 extends QuerySuite {
       // transform(sequence(1, length(c_name)), i -> concat(substring(...),
       // substring(...)))) — dispatched an interpreted per-character lambda
       // for every name; DeletionVariantsSpec pins kernel == that form.
-      val c = MinHashDedup.materialized(
+      val c = Scratch.materialized(
         Tables(s, dir, "customer")
           .select(col("c_custkey"), col("c_nationkey"), col("c_name"))
           .withColumn("v", explode(

@@ -52,7 +52,7 @@ object Relational6 extends QuerySuite {
       // max(o_orderdate) ≡ max over the per-customer lastd maxima, so it
       // derives from the materialized table instead of a second orders
       // scan (the r15 deferred restructure).
-      val perCust = MinHashDedup.materialized(
+      val perCust = Scratch.materialized(
         Tables(s, dir, "orders")
           .groupBy("o_custkey")
           .agg(max(col("o_orderdate")).as("lastd"),
@@ -190,7 +190,7 @@ object Relational6 extends QuerySuite {
       // re-aggregated for exact_total — without this the events scan ran
       // three aggregations with only fragile exchange reuse between them
       // (r11 review). The per-day table is date-cardinality tiny.
-      val daily = MinHashDedup.materialized(
+      val daily = Scratch.materialized(
         ev.groupBy("day")
           .agg(hll_sketch_agg(col("user_id"), lit(12)).as("sk"),
             countDistinct(col("user_id")).as("exact_daily")),

@@ -61,7 +61,7 @@ object SimilarityOps extends QuerySuite {
     }
   private[graft] def embCount(s: SparkSession, dir: String): Long = {
     val df = Tables(s, dir, "embeddings")
-    val fp = MinHashDedup.inputFingerprint(df)
+    val fp = Scratch.inputFingerprint(df)
     val hit = embCountCache.synchronized(embCountCache.get(dir))
     if (hit != null && hit._1 == fp) hit._2
     else {
@@ -154,7 +154,7 @@ object SimilarityOps extends QuerySuite {
   /** Multi-table hyperplane LSH signatures — (vec_id, tb, sig) with one row
     * per (vector, table). Independent tables amplify recall (candidate if
     * ANY table agrees). Materialized once per (tag, input dir) via
-    * MinHashDedup's scratch cache, so dd07, dd08 and ss05 all share one
+    * the [[Scratch]] cache, so dd07, dd08 and ss05 all share one
     * signature pass instead of re-shingling the corpus.
     */
   private[operators] def multiTableSigs(
@@ -170,7 +170,7 @@ object SimilarityOps extends QuerySuite {
     val nPlanes = planesFor(n)
     val nTables = bandTablesFor(nPlanes)
     val e = emb(s, dir)
-    MinHashDedup.materialized(
+    Scratch.materialized(
       e.select(col("vec_id"), explode(array(
         (0 until nTables).map(t => struct(lit(t).as("tb"),
           hyperplaneSig(planesSeeded(42 + t, nPlanes, 64)).as("sig"))): _*)).as("ts"))
@@ -404,7 +404,7 @@ object SimilarityOps extends QuerySuite {
       // re-run the centroid scoring pass twice, and vectors join back per
       // candidate, never traveling with the assignment.
       val wCell = Window.partitionBy("vec_id").orderBy(desc("csim"), asc("cid"))
-      val asg = MinHashDedup.materialized(
+      val asg = Scratch.materialized(
         e.crossJoin(broadcast(cents))
           .select(col("vec_id"), col("cid"), centDot.as("csim"))
           .withColumn("crk", row_number().over(wCell))
@@ -568,7 +568,7 @@ object SimilarityOps extends QuerySuite {
       // whole 2-iteration pipeline (both corpus crossJoins, both top-1
       // windows, the centroid update) would execute twice. Same
       // discipline as ss04's coarse-assignment scratch.
-      val a2 = MinHashDedup.materialized(
+      val a2 = Scratch.materialized(
         assign(update(assign(init))), "ss07_assign", dir)
       val sizes = a2.groupBy("cid").agg(count(lit(1)).as("n_members"))
       a2.join(broadcast(sizes), "cid")

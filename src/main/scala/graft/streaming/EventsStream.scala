@@ -277,7 +277,7 @@ object EventsStream extends QuerySuite {
       val lake = java.nio.file.Files.createTempDirectory("st16_lake").toString
       // versioned scratch lake rides the shared shutdown-hook cleanup so
       // repeated bench/gate runs don't leak the tree
-      graft.operators.MinHashDedup.registerScratchDir(lake)
+      graft.operators.Scratch.registerDir(lake)
       // Every version goes through the lake commit protocol
       // (TxLog: data dir first, then one atomic put-if-absent publish) —
       // a batch that crashes mid-write leaves an unpublished orphan dir,

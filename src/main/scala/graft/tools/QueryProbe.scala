@@ -25,7 +25,7 @@ object QueryProbe {
     spark.sparkContext.setLogLevel("WARN")
     val fn = graft.SparkEntry.queries(name)
     fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-    graft.operators.MinHashDedup.clearScratch()
+    graft.operators.Scratch.clear()
     val starts =
       new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
@@ -47,7 +47,7 @@ object QueryProbe {
     Thread.sleep(1000)
     jobs.forEach(println)
     println(f"PROBE $name wall=$wallS%.2f s jobs=${jobs.size}")
-    graft.operators.MinHashDedup.clearScratch()
+    graft.operators.Scratch.clear()
     spark.stop()
   }
 }

@@ -51,7 +51,7 @@ object StreamProbe {
     val fn = graft.SparkEntry.queries(name)
     // warmup (JIT + page cache), mirroring Bench's steady-state methodology
     fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-    graft.operators.MinHashDedup.clearScratch()
+    graft.operators.Scratch.clear()
     events.clear()
     val t0 = System.nanoTime()
     fn(spark, sfDir).write.format("noop").mode("overwrite").save()
@@ -60,7 +60,7 @@ object StreamProbe {
     Thread.sleep(2000)
     events.forEach { case (id, json) => println(s"BATCH $id: $json") }
     println(f"PROBE $name wall=$wallS%.2f s batches=${events.size}")
-    graft.operators.MinHashDedup.clearScratch()
+    graft.operators.Scratch.clear()
     spark.stop()
   }
 }

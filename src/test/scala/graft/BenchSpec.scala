@@ -23,13 +23,13 @@ class BenchSpec extends AnyFunSuite {
   }
 
   test("scratch-build seconds are attributed to the building query") {
-    operators.MinHashDedup.drainBuildSeconds() // isolate from other specs
+    operators.Scratch.drainBuildSeconds() // isolate from other specs
     val queries: Map[String, QuerySuite#Q] = Map(
       // q59 is a scratch builder (materializes its counts table); q01 is
       // scratch-free — builds must land on the former only
       "q59_equidepth_hist" -> SparkEntry.queries("q59_equidepth_hist"),
       "q01_pricing_summary" -> SparkEntry.queries("q01_pricing_summary"))
-    operators.MinHashDedup.clearScratch(_.startsWith("q59_"))
+    operators.Scratch.clear(_.startsWith("q59_"))
     val (ok, _, builds) = Bench.run(spark, TestSpark.sf0001, queries.toSeq)
     assert(ok.size == 2)
     assert(builds.contains("q59_equidepth_hist"),

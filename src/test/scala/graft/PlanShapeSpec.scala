@@ -242,7 +242,7 @@ class PlanShapeSpec extends AnyFunSuite {
       }
       assert(windows.isEmpty, s"$q: expected no Window node:\n$plan")
     }
-    graft.operators.MinHashDedup.clearScratch()
+    graft.operators.Scratch.clear()
   }
 
   test("dd04/dd05 bounded-window candidates are equi-joins, not nested loops") {
@@ -266,7 +266,7 @@ class PlanShapeSpec extends AnyFunSuite {
       .queryExecution.executedPlan.toString
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan.take(2000))
     assert(!plan.contains("CartesianProduct"), plan.take(2000))
-    graft.operators.MinHashDedup.clearScratch()
+    graft.operators.Scratch.clear()
   }
 
   test("q38 result is unchanged by the single-pass rewrite") {
@@ -305,7 +305,7 @@ class PlanShapeSpec extends AnyFunSuite {
     val plan = SparkEntry.queries("rec01_recursive_cte")(spark, TestSpark.sf0001)
       .queryExecution.optimizedPlan.toString
     assert(plan.contains("UnionLoop"), plan.take(2000))
-    graft.operators.MinHashDedup.clearScratch()
+    graft.operators.Scratch.clear()
   }
 
   test("md03 purge cascade: equi-join chain, no nested loop") {

@@ -66,13 +66,13 @@ class CheckpointsSpec extends AnyFunSuite {
       val round2 = Checkpoints.truncate(
         round1.selectExpr("id * 2 as id"))
       assert(rddDirs().size === 2, s"two live rounds expected: ${rddDirs()}")
-      DedupClusters.unpersistCheckpoint(round1)
+      Checkpoints.release(round1)
       assert(rddDirs().size === 1,
         s"superseded round's files must be deleted now: ${rddDirs()}")
       // the live round is still fully readable from its own files
       assert(round2.agg(org.apache.spark.sql.functions.sum("id"))
         .head.getLong(0) === 9900L)
-      DedupClusters.unpersistCheckpoint(round2)
+      Checkpoints.release(round2)
       assert(rddDirs().isEmpty, s"final release must reclaim: ${rddDirs()}")
     } finally {
       spark.conf.unset("spark.graft.checkpoint.dir")

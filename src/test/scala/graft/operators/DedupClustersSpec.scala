@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -225,7 +226,7 @@ class DedupClustersSpec extends AnyFunSuite {
     val pairs = MinHashDedup.lshPairs(spark, TestSpark.sf0001)
       .select("id1", "id2").collect().map(r => (r.getLong(0), r.getLong(1)))
     pairs.foreach { case (a, b) => assert(split(a) === split(b)) }
-    MinHashDedup.clearScratch()
+    Scratch.clear()
   }
 
   test("dd13 keeps exactly the max-logit member of every cluster (ties to min id)") {
@@ -241,6 +242,40 @@ class DedupClustersSpec extends AnyFunSuite {
       assert(kept.head._1 === best._1,
         s"cluster $cid kept ${kept.head} over $best")
     }
-    MinHashDedup.clearScratch()
+    Scratch.clear()
+  }
+
+  test("a repeat call on parquet inputs is a peek hit; rewriting an input " +
+    "recomputes") {
+    val d = java.nio.file.Files.createTempDirectory("cc_key").toString
+    def write(df: DataFrame, name: String): Unit =
+      df.coalesce(1).write.mode("overwrite").parquet(s"$d/$name")
+    def read(name: String) = spark.read.parquet(s"$d/$name")
+    def labels(df: DataFrame): Map[Long, Long] =
+      df.as[(Long, Long)].collect().toMap
+    write(Seq(1L, 2L, 3L, 4L, 10L, 11L).toDF("id"), "nodes")
+    write(Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("a", "b"), "edges")
+    val scratch = ("cc_key", d)
+    try {
+      val (nodes, edges) = (read("nodes"), read("edges"))
+      val first = labels(
+        DedupClusters.connectedComponents(nodes, edges, scratch = scratch))
+      assert(first === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L,
+        10L -> 10L, 11L -> 10L))
+      // same inputs: the peek serves the build's table, launching no job
+      val (again, jobs) = graft.ReadJobs.jobsDuring(
+        DedupClusters.connectedComponents(nodes, edges, scratch = scratch))
+      assert(jobs === 0)
+      assert(labels(again) === first)
+      // same path, new content: the key must change and the rounds rerun
+      write(Seq((3L, 4L), (10L, 11L), (1L, 11L)).toDF("a", "b"), "edges")
+      val rewritten = labels(DedupClusters.connectedComponents(
+        read("nodes"), read("edges"), scratch = scratch))
+      assert(rewritten === Map(1L -> 1L, 2L -> 2L, 3L -> 3L, 4L -> 3L,
+        10L -> 1L, 11L -> 1L))
+    } finally {
+      Scratch.clear(_ == scratch._1)
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d))
+    }
   }
 }

@@ -67,12 +67,15 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("iterative operators release every round's checkpoint storage") {
-    // gr01 and dd06 localCheckpoint each round; superseded rounds must be
-    // unpersisted eagerly and the final result lands in a scratch table,
-    // so NOTHING stays in executor storage after the action returns
+    // gr01, gr03, dd06 and dd08 localCheckpoint each round; superseded
+    // rounds must be unpersisted eagerly and the final result lands in a
+    // scratch table, so NOTHING stays in executor storage after the action
+    // returns
     val sf = graft.TestSpark.sf0001
     GraphOps.queries("gr01_pagerank")(spark, sf).collect()
+    GraphOps.queries("gr03_bfs_hops")(spark, sf).collect()
     DedupClusters.queries("dd06_dedup_clusters")(spark, sf).collect()
+    DedupClusters.queries("dd08_semantic_clusters")(spark, sf).collect()
     assert(spark.sparkContext.getPersistentRDDs.isEmpty,
       spark.sparkContext.getPersistentRDDs.toString)
   }
@@ -116,7 +119,7 @@ class DedupSpec extends AnyFunSuite {
 
   test("scratch tables are cached per input, cleared eagerly, rebuilt on demand") {
     import scala.jdk.CollectionConverters._
-    MinHashDedup.clearScratch() // drop leftovers from any earlier suite
+    Scratch.clear() // drop leftovers from any earlier suite
     val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
     def scratch(): Set[String] = {
       val s = Files.list(tmp)
@@ -134,17 +137,17 @@ class DedupSpec extends AnyFunSuite {
     MinHashDedup.queries("dd02_minhash_lsh")(spark, dir).collect()
     assert((scratch() -- before) === first)
     // eager cleanup leaves nothing of ours behind (no waiting for JVM exit)
-    MinHashDedup.clearScratch()
+    Scratch.clear()
     assert((scratch() -- before).isEmpty)
     // and the next invocation re-materializes from scratch
     assert(MinHashDedup.queries("dd02_minhash_lsh")(spark, dir).collect().nonEmpty)
-    MinHashDedup.clearScratch()
+    Scratch.clear()
   }
 
   test("scratch cache invalidates when the input is rewritten in place") {
     import scala.jdk.CollectionConverters._
     import spark.implicits._
-    MinHashDedup.clearScratch()
+    Scratch.clear()
     val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
     def scratch(): Set[String] = {
       val s = Files.list(tmp)
@@ -166,7 +169,7 @@ class DedupSpec extends AnyFunSuite {
     write(Seq((0L, "alpha beta gamma delta"), (1L, "totally unrelated words here")))
     assert(MinHashDedup.queries("dd02_minhash_lsh")(spark, d).count() === 0)
     assert((scratch() -- before).size > first.size) // new entries, not reuse
-    MinHashDedup.clearScratch()
+    Scratch.clear()
   }
 
   test("word jaccard: dup pair = 1.0, near pair high, unrelated low (dd04)") {

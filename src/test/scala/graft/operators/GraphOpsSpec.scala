@@ -45,7 +45,7 @@ class GraphOpsSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     // clear gr01's scratch so the second run actually re-iterates instead
     // of re-reading the cached ranks table
-    MinHashDedup.clearScratch(_.startsWith("gr01_"))
+    Scratch.clear(_.startsWith("gr01_"))
     val ckptDir = java.nio.file.Files.createTempDirectory("graft-ckpt")
     spark.conf.set("spark.graft.checkpoint.dir", ckptDir.toString)
     try {
@@ -74,7 +74,7 @@ class GraphOpsSpec extends AnyFunSuite {
         s"completed reliable-mode query must reclaim all checkpoints: $rdds")
     } finally {
       spark.conf.unset("spark.graft.checkpoint.dir")
-      MinHashDedup.clearScratch(_.startsWith("gr01_"))
+      Scratch.clear(_.startsWith("gr01_"))
       org.apache.commons.io.FileUtils.deleteQuietly(ckptDir.toFile)
     }
   }

@@ -49,7 +49,7 @@ class ScratchCacheSpec extends AnyFunSuite {
     try body(dir)
     finally {
       spark.conf.unset("spark.graft.scratch.dir")
-      MinHashDedup.clearScratch()
+      Scratch.clear()
     }
   }
 
@@ -73,7 +73,7 @@ class ScratchCacheSpec extends AnyFunSuite {
       val blockingDf = spark.range(1).select(blocker($"id").as("v"))
       @volatile var aErr: Throwable = null
       val a = new Thread(() =>
-        try MinHashDedup.materialized(blockingDf, "conc_a", "k")
+        try Scratch.materialized(blockingDf, "conc_a", "k")
         catch { case t: Throwable => aErr = t })
       a.start()
       try {
@@ -83,7 +83,7 @@ class ScratchCacheSpec extends AnyFunSuite {
         // …then a DIFFERENT tag must build to completion while A is still
         // blocked (the pre-r17 in-computeIfAbsent write serialized exactly
         // here, for the whole build, on a hash-bin collision)
-        val b = MinHashDedup.materialized(
+        val b = Scratch.materialized(
           spark.range(5).toDF("v"), "conc_b", "k")
         assert(b.count() === 5L)
         assert(a.isAlive, "tag A should still be mid-build")
@@ -108,7 +108,7 @@ class ScratchCacheSpec extends AnyFunSuite {
         try {
           barrier.await(30, TimeUnit.SECONDS)
           counts.addAndGet(
-            MinHashDedup.materialized(df, "conc_c", "k").count())
+            Scratch.materialized(df, "conc_c", "k").count())
         } catch { case t: Throwable => errs.add(t) })).toSeq
       threads.foreach(_.start())
       threads.foreach(_.join(60000))
@@ -126,22 +126,22 @@ class ScratchCacheSpec extends AnyFunSuite {
       val f = udf(ScratchGates.failable _)
       val df = spark.range(3).select(f($"id").as("v"))
       val ex = intercept[Throwable] {
-        MinHashDedup.materialized(df, "conc_f", "k")
+        Scratch.materialized(df, "conc_f", "k")
       }
       assert(causeChain(ex).exists(c =>
         Option(c.getMessage).exists(_.contains("injected"))), ex.toString)
       // the poisoned entry must not serve peeks (and the peek itself
       // evicts a failed-done task it finds — r17 ADVICE)
-      assert(MinHashDedup.cachedScratch(spark, "conc_f", "k", Nil).isEmpty)
+      assert(Scratch.peek(spark, "conc_f", "k", Seq(df)).isEmpty)
       // the retry REBUILDS (same key: the df's lineage fingerprint is
       // unchanged) instead of rethrowing the stale failure forever
       ScratchGates.fail = false
-      val ok = MinHashDedup.materialized(df, "conc_f", "k")
+      val ok = Scratch.materialized(df, "conc_f", "k")
       assert(ok.count() === 3L)
       assert(buildDirs(root, "conc_f").size === 2,
         "failed attempt + successful rebuild each mint a dir")
       // and the successful build is now a cache hit for peeks
-      assert(MinHashDedup.cachedScratch(spark, "conc_f", "k", Nil).isDefined)
+      assert(Scratch.peek(spark, "conc_f", "k", Seq(df)).isDefined)
     }
   }
 }

@@ -4,8 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ReadJobs.{assertSameAsPlainRead, jobsDuring}
 
-/** Scratch read-backs ([[MinHashDedup.materialized]],
-  * [[MinHashDedup.cachedScratch]]) take their schema from one parquet
+/** Scratch read-backs ([[Scratch.materialized]],
+  * [[Scratch.peek]]) take their schema from one parquet
   * footer read on the driver ([[graft.ParquetRead]]): a build launches only
   * its write, and a cache hit launches nothing.
   */
@@ -19,18 +19,18 @@ class ScratchReadSpec extends AnyFunSuite {
     try {
       val df = spark.range(5).selectExpr("id", "cast(id * 2 AS string) AS s")
       val (built, buildJobs) =
-        jobsDuring(MinHashDedup.materialized(df, "scratch_read", "k"))
+        jobsDuring(Scratch.materialized(df, "scratch_read", "k"))
       assert(buildJobs === 1)
       val dir = built.inputFiles.head.replaceAll("/[^/]+$", "")
       assertSameAsPlainRead(built, dir)
       val (hit, hitJobs) = jobsDuring(
-        MinHashDedup.cachedScratch(spark, "scratch_read", "k", Nil))
+        Scratch.peek(spark, "scratch_read", "k", Seq(df)))
       assert(hitJobs === 0)
       assert(hit.isDefined)
       assertSameAsPlainRead(hit.get, dir)
     } finally {
       spark.conf.unset("spark.graft.scratch.dir")
-      MinHashDedup.clearScratch()
+      Scratch.clear()
     }
   }
 }

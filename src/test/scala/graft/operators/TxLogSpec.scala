@@ -16,7 +16,7 @@ class TxLogSpec extends AnyFunSuite {
 
   private def freshTable(): String = {
     val dir = Files.createTempDirectory("txlog").toString
-    MinHashDedup.registerScratchDir(dir)
+    Scratch.registerDir(dir)
     dir
   }
 

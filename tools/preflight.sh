@@ -23,6 +23,22 @@ sbt -batch compile Test/compile >/tmp/preflight_compile.log 2>&1 || {
   tail -30 /tmp/preflight_compile.log; echo "PREFLIGHT FAIL: compile"; exit 1; }
 echo "compile OK"
 
+# The perfbench harness compiles src/main/scala together with its own code
+# and calls src/main names (MinHashDedup.clearScratch, SparkEntry, the
+# pipeline types): a rename there passes gate 1 and the specs but breaks the
+# benchmark. Same offline SBT_OPTS as perfbench/run.py's build(); sbt state
+# stays in the gitignored perfbench/.build.
+echo "== gate 1b: compile the perfbench harness =="
+PB_BUILD="$PWD/perfbench/.build"
+mkdir -p "$PB_BUILD/tmp"
+(cd perfbench && COURSIER_MODE=offline SBT_OPTS="-Dsbt.override.build.repos=true \
+-Dsbt.repository.config=$HOME/.sbt/repositories -Dsbt.offline=true \
+-Dsbt.server.autostart=false -Dsbt.global.base=$PB_BUILD/sbt-global \
+-Djava.io.tmpdir=$PB_BUILD/tmp -Xmx2g" sbt -batch compile) \
+  >/tmp/preflight_perfbench.log 2>&1 || {
+  tail -30 /tmp/preflight_perfbench.log; echo "PREFLIGHT FAIL: perfbench compile"; exit 1; }
+echo "perfbench compile OK"
+
 # Map touched main-source files -> spec globs to run. Streaming always runs.
 TOUCHED=$(git diff --name-only "$SINCE" -- 'src/main/scala/**' 2>/dev/null || true)
 SPECS="graft.streaming.* *QueriesSpec"
