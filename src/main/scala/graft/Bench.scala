@@ -219,11 +219,7 @@ object Bench {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // expected: Checkpoints.release logs "lineage has been truncated" per round
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd.MapPartitionsRDD",
-      org.apache.logging.log4j.Level.ERROR)
+    QuietLog(spark)
     // Steady-state measurement: one UNTIMED pass of the full query surface
     // first. A parquet count() warms nothing real (it answers from footer
     // metadata), so the old per-table touch left the first measured queries

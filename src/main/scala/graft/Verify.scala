@@ -31,11 +31,7 @@ object Verify {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // expected: Checkpoints.release logs "lineage has been truncated" per round
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd.MapPartitionsRDD",
-      org.apache.logging.log4j.Level.ERROR)
+    QuietLog(spark)
     new java.io.File(outDir).mkdirs()
     selected(SparkEntry.queries).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

@@ -2,7 +2,7 @@ package graft.operators
 
 import scala.collection.immutable.ListMap
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{QuerySuite, Tables}
@@ -12,168 +12,120 @@ import graft.{QuerySuite, Tables}
   * minimum doc_id). This is the step an LLM training pipeline actually
   * needs — "keep one copy per duplicate group", not just a pair listing.
   *
-  * Algorithm: min-label propagation. `label(x)` starts as `x`; each round
-  * every node takes the min label among itself and its neighbors; converges
-  * in O(component diameter) rounds. Near-dup components are band-connected
-  * near-cliques (diameter rarely above 2-3), so a handful of rounds closes
-  * them. Each round is exactly two shuffles (edge join + min-agg) over
-  * frames whose size never exceeds |touched nodes| + |edges| — nodes in no
-  * pair stay out of the loop and re-attach once at the end; the convergence
-  * check reads the round's own aggregate (the previous label rides through
-  * the min-agg tagged), so it adds no extra join — and there is no
-  * transitive-closure pair blowup
-  * (the oracle's recursive CTE enumerates reachability, which is only
-  * tractable because the corpus is small; the Spark path scales).
-  * [[Checkpoints.truncate]] cuts lineage each round so plans stay O(1) —
-  * executor-local by default, reliable `checkpoint` to shared storage when
-  * `spark.graft.checkpoint.dir` is set (the 1000-executor mode).
+  * Two kernels, chosen by edge count (see [[connectedComponents]]):
+  *  - up to [[LocalGraph.cap]] edges, the edge plan is evaluated once and
+  *    union-find runs on the driver;
+  *  - above it, large-star/small-star contraction runs on the cluster in
+  *    O(log² n) rounds on any topology, each round truncated by
+  *    [[Checkpoints.truncate]] so plans stay O(1) — executor-local by
+  *    default, reliable `checkpoint` to shared storage when
+  *    `spark.graft.checkpoint.dir` is set (the 1000-executor mode).
+  * Both certify their labels against the original edges before they are
+  * served, and neither touches the session's conf. There is no
+  * transitive-closure pair blowup (the oracle's recursive CTE enumerates
+  * reachability, which is only tractable because the corpus is small).
   */
 object DedupClusters extends QuerySuite {
-  /** Fast-path gates (r13 verdict order-book #1). The star-contraction
-    * kernel below converges in O(log² n) rounds on ANY topology — the
-    * 30×-proven scale property — but on the shallow near-clique graphs
-    * real dedup produces it spends ~6 rounds where plain min-label
-    * propagation finishes in 3-4, doubling dd06/dd08's toy-scale bench
-    * cost. So: when the canonical edge set is small enough that the
-    * prefix is cheap ([[PropagationEdgeCap]]), run propagation for at
-    * most [[PropagationRounds]] rounds first, with a geometric-decay gate
-    * that bails after two rounds if the per-round change count stops
-    * collapsing (chains plateau; cliques halve — the r14 ladder measured
-    * both shapes). If a zero-change round PROVES convergence, serve that
-    * answer; otherwise the prefix is still not wasted — every node now
-    * carries the minimum of its k-hop neighborhood, so the edge set is
-    * COMPRESSED through the partial labels (edge → (lab(a), lab(b)),
-    * self-loops dropped) and contraction runs on the collapsed graph,
-    * with a final pull-back join. Near-clique components (the common
-    * dedup shape) collapse to single nodes; a deep path (the
-    * 4096-node-path spec; boilerplate chains at 100 TB) barely compresses
-    * and proceeds to the O(log² n) kernel after the two-round bail —
-    * rounds never follow the data's diameter, preserving the r13 scale
-    * fix. Above the cap the prefix is skipped outright: at billions of
-    * edges even two speculative rounds are real money and diameter
-    * statistics are unknowable up front, while the constant-factor gap
-    * the fast path recovers no longer dominates. Both paths feed the same
-    * independent edge certificate, so the served labels are proven, not
-    * trusted, regardless of which kernel produced them.
-    */
-  private[operators] val PropagationEdgeCap = 10000000L
-
-  /** Scoped execution confs for an ITERATIVE loop over frames KNOWN to be
-    * small (≤ [[PropagationEdgeCap]] rows): shuffle partitioning derived
-    * from the row count (~250k rows/partition, never above the session's
-    * configured parallelism) and AQE off for the loop's duration. AQE's
-    * per-stage re-planning turns every round's join+agg into 4-6 separate
-    * stage jobs; on the bounded frames these loops iterate over, the
-    * measured cost is driver job-submission gaps, not data (r20 probe:
-    * dd08 = 76 jobs of 8-40 ms, wall 2-3x the summed job time). Deriving
-    * the partition count from |rows| is the guide §2's scale-adaptive
-    * partitioning; above the cap the body runs UNCHANGED (AQE on, session
-    * partitioning) — big graphs keep runtime adaptivity. Conf mutation is
-    * session-scoped and restored in a finally (the Tables.rawEvents
-    * precedent); the engine's drivers run queries sequentially per
-    * session, and a concurrent planner on the SAME session would see the
-    * loop's values for its duration — documented trade, same class as the
-    * scoped legacy-parquet conf.
-    */
-  private[operators] def withSmallLoopConfs[T](
-      s: org.apache.spark.sql.SparkSession, rows: Long)(body: => T): T = {
-    val conf = s.conf
-    val prevParts =
-      try conf.get("spark.sql.shuffle.partitions").toInt
-      catch { case _: Exception => -1 }
-    if (rows > PropagationEdgeCap || prevParts <= 0) body
-    else {
-      val prevAqe = conf.get("spark.sql.adaptive.enabled", "true")
-      val parts =
-        math.max(1L, math.min(prevParts.toLong, rows / 250000L + 1L))
-      try {
-        conf.set("spark.sql.shuffle.partitions", parts.toString)
-        conf.set("spark.sql.adaptive.enabled", "false")
-        body
-      } finally {
-        conf.set("spark.sql.shuffle.partitions", prevParts.toString)
-        conf.set("spark.sql.adaptive.enabled", prevAqe)
-      }
-    }
-  }
-  // 8, not the 3-4 a pure near-clique needs: real near-dup graphs carry a
-  // tail of short chains (rotated embedding copies link transitively —
-  // dd08's sf0.1 graph needs 6 rounds), and a miss is no longer a restart
-  // since the prefix compresses the edge set either way. Deep topologies
-  // still can't stretch the budget — it is a constant, so rounds never
-  // follow the data's diameter.
-  private[operators] val PropagationRounds = 8
-
   /** Which kernel produced the labels of the LAST cache-miss
-    * [[connectedComponents]] call ("propagation" | "contraction") — test
-    * observability only: the fast-path spec pins that shallow graphs are
-    * served by propagation and deep ones still reach contraction, which no
-    * black-box assertion on the (identical) labels can distinguish.
+    * [[connectedComponents]] call ("local" | "contraction") — test
+    * observability only: the specs pin that each path really ran, which no
+    * black-box assertion on the (identical) labels can show.
     */
   @volatile private[operators] var lastKernel: String = ""
 
-  /** How many rounds the propagation prefix of the LAST cache-miss call
-    * ran before converging or bailing (-1 = prefix skipped by the edge
-    * cap) — test observability only, like [[lastKernel]]: the welded
-    * clique+chain spec asserts the decay gate bails EARLY on a mixed
-    * shape, which labels alone cannot show (a silent full-budget burn
-    * would still produce correct labels, just at 4× the prefix cost).
-    */
-  @volatile private[operators] var lastPropagationRounds: Int = -1
-
   /** Min-label connected components over undirected `edges` (a, b) for all
-    * `nodes` (id). Returns (id, cluster_id = component min id).
+    * `nodes` (id). Returns (id, cluster_id = component min id); both keep
+    * the id column's type.
     *
     * `scratch` = (tag, cacheKey): the FINAL labels land in a scratch
-    * parquet table (the lake pattern — [[Scratch.materialized]]), so
-    * every intermediate round's checkpoint storage is released eagerly
-    * before return and the query leaves ZERO persisted RDDs behind. Stable
-    * keys (dd06/dd08 pass the input dir) let repeat invocations reuse the
-    * result; the default key is unique per call — no reuse, safe for
-    * arbitrary inputs.
+    * parquet table (the lake pattern — [[Scratch.materialized]]), so the
+    * query leaves ZERO persisted RDDs behind. Stable keys (dd06/dd08 pass
+    * the input dir) let repeat invocations reuse the result; the default
+    * key is unique per call — no reuse, safe for arbitrary inputs.
     *
-    * `maxIter` bounds the star-contraction rounds (the guaranteed
-    * O(log² n) kernel); the small-graph propagation attempt is a fixed
-    * [[PropagationRounds]]-round opportunistic prefix that either proves
-    * convergence or hands contraction a label-compressed edge set, so it
-    * neither consumes nor extends the contraction budget.
+    * Integral ids on a graph of at most [[LocalGraph.cap]] edges take the
+    * LOCAL path: one job collects the edges, union-find labels the edge
+    * endpoints on the driver, and the labels are written with the isolated
+    * nodes attached by one aggregate inside the scratch write. Any other
+    * graph runs star contraction; `maxIter` bounds its rounds.
     */
   def connectedComponents(
       nodes: DataFrame, edges: DataFrame,
       scratch: (String, String) = ("cc", java.util.UUID.randomUUID.toString),
       maxIter: Int = 40): DataFrame = {
     // cache peek FIRST: the key is derivable from (tag, key, inputs)
-    // alone, and every propagation round below is an EAGER job — without
-    // this, dd06/tx16/dd13 each re-ran the whole loop and the cache only
-    // saved the final write (r10 review)
+    // alone, and both kernels run eager jobs before the final write
     val cached = Scratch.peek(nodes.sparkSession,
       scratch._1, scratch._2, Seq(nodes, edges))
     if (cached.isDefined) return cached.get
-    // LARGE-STAR / SMALL-STAR contraction (Kiveris et al., "Connected
-    // Components in MapReduce and Beyond"), replacing plain min-label
-    // propagation. Propagation converges in O(component ECCENTRICITY)
-    // rounds — the label wave is a BFS frontier from each component's
-    // minimum, so pointer jumping cannot shortcut it (labels never form
-    // chains: every assigned label is already some frontier minimum).
-    // The r13 30× rehearsal chained rotated embedding copies into
-    // >40-diameter components and dd08 tripped its own non-convergence
-    // guard; star contraction converges in O(log² n) rounds on ANY
-    // topology — the difference between "rounds follow the data's
-    // diameter" and "rounds follow log n" is exactly what a 100 TB corpus
-    // with boilerplate chains demands. Each round: large-star points
-    // every above-minimum neighbor at the neighborhood minimum, small-star
-    // re-hangs the below-self neighbors; both are one groupBy + one join
-    // over a strictly-shrinking directed edge set, truncated per phase so
-    // lineage never compounds. Convergence = the round leaves the edge
-    // multiset untouched (count + order-insensitive hash signature); the
-    // loop then proves its answer with an independent certificate — every
-    // ORIGINAL edge must connect equal labels — so even a signature
-    // collision could not smuggle out wrong clusters.
-    val ids = nodes.select(col("id"))
+    // keyed on nodes+edges: the labels frame has no input files of its
+    // own, so without them a rewritten source would serve stale cluster
+    // ids from the scratch cache
+    def materialize(labels: DataFrame): DataFrame = Scratch.materialized(
+      labels.select(col("id"), col("lab").as("cluster_id")),
+      scratch._1, scratch._2, Seq(nodes, edges))
+    val allIds = nodes.select(col("id"))
       .union(edges.select(col("a").as("id")))
       .union(edges.select(col("b").as("id")))
-      .distinct()
-      .transform(Checkpoints.truncate)
+    val idType = allIds.schema("id").dataType
+    val local =
+      if (LocalGraph.integral(idType)) LocalGraph.collect(edges, "a", "b")
+      else None
+    local match {
+      case Some(g) =>
+        lastKernel = "local"
+        materialize(localLabels(nodes, g, idType))
+      case None =>
+        lastKernel = "contraction"
+        contract(allIds.distinct(), edges, maxIter)(materialize)
+    }
+  }
+
+  /** The local path's (id, lab) for every node. Union-find labels each
+    * endpoint with its component minimum; the nodes in no edge attach in
+    * the caller's scratch write through ONE aggregate, a left join's work
+    * in a single shuffle: each node proposes its own id, each endpoint its
+    * label, and min() keeps the label (never above its node's id). A null
+    * endpoint proposes the null id the distributed id union carries.
+    */
+  private def localLabels(nodes: DataFrame, g: LocalGraph.Graph,
+      idType: org.apache.spark.sql.types.DataType): DataFrame = {
+    val s = nodes.sparkSession
+    val root = LocalGraph.components(g)
+    // the certificate, on the driver: every collected edge joins equal
+    // labels
+    val violations =
+      g.src.indices.count(k => root(g.src(k)) != root(g.dst(k)))
+    if (violations > 0) throw certificateFailure(violations)
+    val labels = LocalGraph.frame(s, ("id", "lab"), g.ids, root.map(g.ids))
+      .select(col("id").cast(idType), col("lab").cast(idType))
+    val nullId =
+      if (g.sawNull) Seq(s.range(1).select(lit(null).cast(idType).as("id"),
+        lit(null).cast(idType).as("lab")))
+      else Nil
+    (nodes.select(col("id"), col("id").as("lab")) +: labels +: nullId)
+      .reduce(_ union _)
+      .groupBy("id").agg(min(col("lab")).as("lab"))
+  }
+
+  private def certificateFailure(violations: Long) = new IllegalStateException(
+    s"connectedComponents certificate failed: $violations original " +
+      "edges connect different labels after convergence")
+
+  /** The distributed path: LARGE-STAR / SMALL-STAR contraction (Kiveris
+    * et al., "Connected Components in MapReduce and Beyond") labels every
+    * id in `allIds` in O(log² n) rounds on ANY topology (min-label
+    * propagation takes O(diameter), and the r13 30× rehearsal chained
+    * copies into >40-diameter components). Each round is one groupBy + one
+    * join per star over a shrinking edge set, truncated per round; it has
+    * converged when the edge multiset's (count, hash) signature stops
+    * changing, and an independent certificate over the ORIGINAL edges
+    * then proves the labels. They are written through `materialize`
+    * before the rounds' checkpoints are released.
+    */
+  private def contract(allIds: DataFrame, edges: DataFrame,
+      maxIter: Int)(materialize: DataFrame => DataFrame): DataFrame = {
+    val ids = allIds.transform(Checkpoints.truncate)
     var star = edges.select(col("a"), col("b"))
       .filter(col("a") =!= col("b"))
       .select(greatest(col("a"), col("b")).as("a"),
@@ -214,188 +166,8 @@ object DedupClusters extends QuerySuite {
         .filter(col("a") =!= col("b"))
         .distinct()
     }
-    // labels over the TOUCHED universe (nodes incident to ≥1 edge) →
-    // labels for EVERY node: isolated nodes keep their own id, attached by
-    // ONE |V|-sized left join paid once at the end — instead of |V|
-    // self-loop rows flowing through every propagation round's join+agg
-    // (the r20 fusion's one touched-code regression: dd06's |V| = corpus
-    // docs vs a few hundred pair endpoints; at lake scale most of the
-    // corpus is in no near-dup pair at all, so per-round frames now track
-    // the PAIR graph, not the corpus).
-    def extendToAll(partial: DataFrame): DataFrame =
-      ids.join(partial, Seq("id"), "left")
-        .select(col("id"), coalesce(col("lab"), col("id")).as("lab"))
-    // the certificate: every ORIGINAL edge connects equal labels. This
-    // implies component-constant labels; with label values always drawn
-    // from member ids and label(u) <= u by construction (both kernels only
-    // ever assign a label that is some member's id and never above the
-    // node's own), the constant is the component minimum. Independent of
-    // each kernel's own convergence test, so neither a signature collision
-    // nor a propagation bug can produce silently-wrong clusters.
-    // `loopLabels` drives the CERTIFICATE joins (it must cover every edge
-    // endpoint — the touched universe suffices: a non-self-loop edge's
-    // endpoints are touched by definition, and an original self-loop can
-    // never violate, so the violation count over touched labels equals
-    // the count over full labels); `fullLabels` (defaults to loopLabels)
-    // is what MATERIALIZES. Splitting the two keeps the |V|-sized
-    // isolated-node extension out of the certificate's two join legs and
-    // out of any checkpoint — it is evaluated exactly once, inside the
-    // scratch write (r21: the first touched-nodes cut paid ~3 extra fixed
-    // jobs at toy scale, visible as dd06 +0.4 s at sf0.1).
-    def certifyAndMaterialize(loopLabels: DataFrame,
-        fullLabels: DataFrame = null): DataFrame = {
-      val la = loopLabels.select(col("id").as("a"), col("lab").as("labA"))
-      val lb = loopLabels.select(col("id").as("b"), col("lab").as("labB"))
-      val violations = edges.select(col("a"), col("b"))
-        .join(la, "a").join(lb, "b")
-        .filter(col("labA") =!= col("labB")).count()
-      if (violations > 0) throw new IllegalStateException(
-        s"connectedComponents certificate failed: $violations original " +
-          "edges connect different labels after convergence")
-      // keyed on nodes+edges: the labels frame itself ends at a
-      // checkpoint (no input files), so without them a rewritten source
-      // would serve stale cluster ids from the scratch cache
-      Scratch.materialized(
-        Option(fullLabels).getOrElse(loopLabels)
-          .select(col("id"), col("lab").as("cluster_id")),
-        scratch._1, scratch._2, Seq(nodes, edges))
-    }
-    // bounded min-label propagation prefix (fast path — see the gate
-    // scaladoc above). Returns Right(labels) when a zero-change round
-    // PROVED convergence, else Left(partial labels from the last round) —
-    // the prefix is never wasted: the caller compresses the edge set
-    // through the partial labels (each node already carries the minimum of
-    // its PropagationRounds-hop neighborhood) before contracting. Every
-    // label round is truncated and released once superseded; `sym` is
-    // released here (only the returned frame survives, and the caller owns
-    // its release).
-    def propagationPrefix(): Either[DataFrame, DataFrame] = {
-      // TOUCHED nodes only: an isolated node's label is provably its own
-      // id in every round (its self-loop min is itself), so the loop
-      // iterates over edge endpoints alone and [[extendToAll]] re-attaches
-      // the isolated majority once at the end (r21; the r20 driver run
-      // read the all-nodes self-loop union as dd06's one regression).
-      // NOT separately checkpointed: both consumers (sym, the round-0
-      // labels) checkpoint immediately, so the endpoints-distinct runs
-      // once inside each of those jobs over the already-checkpointed star
-      // — cheaper than a third checkpoint job of its own at toy scale
-      val touched = star.select(col("a").as("id"))
-        .union(star.select(col("b").as("id")))
-        .distinct()
-      // symmetrized edges PLUS one self-loop per TOUCHED node: a round is
-      // then ONE edge⋈labels join + ONE min-aggregate — the self-loop
-      // carries each node's own label into the min (new = least(old, min
-      // over nbrs)) and guarantees every touched node a group, so the old
-      // third shuffle (the labels-side left join that re-attached nodes
-      // with no neighbor and the old label) is gone. The previous label
-      // still rides through the SAME aggregate, tagged by b = a, so the
-      // changed-count reads the round's own output — exactly the
-      // two-shuffle round the object scaladoc documents (r20 plan audit,
-      // guide §2.4).
-      // sym is LOOP-INVARIANT, so it is hash-partitioned on the join key
-      // ONCE before the checkpoint (checkpoints preserve
-      // outputPartitioning through LogicalRDD): every round's edge⋈labels
-      // join then finds its big side already distributed and inserts no
-      // sym-side exchange — per-round shuffle bytes drop from
-      // O(|E| + |touched|) to the labels side alone, and since each
-      // round's labels frame leaves its min-aggregate hash-partitioned on
-      // the SAME key, the join needs no exchange at all: a round is ONE
-      // shuffle (the aggregate). One-time cost: the repartition itself,
-      // paid once instead of every round (r21; guide §2.4 "share one
-      // exchange" applied across loop iterations).
-      val sym = star.union(star.select(col("b").as("a"), col("a").as("b")))
-        .union(touched.select(col("id").as("a"), col("id").as("b")))
-        .repartition(col("b"))
-        .transform(Checkpoints.truncate)
-      var labels = touched.select(col("id"), col("id").as("lab"))
-        .transform(Checkpoints.truncate)
-      val rounds = scala.collection.mutable.ArrayBuffer[DataFrame](labels)
-      var converged = false
-      var bail = false
-      var prevChanged = Long.MaxValue
-      var round = 0
-      while (!converged && !bail && round < PropagationRounds) {
-        val next = sym.join(labels.withColumnRenamed("id", "b"), "b")
-          .groupBy("a")
-          .agg(min(col("lab")).as("newlab"),
-            max(when(col("b") === col("a"), col("lab"))).as("oldlab"))
-          .select(col("a").as("id"), col("newlab").as("lab"), col("oldlab"))
-          .transform(Checkpoints.truncate)
-        rounds += next
-        // one action per round: the frame is already materialized by the
-        // eager truncate, so the changed-count scan reads checkpoint blocks
-        val changed = next.filter(col("lab") =!= col("oldlab")).count()
-        converged = changed == 0L
-        // geometric-decay gate (r14 ladder): a near-clique graph collapses
-        // its change count by >2x per round (dd08@sf0.1: 330, 77, 30, 9, 4,
-        // 0); a chain-deep graph PLATEAUS (dd08@30x: 33.6k, 27.2k, 25.0k,
-        // 24.3k, ... — each chain keeps one frontier moving forever). Once
-        // the count stops shrinking below 70% of the previous round's,
-        // convergence within any constant budget is hopeless — hand the
-        // partial labels to compression + contraction NOW instead of
-        // burning the rest of the budget on full-edge-set rounds.
-        // cross-multiplied (changed/prevChanged > 0.7): integer division
-        // of small counts would round the threshold to 0 and bail every
-        // tiny graph on its second round. No overflow: counts are bounded
-        // by the node set, itself bounded by the 10M-edge prefix cap.
-        if (!converged && round >= 1 && changed * 10L > prevChanged * 7L)
-          bail = true
-        prevChanged = changed
-        labels = next.select(col("id"), col("lab"))
-        round += 1
-        while (rounds.length > 2) { Checkpoints.release(rounds.remove(0)) }
-      }
-      Checkpoints.release(sym)
-      // the final round's frame is the live result either way; release the
-      // one superseded frame still in the buffer
-      rounds.dropRight(1).foreach(Checkpoints.release)
-      lastPropagationRounds = round
-      if (converged) Right(labels) else Left(labels)
-    }
-    // partial-propagation labels awaiting pull-back through the contraction
-    // result; kept OUT of `cps` (freeSuperseded would evict them mid-loop)
-    // and released in the finally
-    var preLabels: Option[DataFrame] = None
-    val sig0 = signature(star)
-    // the loop frames are O(|touched| + |E|), but the FINAL extendToAll
-    // join and the certificate are |V|-sized and run under the same confs,
-    // so the small-loop gate stays conservative on |V| + |E| — an
-    // edge-sparse corpus with billions of nodes must keep AQE
-    val loopRows = sig0._1 + ids.count()
-    try withSmallLoopConfs(nodes.sparkSession, loopRows) {
-      var sig = sig0
-      lastPropagationRounds = -1 // stays -1 when the cap skips the prefix
-      if (sig._1 <= PropagationEdgeCap) {
-        propagationPrefix() match {
-          case Right(labels) =>
-            cps += labels
-            lastKernel = "propagation"
-            // certificate over the touched labels; the |V|-sized
-            // extension evaluates once, inside the scratch write
-            return certifyAndMaterialize(labels, extendToAll(labels))
-          case Left(partial) =>
-            // compress: collapse every edge to its endpoints' partial
-            // labels. Near-clique components (the common dedup shape)
-            // collapse to single nodes here, so contraction runs on a far
-            // smaller graph; a path/chain barely compresses and simply
-            // proceeds to the O(log² n) kernel as before.
-            preLabels = Some(partial)
-            val la = partial.withColumnsRenamed(
-              Map("id" -> "a", "lab" -> "labA"))
-            val lb = partial.withColumnsRenamed(
-              Map("id" -> "b", "lab" -> "labB"))
-            val compressed = star.join(la, "a").join(lb, "b")
-              .filter(col("labA") =!= col("labB"))
-              .select(greatest(col("labA"), col("labB")).as("a"),
-                least(col("labA"), col("labB")).as("b"))
-              .distinct()
-              .transform(Checkpoints.truncate)
-            cps += compressed
-            star = compressed
-            sig = signature(star)
-        }
-      }
-      lastKernel = "contraction"
+    try {
+      var sig = signature(star)
       var converged = false
       var round = 0
       while (!converged && round < maxIter) {
@@ -416,35 +188,28 @@ object DedupClusters extends QuerySuite {
       // post-convergence the edge set is a forest of stars centered at the
       // component minima: label = star center, own id for centers and
       // isolated nodes. min() tolerates (and the certificate would expose)
-      // any would-be duplicate hanging. With a compressed prefix the
-      // star labels the CONTRACTED universe (the distinct partial labels);
-      // pulling back through preLabels — final(u) = centers(lab(u)) or
-      // lab(u) — is sound because the component minimum m always survives
-      // compression as itself: lab(m) ≤ m and lab values never go below
-      // the component minimum, so lab(m) = m.
+      // any would-be duplicate hanging.
       val centers = star.groupBy("a").agg(min(col("b")).as("lab0"))
-      val labels = (preLabels match {
-        case None =>
-          ids.join(centers, ids("id") === centers("a"), "left")
-            .select(col("id"), coalesce(col("lab0"), col("id")).as("lab"))
-        case Some(pl) =>
-          // pull back through the touched-only partial labels; the
-          // isolated nodes attach in the materialize below (sound: the
-          // component minimum m survives compression as itself —
-          // lab(m) = m — and an isolated node IS its own minimum)
-          pl.join(centers, pl("lab") === centers("a"), "left")
-            .select(pl("id"), coalesce(col("lab0"), pl("lab")).as("lab"))
-      }).transform(Checkpoints.truncate)
+      val labels = ids.join(centers, ids("id") === centers("a"), "left")
+        .select(col("id"), coalesce(col("lab0"), col("id")).as("lab"))
+        .transform(Checkpoints.truncate)
       cps += labels
-      // the None path's labels already span `ids`; the Some path's span
-      // only the touched universe and extend inside the write
-      if (preLabels.isEmpty) certifyAndMaterialize(labels)
-      else certifyAndMaterialize(labels, extendToAll(labels))
+      // the certificate: every ORIGINAL edge connects equal labels. This
+      // implies component-constant labels; with label values always drawn
+      // from member ids and label(u) <= u by construction, the constant is
+      // the component minimum. Independent of the loop's own convergence
+      // test.
+      val la = labels.select(col("id").as("a"), col("lab").as("labA"))
+      val lb = labels.select(col("id").as("b"), col("lab").as("labB"))
+      val violations = edges.select(col("a"), col("b"))
+        .join(la, "a").join(lb, "b")
+        .filter(col("labA") =!= col("labB")).count()
+      if (violations > 0) throw certificateFailure(violations)
+      materialize(labels)
     } finally {
-      preLabels.foreach(Checkpoints.release)
-      // failure paths (non-convergence, a failed certificate or scratch
-      // write) must not strand the round checkpoints in executor memory
-      // for the session's lifetime
+      // failure paths (non-convergence, a failed certificate) must not
+      // strand the round checkpoints in executor memory for the session's
+      // lifetime
       cps.foreach(Checkpoints.release)
       Checkpoints.release(ids)
     }
@@ -557,10 +322,6 @@ object DedupClusters extends QuerySuite {
       |     / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))
       |     >= 0.8)""".stripMargin
 
-  /** Oracle: exact candidate-keyed Jaccard pairs (the proven dd02
-    * equivalent) + recursive-CTE reachability, MIN(reachable) per node.
-    * The Spark path propagates labels instead.
-    */
   /** dd08's reachability oracle over a spliced pairs CTE — a function of
     * the CTE because the pair geometry is corpus-size-dependent on the
     * Spark side (see [[SimilarityOps.nearDupPairsCteSqlFor]]); Verify

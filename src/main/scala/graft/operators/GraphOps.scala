@@ -20,15 +20,16 @@ import graft.QuerySuite
   * associative across partitionings), integer PageRank can. The oracle
   * unrolls the same five iterations as chained CTEs with DuckDB's `//`.
   *
-  * Scale notes (100 TB): each iteration is one edge⋈rank join (shuffle on
-  * src) + one contribution sum (shuffle on dst) over frames bounded by
-  * |edges| — the canonical distributed PageRank shape. The edge table (with
-  * per-src degree baked in) is materialized ONCE via the scratch-table lake
-  * pattern, so iterations re-read a parquet table instead of re-running LSH
-  * candidate generation; [[Checkpoints.truncate]] cuts lineage per
-  * iteration — executor-local by default, reliable `checkpoint` when
-  * `spark.graft.checkpoint.dir` points at shared storage (the multi-node
-  * mode: rounds survive executor loss).
+  * gr01 (PageRank) and gr03 (BFS) each have two paths. A graph of at most
+  * [[LocalGraph.cap]] pairs with integral, non-null ids is collected once
+  * from the shared pair table and iterated on the driver. Any other graph
+  * runs the distributed loop: the symmetrized edge table (with per-src
+  * degree baked in) is materialized ONCE via the scratch-table lake
+  * pattern, and each iteration is one edge⋈rank join + one aggregate over
+  * frames bounded by |edges|, with [[Checkpoints.truncate]] cutting
+  * lineage per iteration — executor-local by default, reliable
+  * `checkpoint` when `spark.graft.checkpoint.dir` points at shared storage
+  * (the multi-node mode: rounds survive executor loss).
   */
 object GraphOps extends QuerySuite {
   private val Iters = 5
@@ -36,39 +37,25 @@ object GraphOps extends QuerySuite {
   private val Base = 150000000L   // (1 - d) × Scale with d = 0.85
   private val MaxHops = 8         // gr03 bounded-BFS horizon
 
+  /** Which path served the LAST cache-miss gr01/gr03 call ("local" |
+    * "distributed"); test observability only.
+    */
+  @volatile private[operators] var lastKernel: String = ""
+
   val queries: Map[String, Q] = ListMap(
     // PageRank over the undirected embedding near-dup graph (dd07's pairs).
     // Nodes = vectors with at least one near-dup edge; rank_scaled is the
     // fixed-point rank after 5 iterations (uniform 1.0 start).
-    "gr01_pagerank" -> ((s, dir) => {
+    "gr01_pagerank" -> ((s, dir) =>
       // pairs from the SHARED gr_pairs scratch (gr02/rec01's table)
-      pageRanks(s, dir, edgesWithDeg(s, dir, sharedPairs(s, dir)))
-        .orderBy("node")
-    }),
+      pageRanks(s, dir, sharedPairs(s, dir)).orderBy("node")),
 
     // Bounded-hop BFS: hop distance (≤ 8) from the graph's canonical
-    // (minimum-id) node — "how far is each doc from the cluster anchor",
-    // the k-hop-neighborhood primitive. Iterative min-relaxation, k-capped:
-    // each round is one edge⋈frontier join + a min-aggregate (2 shuffles,
-    // frames ≤ |edges|), lineage truncated per round like gr01/dd06, with
-    // an early exit once a round reaches no new node (see bfsHops — first
-    // reach IS the true distance, so later rounds are the identity).
-    // Unreached nodes are excluded (null distance).
-    "gr03_bfs_hops" -> ((s, dir) => {
-      // a strict projection of gr01's edge table — sharing the scratch
-      // halves the session's corpus-scale edge materializations (r14
-      // review; the r10 gr_pairs consolidation one level up).
-      // sharedPairs is resolved ONCE and threaded into both consumers:
-      // every call re-plans the LSH candidate tree AND re-runs the
-      // corpus-count job that sizes the broadcast hint
-      // (embeddingNearDupPairs' count()), so the r14 body's second call
-      // put a repeat count job + plan analysis inside the query — the
-      // +0.5 s the r15 instrumented adjudication isolated in gr03's
-      // pre-loop prefix (driver-bench gr03 1.6 → 2.1 s).
-      val pairs = sharedPairs(s, dir)
-      val edges = edgesWithDeg(s, dir, pairs).select("src", "dst")
-      bfsHops(s, dir, edges, pairs).orderBy("node")
-    }),
+    // (minimum-id1) node — "how far is each doc from the cluster anchor",
+    // the k-hop-neighborhood primitive. Unreached nodes are excluded (null
+    // distance). See bfsHops for the two paths.
+    "gr03_bfs_hops" -> ((s, dir) =>
+      bfsHops(s, dir, sharedPairs(s, dir)).orderBy("node")),
 
     // Per-node triangle count over the same near-dup graph — the local
     // clustering signal (a doc whose near-dups are ALSO near-dups of each
@@ -134,13 +121,9 @@ object GraphOps extends QuerySuite {
       SimilarityOps.embeddingNearDupPairs(s, dir)
         .select(col("id1"), col("id2")), "gr_pairs", dir)
 
-  /** The ONE symmetrized (src, dst, deg-of-src) edge table gr01 and gr03
-    * share — gr03 projects (src, dst) off it. The two queries used to
-    * materialize near-identical corpus-scale edge tables under separate
-    * tags ('gr01_edges' + 'gr03_edges'), doubling the session's edge
-    * scratch builds (r14 review). Takes the resolved `pairs` frame rather
-    * than re-deriving it so callers that also need pairs pay the
-    * sharedPairs resolution (count job + LSH plan) exactly once.
+  /** The ONE symmetrized (src, dst, deg-of-src) edge table the distributed
+    * gr01 and gr03 loops share — gr03 projects (src, dst) off it. Built
+    * only when a graph is past the local cap.
     */
   private def edgesWithDeg(s: SparkSession, dir: String,
       pairs: DataFrame): DataFrame = {
@@ -150,114 +133,136 @@ object GraphOps extends QuerySuite {
     Scratch.materialized(sym.join(deg, "src"), "gr01_edges", dir)
   }
 
-  /** gr01's iteration loop behind a scratch-cache PEEK (the rounds are
-    * eager jobs — a cached result must skip them entirely, not just the
-    * final write) and a try/finally that releases the last round's
-    * checkpoint on ANY exit (a failed scratch write used to strand it in
-    * executor storage for the session — r10 review; the
-    * connectedComponents discipline).
+  /** The node id type of a pair table (id1 and id2 widened together). */
+  private def idType(pairs: DataFrame) =
+    pairs.select(col("id1")).union(pairs.select(col("id2")))
+      .schema.head.dataType
+
+  /** `pairs` collected for a local kernel: Some when the ids are integral,
+    * none is null and the pair count is within [[LocalGraph.cap]].
     */
-  private def pageRanks(s: SparkSession, dir: String,
-      edges: DataFrame): DataFrame = {
-    val hit = Scratch.peek(s, "gr01_ranks", dir, Seq(edges))
+  private def localPairs(pairs: DataFrame): Option[LocalGraph.Graph] =
+    if (!LocalGraph.integral(idType(pairs))) None
+    else LocalGraph.collect(pairs, "id1", "id2").filter(!_.sawNull)
+
+  /** gr01 behind a scratch-cache PEEK (a cached result must skip the eager
+    * rounds entirely, not just the final write). `dir` is the cache key;
+    * the result is keyed on `pairs`' files too, so a rewritten pair table
+    * recomputes.
+    */
+  private[operators] def pageRanks(s: SparkSession, dir: String,
+      pairs: DataFrame): DataFrame = {
+    val hit = Scratch.peek(s, "gr01_ranks", dir, Seq(pairs))
     if (hit.isDefined) return hit.get
-    // edges is a materialized parquet scratch table, so the count is a
-    // footer-metadata job — it sizes the small-loop mode (see
-    // DedupClusters.withSmallLoopConfs: partitioning derived from |edges|,
-    // AQE's per-stage job fan-out off for the 5 bounded rounds; a graph
-    // past the cap runs unchanged)
-    DedupClusters.withSmallLoopConfs(s, edges.count()) {
-    // the edge table is LOOP-INVARIANT: hash-partition it on the join key
-    // ONCE and checkpoint (partitioning survives through LogicalRDD), so
-    // none of the [[Iters]] rounds re-shuffles the big side — and each
-    // round's ranks leave their dst-keyed aggregate hash-partitioned on
-    // the SAME key, so the join plans with no exchange at all; a round is
-    // ONE shuffle (the contribution aggregate). Before this every round
-    // re-shuffled the full edge frame from its parquet scan (r21; guide
-    // §2.4 across iterations — the CC prefix gets the same treatment).
-    val pe = edges.repartition(col("src")).transform(Checkpoints.truncate)
-    var ranks = pe.select(col("src").as("node")).distinct()
-      .withColumn("r", lit(Scale))
-    var lastCp: Option[DataFrame] = None
-    try {
-      for (_ <- 1 to Iters) {
-        ranks = pe.join(ranks, pe("src") === ranks("node"))
-          // integer div: exact, order-independent
-          .select(col("dst"), expr("r div deg").as("contrib"))
-          .groupBy("dst")
-          .agg(sum(col("contrib")).as("csum"))
-          .select(col("dst").as("node"),
-            (lit(Base) + expr("(csum * 17) div 20")).as("r"))
-          .transform(Checkpoints.truncate)
-        lastCp.foreach(Checkpoints.release) // superseded round
-        lastCp = Some(ranks)
-      }
-      // final ranks land in a scratch table (lake pattern) so the last
-      // checkpoint's executor storage is released too — the query leaves
-      // zero persisted RDDs behind. Keyed on the edges scratch:
-      // ranks' lineage ends at a checkpoint (no input files), and the
-      // edges path changes whenever the embeddings content does.
-      Scratch.materialized(
-        ranks.select(col("node"), col("r").as("rank_scaled")),
-        "gr01_ranks", dir, Seq(edges))
-    } finally {
-      lastCp.foreach(Checkpoints.release)
-      Checkpoints.release(pe)
-    }
+    def materialize(ranks: DataFrame) = Scratch.materialized(
+      ranks.select(col("node"), col("r").as("rank_scaled")),
+      "gr01_ranks", dir, Seq(pairs))
+    localPairs(pairs) match {
+      case Some(g) =>
+        lastKernel = "local"
+        materialize(LocalGraph.frame(s, ("node", "r"), g.ids,
+          LocalGraph.pageRank(g, Iters, Scale, Base))
+          .select(col("node").cast(idType(pairs)), col("r")))
+      case None =>
+        lastKernel = "distributed"
+        val edges = edgesWithDeg(s, dir, pairs)
+        // the edge table is LOOP-INVARIANT: hash-partition it on the join
+        // key ONCE and checkpoint (partitioning survives through
+        // LogicalRDD), so none of the [[Iters]] rounds re-shuffles the big
+        // side — and each round's ranks leave their dst-keyed aggregate
+        // hash-partitioned on the SAME key, so the join plans with no
+        // exchange at all; a round is ONE shuffle (the contribution
+        // aggregate).
+        val pe = edges.repartition(col("src")).transform(Checkpoints.truncate)
+        var ranks = pe.select(col("src").as("node")).distinct()
+          .withColumn("r", lit(Scale))
+        var lastCp: Option[DataFrame] = None
+        try {
+          for (_ <- 1 to Iters) {
+            ranks = pe.join(ranks, pe("src") === ranks("node"))
+              // integer div: exact, order-independent
+              .select(col("dst"), expr("r div deg").as("contrib"))
+              .groupBy("dst")
+              .agg(sum(col("contrib")).as("csum"))
+              .select(col("dst").as("node"),
+                (lit(Base) + expr("(csum * 17) div 20")).as("r"))
+              .transform(Checkpoints.truncate)
+            lastCp.foreach(Checkpoints.release) // superseded round
+            lastCp = Some(ranks)
+          }
+          // final ranks land in a scratch table (lake pattern) so the last
+          // checkpoint's executor storage is released too — the query
+          // leaves zero persisted RDDs behind
+          materialize(ranks)
+        } finally {
+          lastCp.foreach(Checkpoints.release)
+          Checkpoints.release(pe)
+        }
     }
   }
 
-  /** gr03's relaxation loop — same peek + finally discipline as gr01.
-    * Early exit (r20): synchronous unit-weight relaxation from a single
-    * source assigns every node its TRUE distance the first time it is
-    * reached (a neighbor of a distance-d node can only propose ≥ d), so
-    * once a round reaches no NEW node the frontier is empty and every
-    * later round is the identity — the reached-count convergence check is
-    * one footer-cheap count on the round's own checkpoint, and the
-    * 8-round horizon stays the upper bound, so results are unchanged on
-    * any graph while a diameter-3 near-dup component stops paying 5
-    * idempotent rounds of join+agg+checkpoint jobs.
+  /** gr03's bounded BFS from the minimum `id1` — same peek + two paths as
+    * gr01. The distributed path is synchronous unit-weight relaxation, one
+    * edge⋈frontier join + min-aggregate per round, with an early exit: a
+    * node's TRUE distance is assigned the first time it is reached (a
+    * neighbor of a distance-d node can only propose ≥ d), so once a round
+    * reaches no NEW node every later round is the identity. The 8-round
+    * horizon stays the upper bound, so both paths return every node within
+    * [[MaxHops]] of the source.
     */
-  private def bfsHops(s: SparkSession, dir: String,
-      edges: DataFrame, pairs: DataFrame): DataFrame = {
-    val hit = Scratch.peek(s, "gr03_hops", dir, Seq(edges))
+  private[operators] def bfsHops(s: SparkSession, dir: String,
+      pairs: DataFrame): DataFrame = {
+    val hit = Scratch.peek(s, "gr03_hops", dir, Seq(pairs))
     if (hit.isDefined) return hit.get
-    DedupClusters.withSmallLoopConfs(s, edges.count()) {
-    // loop-invariant edge frame pre-partitioned on the join key, like
-    // pageRanks above: no per-round edge shuffle
-    val pe = edges.select(col("src"), col("dst"))
-      .repartition(col("src")).transform(Checkpoints.truncate)
-    val srcDf = pairs.agg(min(col("id1")).as("s"))
-    var dist = pe.select(col("src").as("node")).distinct()
-      .crossJoin(broadcast(srcDf))
-      .select(col("node"),
-        when(col("node") === col("s"), 0L).as("h"))
-    var lastCp: Option[DataFrame] = None
-    try {
-      var reached = -1L
-      var hops = 0
-      var frontierOpen = true
-      while (frontierOpen && hops < MaxHops) {
-        val prop = pe.join(dist, pe("src") === dist("node"))
-          .filter(col("h").isNotNull)
-          .select(col("dst").as("node"), (col("h") + 1).as("h"))
-        dist = dist.union(prop).groupBy("node").agg(min("h").as("h"))
-          .transform(Checkpoints.truncate)
-        lastCp.foreach(Checkpoints.release)
-        lastCp = Some(dist)
-        val nowReached = dist.filter(col("h").isNotNull).count()
-        frontierOpen = nowReached != reached
-        reached = nowReached
-        hops += 1
-      }
-      Scratch.materialized(
-        dist.filter(col("h").isNotNull)
-          .select(col("node"), col("h").cast("int").as("hops")),
-        "gr03_hops", dir, Seq(edges))
-    } finally {
-      lastCp.foreach(Checkpoints.release)
-      Checkpoints.release(pe)
-    }
+    def materialize(dist: DataFrame) = Scratch.materialized(
+      dist.filter(col("h").isNotNull)
+        .select(col("node"), col("h").cast("int").as("hops")),
+      "gr03_hops", dir, Seq(pairs))
+    localPairs(pairs) match {
+      case Some(g) =>
+        lastKernel = "local"
+        // the source is min(id1): ids are sorted, so the smallest index
+        val hops =
+          if (g.src.isEmpty) Array.empty[Int]
+          else LocalGraph.bfs(g, g.src.min, MaxHops)
+        val reached = hops.indices.filter(hops(_) >= 0).toArray
+        materialize(LocalGraph.frame(s, ("node", "h"),
+          reached.map(g.ids), reached.map(hops(_).toLong))
+          .select(col("node").cast(idType(pairs)), col("h")))
+      case None =>
+        lastKernel = "distributed"
+        // loop-invariant edge frame pre-partitioned on the join key, like
+        // pageRanks above: no per-round edge shuffle
+        val pe = edgesWithDeg(s, dir, pairs).select(col("src"), col("dst"))
+          .repartition(col("src")).transform(Checkpoints.truncate)
+        val srcDf = pairs.agg(min(col("id1")).as("s"))
+        var dist = pe.select(col("src").as("node")).distinct()
+          .crossJoin(broadcast(srcDf))
+          .select(col("node"),
+            when(col("node") === col("s"), 0L).as("h"))
+        var lastCp: Option[DataFrame] = None
+        try {
+          var reached = -1L
+          var hops = 0
+          var frontierOpen = true
+          while (frontierOpen && hops < MaxHops) {
+            val prop = pe.join(dist, pe("src") === dist("node"))
+              .filter(col("h").isNotNull)
+              .select(col("dst").as("node"), (col("h") + 1).as("h"))
+            dist = dist.union(prop).groupBy("node").agg(min("h").as("h"))
+              .transform(Checkpoints.truncate)
+            lastCp.foreach(Checkpoints.release)
+            lastCp = Some(dist)
+            val nowReached = dist.filter(col("h").isNotNull).count()
+            frontierOpen = nowReached != reached
+            reached = nowReached
+            hops += 1
+          }
+          materialize(dist)
+        } finally {
+          lastCp.foreach(Checkpoints.release)
+          Checkpoints.release(pe)
+        }
     }
   }
 

@@ -75,15 +75,10 @@ object Scratch {
     // first caller computes, concurrent same-key callers block on get().
     val task = scratchCache.computeIfAbsent(k, _ => new FutureTask[String](
       () => {
-        val root = new Path(s.conf.getOption("spark.graft.scratch.dir")
-          .getOrElse(System.getProperty("java.io.tmpdir")))
-        val p = new Path(root, s"graft_${tag}_${java.util.UUID.randomUUID}")
-          .toString
-        // register BEFORE the write: a failed/interrupted write would
+        // registered BEFORE the write: a failed/interrupted write would
         // otherwise leave a corpus-sized partial dir no cleanup path knows
         // about (retries mint a fresh UUID, permanently orphaning it)
-        hadoopConf.compareAndSet(null, s.sparkContext.hadoopConfiguration)
-        scratchDirs.add(p)
+        val p = newDir(s, tag)
         val t0 = System.nanoTime()
         df.write.mode("overwrite").parquet(p)
         buildSeconds.merge(tag, (System.nanoTime() - t0) / 1e9,
@@ -101,6 +96,19 @@ object Scratch {
           throw e.getCause
       }
     ParquetRead(s, path)
+  }
+
+  /** A fresh `graft_<tag>_<uuid>` path under the scratch root, enrolled
+    * in [[clear]] and the shutdown hook before anything is written there.
+    */
+  private[graft] def newDir(s: SparkSession, tag: String): String = {
+    val root = new Path(s.conf.getOption("spark.graft.scratch.dir")
+      .getOrElse(System.getProperty("java.io.tmpdir")))
+    val p = new Path(root, s"graft_${tag}_${java.util.UUID.randomUUID}")
+      .toString
+    hadoopConf.compareAndSet(null, s.sparkContext.hadoopConfiguration)
+    scratchDirs.add(p)
+    p
   }
 
   /** Cache PEEK for iterative operators: the scratch frame the eventual

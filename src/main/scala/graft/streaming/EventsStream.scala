@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{QuerySuite, Tables}
-import graft.operators.LakeOps
+import graft.operators.{LakeOps, Scratch}
 
 /** Structured Streaming over the `events` table (SURVEY §2.2 streaming row,
   * §7.1 M4). The reference's "vigilante" daily poll (`READme.md:7-9`) is a
@@ -477,12 +477,19 @@ object EventsStream extends QuerySuite {
 
   /** Cloned session with the small-state shuffle override (see
     * [[runStream]] doc: query-scoped via `newSession`, never
-    * session-global).
+    * session-global), AQE off (streaming turns it off for every query
+    * anyway, with one WARN per query when it is left on) and a checkpoint
+    * root of its own under the scratch root, where each query checkpoints
+    * under its sink name or a fresh UUID instead of in a temporary dir
+    * Spark warns about.
     */
   private def clonedSession(
       s: SparkSession, extraConfs: Map[String, String]): SparkSession = {
     val ss = s.newSession()
     ss.conf.set("spark.sql.shuffle.partitions", "4")
+    ss.conf.set("spark.sql.adaptive.enabled", "false")
+    ss.conf.set("spark.sql.streaming.checkpointLocation",
+      Scratch.newDir(ss, "stream_cp"))
     extraConfs.foreach { case (k, v) => ss.conf.set(k, v) }
     ss
   }

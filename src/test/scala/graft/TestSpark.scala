@@ -17,13 +17,9 @@ object TestSpark {
       java.nio.file.Files.createTempDirectory("graft-wh").toString)
     .getOrCreate()
 
-  spark.sparkContext.setLogLevel("WARN")
-  // unpersisting a localCheckpoint'ed RDD logs "lineage has been truncated"
-  // at WARN, a known consequence of the Checkpoints default; repeated per
-  // iterative round it pushed failing tests' summaries out of the log tail
-  org.apache.logging.log4j.core.config.Configurator.setLevel(
-    "org.apache.spark.rdd.MapPartitionsRDD",
-    org.apache.logging.log4j.Level.ERROR)
+  // expected-condition WARNs repeated per round or query pushed failing
+  // tests' summaries out of the log tail
+  QuietLog(spark)
 
   val sf0001 = "/root/testdata/sf0.001"
 }

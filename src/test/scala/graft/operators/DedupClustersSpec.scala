@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -9,15 +9,35 @@ class DedupClustersSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
+  private def rows(df: DataFrame): Seq[Row] =
+    df.collect().toSeq.sortBy(_.toString)
+
+  /** Components on the local path (default cap) and on star contraction
+    * (cap forced to 0): each call must be served by that kernel, and both
+    * must return the same schema and rows, which are returned.
+    */
+  private def bothPaths(nodes: DataFrame, edges: DataFrame): Seq[Row] = {
+    val local = DedupClusters.connectedComponents(nodes, edges)
+    assert(DedupClusters.lastKernel === "local")
+    val dist = LocalGraph.withCap(0)(
+      DedupClusters.connectedComponents(nodes, edges))
+    assert(DedupClusters.lastKernel === "contraction")
+    assert(local.schema === dist.schema)
+    val got = rows(local)
+    assert(got === rows(dist))
+    got
+  }
+
+  private def labels(got: Seq[Row]): Map[Long, Long] =
+    got.map(r => r.getLong(0) -> r.getLong(1)).toMap
+
   test("connected components: chain, triangle, singleton") {
-    // chain 1-2-3-4 (diameter 3 — needs >1 propagation round),
+    // chain 1-2-3-4 (diameter 3), 
     // triangle 10-11-12, singleton 99
     val nodes = Seq(1L, 2L, 3L, 4L, 10L, 11L, 12L, 99L).toDF("id")
     val edges = Seq((2L, 3L), (1L, 2L), (3L, 4L),
       (10L, 11L), (11L, 12L), (10L, 12L)).toDF("a", "b")
-    val got = DedupClusters.connectedComponents(nodes, edges)
-      .as[(Long, Long)].collect().toMap
-    assert(got === Map(
+    assert(labels(bothPaths(nodes, edges)) === Map(
       1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L, 12L -> 10L,
       99L -> 99L))
@@ -25,32 +45,28 @@ class DedupClustersSpec extends AnyFunSuite {
 
   test("edge endpoints missing from the node set still get full labels") {
     // nodes covers only node 1; the 1-2-3 chain reaches 2 and 3 through
-    // edges alone. A first-seen node has no own row, so its null oldLab
-    // must COUNT as changed — the old comparison returned null and the
-    // loop converged one round early, silently dropping node 3 (r10
-    // review)
+    // edges alone, and both kernels must label them (r10 review: a loop
+    // that converged one round early silently dropped node 3)
     val nodes = Seq(1L).toDF("id")
     val edges = Seq((1L, 2L), (2L, 3L)).toDF("a", "b")
-    val got = DedupClusters.connectedComponents(nodes, edges)
-      .as[(Long, Long)].collect().toMap
-    assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
+    assert(labels(bothPaths(nodes, edges)) === Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
   }
 
   test("convergence within maxIter is accepted; a genuinely unconverged exit throws") {
-    // chain 0..15 (diameter 15): the propagation prefix bails after two
-    // rounds (a path's change count plateaus — the geometric-decay gate),
-    // so star contraction runs over the prefix-compressed path 0..13 —
-    // which needs 4 improving rounds + the stability-detection lap.
-    // maxIter bounds ONLY the contraction rounds (the prefix is a bounded
-    // constant), so 5 passes and 4 throws.
+    // chain 0..15 (diameter 15) on star contraction (cap forced to 0):
+    // maxIter bounds the contraction rounds, which need 4 improving rounds
+    // + the stability-detection lap, so 5 passes and 4 throws
     val nodes = (0L to 15L).toDF("id")
     val edges = (0L to 14L).map(i => (i, i + 1)).toDF("a", "b")
-    val ok = DedupClusters.connectedComponents(nodes, edges, maxIter = 5)
-      .as[(Long, Long)].collect().toMap
-    assert(ok.values.toSet === Set(0L))
-    // four rounds reach the star but cannot also certify stability
-    intercept[IllegalStateException] {
-      DedupClusters.connectedComponents(nodes, edges, maxIter = 4).collect()
+    LocalGraph.withCap(0) {
+      val ok = DedupClusters.connectedComponents(nodes, edges,
+        maxIter = 5).as[(Long, Long)].collect().toMap
+      assert(ok.values.toSet === Set(0L))
+      // one round fewer reaches the star but cannot also certify stability
+      intercept[IllegalStateException] {
+        DedupClusters.connectedComponents(nodes, edges,
+          maxIter = 4).collect()
+      }
     }
   }
 
@@ -62,80 +78,44 @@ class DedupClustersSpec extends AnyFunSuite {
     // could NOT close it: min-propagation labels never chain — every
     // assigned label is already a frontier minimum — so rounds follow
     // eccentricity regardless.) Large-star/small-star contraction must
-    // converge within the default budget, labels still exact.
+    // converge within the default budget, and the local union-find must
+    // return the same exact labels.
     val n = 4096
     val nodes = (0L until n.toLong).toDF("id")
     val edges = (0L until (n - 1).toLong).map(i => (i, i + 1)).toDF("a", "b")
-    val got = DedupClusters.connectedComponents(nodes, edges)
-      .as[(Long, Long)].collect()
+    val got = bothPaths(nodes, edges)
     assert(got.length === n)
-    assert(got.forall(_._2 === 0L), "every node must reach the path's min id")
+    assert(got.forall(_.getLong(1) === 0L), "every node must reach the path's min id")
   }
 
-  test("fast path: shallow graphs served by propagation, deep ones by contraction (r14)") {
-    // near-clique (diameter 2) — the shape real near-dup graphs have:
-    // propagation closes it within the fixed prefix budget
-    val shallow = Seq((1L, 2L), (1L, 3L), (2L, 3L), (2L, 4L)).toDF("a", "b")
-    val got = DedupClusters.connectedComponents(
-      (1L to 4L).toDF("id"), shallow)
-      .as[(Long, Long)].collect().toMap
-    assert(got.values.toSet === Set(1L))
-    assert(DedupClusters.lastKernel === "propagation")
-    // 64-node path (diameter 63): the prefix cannot converge within its
-    // fixed budget, so the answer must come from star contraction over the
-    // label-compressed edges — rounds follow log n, never the data's
-    // diameter (the r13 30x scale property)
+  test("the default cap serves small graphs locally; a cap of 0 runs contraction") {
+    // near-clique (diameter 2), the shape real near-dup graphs have, and a
+    // 64-node path (diameter 63): both are far below the default cap, so
+    // union-find serves them, and each gives the same labels on star
+    // contraction, whose rounds follow log n, not the diameter
+    val shallow = bothPaths((1L to 4L).toDF("id"),
+      Seq((1L, 2L), (1L, 3L), (2L, 3L), (2L, 4L)).toDF("a", "b"))
+    assert(shallow.map(_.getLong(1)).toSet === Set(1L))
     val n = 64
-    val deep = DedupClusters.connectedComponents(
-      (0L until n.toLong).toDF("id"),
+    val deep = bothPaths((0L until n.toLong).toDF("id"),
       (0L until (n - 1).toLong).map(i => (i, i + 1)).toDF("a", "b"))
-      .as[(Long, Long)].collect()
-    assert(deep.length === n && deep.forall(_._2 === 0L))
-    assert(DedupClusters.lastKernel === "contraction")
+    assert(deep.length === n && deep.forall(_.getLong(1) === 0L))
   }
 
-  test("welded clique+chain: the decay gate bails early and both kernels stay exact (r14 verdict #5)") {
-    // The fast-path constants were measured on two PURE topologies (clique
-    // halves its change count; chain plateaus). The mixed shape — a
-    // 16-clique welded at node 15 to a chain tail — interleaves both
-    // signals: round 1 is clique-dominated (big collapse), later rounds are
-    // chain-dominated (plateau). The gate must still fire on the plateau,
-    // and the compressed handoff must still label everything with the
-    // component minimum.
+  test("welded clique+chain: both paths label every node with the component minimum") {
+    // a 16-clique welded at node 15 to a chain tail mixes the two pure
+    // topologies (clique and chain); with a long (40) and a short (2)
+    // tail, both kernels must label everything with the component minimum
     val cliqueEdges = for {
       i <- 0L until 16L; j <- (i + 1) until 16L
     } yield (i, j)
-    def welded(tail: Int) = {
+    for (tail <- Seq(40, 2)) {
       val chain = (15L until (15L + tail)).map(i => (i, i + 1))
       val n = 16 + tail
-      ((0L until n.toLong).toDF("id"),
+      val got = bothPaths((0L until n.toLong).toDF("id"),
         (cliqueEdges ++ chain).toDF("a", "b"))
+      assert(got.length === n && got.forall(_.getLong(1) === 0L))
     }
-    // LONG tail (40): changes go ~55 (clique+wave) -> ~40 -> plateau; the
-    // gate must bail within the first few rounds — a silent full-budget
-    // burn (8 rounds of full-edge-set joins) is the regression this pins —
-    // and the answer must come from contraction over the compressed edges.
-    val (nL, eL) = welded(40)
-    val gotL = DedupClusters.connectedComponents(nL, eL)
-      .as[(Long, Long)].collect()
-    assert(gotL.length === 56 && gotL.forall(_._2 === 0L))
-    assert(DedupClusters.lastKernel === "contraction")
-    assert(DedupClusters.lastPropagationRounds >= 2 &&
-      DedupClusters.lastPropagationRounds <= 3,
-      s"decay gate must bail early on the welded shape, not burn the " +
-        s"full prefix budget (ran ${DedupClusters.lastPropagationRounds})")
-    // SHORT tail (2): the wave closes the whole graph before the plateau
-    // can trip the gate — propagation proves convergence and serves.
-    val (nS, eS) = welded(2)
-    val gotS = DedupClusters.connectedComponents(nS, eS)
-      .as[(Long, Long)].collect()
-    assert(gotS.length === 18 && gotS.forall(_._2 === 0L))
-    assert(DedupClusters.lastKernel === "propagation")
-    // exactly 4 rounds, deterministic (changed: 17, 2, 1, 0 — the clique
-    // collapses in one, the 2-tail drains one node per round, the zero
-    // round proves convergence); a <= PropagationRounds bound would be
-    // tautological — the loop guard already enforces it (r15 review)
-    assert(DedupClusters.lastPropagationRounds === 4)
   }
 
   test("property: components equal driver-side union-find on random graphs") {
@@ -159,16 +139,66 @@ class DedupClustersSpec extends AnyFunSuite {
           // min id of the component
           ids.filter(j => find(j) == find(i)).min
         }).toMap
-        val got = DedupClusters.connectedComponents(
+        labels(bothPaths(
           ids.toDF("id"),
           if (es.isEmpty) Seq.empty[(Long, Long)].toDF("a", "b")
-          else es.toDF("a", "b"))
-          .as[(Long, Long)].collect().toMap
-        got == expected
+          else es.toDF("a", "b"))) == expected
     }
     val res = SCTest.check(
       SCTest.Parameters.default.withMinSuccessfulTests(15), prop)
     assert(res.passed, res.status.toString)
+  }
+
+  test("both paths: an IntegerType id column keeps its type") {
+    val got = bothPaths(Seq(1, 2, 3, 7).toDF("id"),
+      Seq((3, 2), (2, 1)).toDF("a", "b"))
+    assert(got.map(r => r.getInt(0) -> r.getInt(1)).toMap ===
+      Map(1 -> 1, 2 -> 1, 3 -> 1, 7 -> 7))
+    val local = DedupClusters.connectedComponents(Seq(1, 2).toDF("id"),
+      Seq((1, 2)).toDF("a", "b"))
+    assert(local.schema.map(_.dataType) ===
+      Seq(org.apache.spark.sql.types.IntegerType,
+        org.apache.spark.sql.types.IntegerType))
+  }
+
+  test("both paths: an empty edge set labels every node with itself") {
+    val got = bothPaths(Seq(5L, 3L, 9L).toDF("id"),
+      Seq.empty[(Long, Long)].toDF("a", "b"))
+    assert(labels(got) === Map(3L -> 3L, 5L -> 5L, 9L -> 9L))
+  }
+
+  test("both paths: an edge with a null endpoint is no edge; its null id " +
+    "keeps a null label") {
+    val edges = Seq[(java.lang.Long, java.lang.Long)](
+      (1L, 2L), (3L, null), (null, 4L), (5L, 5L)).toDF("a", "b")
+    val got = bothPaths(Seq(1L, 2L, 6L).toDF("id"), edges)
+    assert(got.map(r =>
+      Option(r.get(0)).map(_.asInstanceOf[Long]) ->
+        Option(r.get(1)).map(_.asInstanceOf[Long])).toMap ===
+      Map(Some(1L) -> Some(1L), Some(2L) -> Some(1L), Some(3L) -> Some(3L),
+        Some(4L) -> Some(4L), Some(5L) -> Some(5L), Some(6L) -> Some(6L),
+        None -> None))
+  }
+
+  test("local components over a parquet-backed graph run in 3 jobs") {
+    // one job collects the edges; the scratch write is the other two (the
+    // aggregate that attaches the isolated nodes, and the write itself)
+    val d = java.nio.file.Files.createTempDirectory("cc_jobs").toString
+    try {
+      Seq(1L, 2L, 3L, 4L, 10L, 11L, 99L).toDF("id")
+        .coalesce(1).write.parquet(s"$d/nodes")
+      Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("a", "b")
+        .coalesce(1).write.parquet(s"$d/edges")
+      // read outside the count: schema inference is a job of its own
+      val (nodes, edges) =
+        (spark.read.parquet(s"$d/nodes"), spark.read.parquet(s"$d/edges"))
+      val (got, jobs) = graft.ReadJobs.jobsDuring(
+        DedupClusters.connectedComponents(nodes, edges))
+      assert(DedupClusters.lastKernel === "local")
+      assert(jobs === 3)
+      assert(labels(rows(got)) === Map(1L -> 1L, 2L -> 1L, 3L -> 1L,
+        4L -> 1L, 10L -> 10L, 11L -> 10L, 99L -> 99L))
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d))
   }
 
   test("dd06 invariants: every doc labeled, labels are component minima") {

@@ -70,12 +70,17 @@ class DedupSpec extends AnyFunSuite {
     // gr01, gr03, dd06 and dd08 localCheckpoint each round; superseded
     // rounds must be unpersisted eagerly and the final result lands in a
     // scratch table, so NOTHING stays in executor storage after the action
-    // returns
+    // returns. The cap is forced to 0 and the results' scratch cleared, so
+    // the distributed rounds run rather than the local kernels or a cache
+    // hit.
     val sf = graft.TestSpark.sf0001
-    GraphOps.queries("gr01_pagerank")(spark, sf).collect()
-    GraphOps.queries("gr03_bfs_hops")(spark, sf).collect()
-    DedupClusters.queries("dd06_dedup_clusters")(spark, sf).collect()
-    DedupClusters.queries("dd08_semantic_clusters")(spark, sf).collect()
+    Scratch.clear(t => t.startsWith("gr0") || t.endsWith("_cc"))
+    LocalGraph.withCap(0) {
+      GraphOps.queries("gr01_pagerank")(spark, sf).collect()
+      GraphOps.queries("gr03_bfs_hops")(spark, sf).collect()
+      DedupClusters.queries("dd06_dedup_clusters")(spark, sf).collect()
+      DedupClusters.queries("dd08_semantic_clusters")(spark, sf).collect()
+    }
     assert(spark.sparkContext.getPersistentRDDs.isEmpty,
       spark.sparkContext.getPersistentRDDs.toString)
   }

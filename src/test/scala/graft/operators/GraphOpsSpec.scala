@@ -2,6 +2,7 @@ package graft.operators
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -10,13 +11,10 @@ class GraphOpsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val dir = TestSpark.sf0001
 
-  test("gr01 equals a driver-side fixed-point PageRank, bit for bit") {
-    // reference implementation: same integer math, sequential — any
-    // partial-agg reordering in the distributed path must not show
-    val pairs = SimilarityOps.embeddingNearDupPairs(spark, dir)
-      .select("id1", "id2").collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    assert(pairs.nonEmpty, "test graph is empty")
+  /** Reference PageRank: same integer math, sequential, over the pair
+    * multiset taken in both directions.
+    */
+  private def referenceRanks(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
     val edges = pairs.flatMap { case (a, b) => Seq((a, b), (b, a)) }
     val deg = edges.groupBy(_._1).map { case (n, es) => n -> es.length.toLong }
     var rank = deg.keys.map(_ -> 1000000000L).toMap
@@ -28,9 +26,91 @@ class GraphOpsSpec extends AnyFunSuite {
       }
       rank = deg.keys.map(n => n -> (150000000L + contrib(n) * 17 / 20)).toMap
     }
-    val got = GraphOps.queries("gr01_pagerank")(spark, dir)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(got == rank)
+    rank
+  }
+
+  /** `run` on the local path (default cap) and on the distributed loop
+    * (cap forced to 0): each call must be served by that path, and both
+    * must return the same schema and rows, which are returned. `run` must
+    * miss the scratch cache each time.
+    */
+  private def bothPaths(run: => DataFrame): Seq[Row] = {
+    // collected at once: the next run may clear this run's scratch table
+    def served(kernel: String, df: DataFrame) = {
+      assert(GraphOps.lastKernel === kernel)
+      (df.schema, df.collect().toSeq.sortBy(_.toString))
+    }
+    val local = served("local", run)
+    assert(served("distributed", LocalGraph.withCap(0)(run)) === local)
+    local._2
+  }
+
+  /** A gr01/gr03 query on sf0.001, past any cached result. */
+  private def query(name: String): DataFrame = {
+    Scratch.clear(_.startsWith("gr0"))
+    GraphOps.queries(name)(spark, dir)
+  }
+
+  private def fresh = java.util.UUID.randomUUID.toString
+
+  test("gr01 equals a driver-side fixed-point PageRank, bit for bit") {
+    // any partial-agg reordering in the distributed path must not show
+    val pairs = SimilarityOps.embeddingNearDupPairs(spark, dir)
+      .select("id1", "id2").collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+    assert(pairs.nonEmpty, "test graph is empty")
+    val got = bothPaths(query("gr01_pagerank"))
+      .map(r => (r.getLong(0), r.getLong(1))).toMap
+    assert(got == referenceRanks(pairs.toSeq))
+  }
+
+  test("gr03: both paths return the same hops on sf0.001") {
+    val got = bothPaths(query("gr03_bfs_hops"))
+      .map(r => (r.getLong(0), r.getInt(1)))
+    val src = SimilarityOps.embeddingNearDupPairs(spark, dir)
+      .agg(org.apache.spark.sql.functions.min("id1")).head().getLong(0)
+    assert(got.contains((src, 0)) && got.length > 1)
+    assert(got.forall(_._2 <= 8))
+  }
+
+  test("gr01 and gr03 kernels: both paths agree on duplicate pairs, an " +
+    "IntegerType id column and an empty pair set") {
+    val s = spark
+    import s.implicits._
+    // duplicate pairs and a self-loop: PageRank sums over the multiset
+    val dup = Seq((1L, 2L), (1L, 2L), (2L, 3L), (3L, 3L), (7L, 8L))
+    val ranks = bothPaths(GraphOps.pageRanks(spark, fresh, dup.toDF("id1", "id2")))
+      .map(r => (r.getLong(0), r.getLong(1))).toMap
+    assert(ranks == referenceRanks(dup))
+    val hops = bothPaths(GraphOps.bfsHops(spark, fresh, dup.toDF("id1", "id2")))
+      .map(r => (r.getLong(0), r.getInt(1)))
+    assert(hops.toMap === Map(1L -> 0, 2L -> 1, 3L -> 2))
+    // an IntegerType id column keeps its type on both paths
+    val ints = Seq((3, 1), (1, 2)).toDF("id1", "id2")
+    val intHops = bothPaths(GraphOps.bfsHops(spark, fresh, ints))
+    // the source is min(id1) = 1, not the first pair's id1
+    assert(intHops.map(r => r.getInt(0) -> r.getInt(1)).toMap ===
+      Map(1 -> 0, 3 -> 1, 2 -> 1))
+    assert(bothPaths(GraphOps.pageRanks(spark, fresh, ints))
+      .map(_.getInt(0)).toSet === Set(1, 2, 3))
+    // an empty pair set ranks and reaches nothing
+    val empty = Seq.empty[(Long, Long)].toDF("id1", "id2")
+    assert(bothPaths(GraphOps.pageRanks(spark, fresh, empty)).isEmpty)
+    assert(bothPaths(GraphOps.bfsHops(spark, fresh, empty)).isEmpty)
+  }
+
+  test("gr01 and gr03 kernels: a pair with a null endpoint takes the " +
+    "distributed path") {
+    val s = spark
+    import s.implicits._
+    val pairs = Seq[(java.lang.Long, java.lang.Long)](
+      (1L, 2L), (2L, null)).toDF("id1", "id2")
+    for (kernel <- Seq(GraphOps.pageRanks _, GraphOps.bfsHops _)) {
+      val got = kernel(spark, fresh, pairs).collect().map(_.toString).sorted
+      assert(GraphOps.lastKernel === "distributed")
+      assert(got === LocalGraph.withCap(0)(kernel(spark, fresh, pairs))
+        .collect().map(_.toString).sorted)
+    }
   }
 
   test("gr01 ranks are positive and higher-degree hubs beat leaves") {
@@ -40,7 +120,10 @@ class GraphOpsSpec extends AnyFunSuite {
 
   test("reliable-checkpoint mode (spark.graft.checkpoint.dir): identical results") {
     // the multi-node mode: rounds checkpoint to a shared dir and survive
-    // executor loss; the result must be bit-identical to the local mode
+    // executor loss; the result must be bit-identical to the local mode.
+    // The cap is forced to 0 so the distributed rounds run and checkpoint.
+    LocalGraph.withCap(0) {
+    Scratch.clear(_.startsWith("gr01_"))
     val local = GraphOps.queries("gr01_pagerank")(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     // clear gr01's scratch so the second run actually re-iterates instead
@@ -76,6 +159,7 @@ class GraphOpsSpec extends AnyFunSuite {
       spark.conf.unset("spark.graft.checkpoint.dir")
       Scratch.clear(_.startsWith("gr01_"))
       org.apache.commons.io.FileUtils.deleteQuietly(ckptDir.toFile)
+    }
     }
   }
 

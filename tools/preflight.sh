@@ -18,6 +18,17 @@ SINCE="${1:-$(git log --grep 'end-of-round snapshot' -n1 --format=%H)}"
 [ -n "$SINCE" ] || SINCE=HEAD~1
 echo "preflight: diffing against $SINCE"
 
+# Operators run inside a caller's shared session, so none may change its
+# conf at runtime: a concurrent query on the same session would plan under
+# the changed values. Cloned sessions (graft.streaming) are outside this
+# directory.
+echo "== gate 0: no session-conf mutation in graft.operators =="
+if grep -rnE 'conf\.(set|unset)\(' src/main/scala/graft/operators; then
+  echo "PREFLIGHT FAIL: conf.set/conf.unset under src/main/scala/graft/operators"
+  exit 1
+fi
+echo "operators conf OK"
+
 echo "== gate 1: compile + Test/compile =="
 sbt -batch compile Test/compile >/tmp/preflight_compile.log 2>&1 || {
   tail -30 /tmp/preflight_compile.log; echo "PREFLIGHT FAIL: compile"; exit 1; }
