@@ -373,16 +373,23 @@ object TxLog {
 
   /** Latest committed state; empty-schema error if never committed. */
   def read(spark: SparkSession, table: String): DataFrame =
-    readVersion(spark, table,
-      latestVersion(table).getOrElse(
-        throw new IllegalStateException(s"$table has no committed versions")))
+    graft.ParquetRead(spark, headDir(table))
 
   /** Time travel: the table exactly as of committed `version`. */
   def readVersion(spark: SparkSession, table: String, version: Long)
-      : DataFrame = {
-    val rec = commitRecord(table, version)
-    graft.ParquetRead(spark, s"$table/${rec.dataDir}")
-  }
+      : DataFrame =
+    graft.ParquetRead(spark, versionDir(table, version))
+
+  /** The data dir committed `version` publishes. */
+  private def versionDir(table: String, version: Long): String =
+    s"$table/${commitRecord(table, version).dataDir}"
+
+  /** The data dir of the latest committed version; throws if never
+    * committed.
+    */
+  def headDir(table: String): String =
+    versionDir(table, latestVersion(table).getOrElse(
+      throw new IllegalStateException(s"$table has no committed versions")))
 
   /** Delete data dirs no commit references (orphans from crashed or losing
     * writers), SKIPPING dirs modified within `retainMs` — an in-flight

@@ -202,16 +202,7 @@ object Charsets {
   /** Count lines at a given charset; -1 on error (reference
     * `contar_linhas_arquivo`, `main.py:39-45`).
     */
-  def countLines(path: Path, cs: Charset): Long = {
-    try {
-      val r = reader(path, cs)
-      try {
-        var n = 0L
-        while (r.readLine() != null) n += 1
-        n
-      } finally r.close()
-    } catch { case _: Exception => -1L }
-  }
+  def countLines(path: Path, cs: Charset): Long = counts(path, cs)._1
 
   /** Count CSV RECORDS — the lines Spark's reader actually parses: the
     * physical count ([[countLines]], reference-parity telemetry) includes
@@ -219,25 +210,36 @@ object Charsets {
     * load audit fail a table whose data was completely loaded (r10
     * review). -1 on error, like countLines.
     */
-  def countCsvRecords(path: Path, cs: Charset): Long = {
+  def countCsvRecords(path: Path, cs: Charset): Long = counts(path, cs)._2
+
+  /** (physical lines, non-empty CSV records) of `path` at `cs` in one
+    * decode pass; (-1, -1) on error. The one counting loop behind
+    * [[countLines]], [[countCsvRecords]] and [[transcode]]'s re-read.
+    */
+  def counts(path: Path, cs: Charset): (Long, Long) = {
     try {
       val r = reader(path, cs)
       try {
-        var n = 0L
+        var lines = 0L
+        var records = 0L
         var line = r.readLine()
         while (line != null) {
-          if (line.nonEmpty) n += 1
+          lines += 1
+          if (line.nonEmpty) records += 1
           line = r.readLine()
         }
-        n
+        (lines, records)
       } finally r.close()
-    } catch { case _: Exception => -1L }
+    } catch { case _: Exception => (-1L, -1L) }
   }
 
   /** Transcode `src` (at `cs`, replace-don't-fail) to UTF-8 at `dest`;
-    * returns (linesRead, linesWritten). Reference `main.py:140-158`.
+    * returns (linesRead, linesWritten, recordsWritten). Reference
+    * `main.py:140-158`. The written side is counted by re-reading `dest`
+    * from disk ([[counts]]), so both the line audit and the load's
+    * expected record count describe the corrected file as it landed.
     */
-  def transcode(src: Path, cs: Charset, dest: Path): (Long, Long) = {
+  def transcode(src: Path, cs: Charset, dest: Path): (Long, Long, Long) = {
     if (dest.getParent != null) Files.createDirectories(dest.getParent)
     val in = reader(src, cs)
     val out = new BufferedWriter(new OutputStreamWriter(
@@ -255,7 +257,8 @@ object Charsets {
       // leaks the writer AND strands its last buffer unflushed
       try in.close() finally out.close()
     }
-    (read, countLines(dest, StandardCharsets.UTF_8))
+    val (written, records) = counts(dest, StandardCharsets.UTF_8)
+    (read, written, records)
   }
 
   /** Replace-not-fail decoder (reference `errors='replace'`, `main.py:145`),

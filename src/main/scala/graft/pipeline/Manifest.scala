@@ -14,6 +14,11 @@ object Status {
   * the pipeline resumable and idempotent at file granularity (reference
   * `main.py:65-71`, `:51-53`). The reference's nested `validacoes` map is
   * flattened into the `linhas*`/`registros*` fields.
+  * `registrosCorrigidos` is aligned with `arquivosCorrigidos`: the
+  * non-empty CSV record count of each corrected file, counted by the fix
+  * pass's re-read of that file and used by the load as its expected count.
+  * Empty for entries written before it existed; the load then counts the
+  * files itself.
   *
   * Divergence from the reference (deliberate, documented): `arquivosCorrigidos`
   * is a list — ALL files of a multi-entry zip are corrected and loaded, not
@@ -33,7 +38,8 @@ case class ManifestEntry(
     tabelasDestino: Seq[String] = Nil,
     linhasOriginais: Long = -1L,
     linhasCorrigidas: Long = -1L,
-    registrosCarregados: Long = -1L)
+    registrosCarregados: Long = -1L,
+    registrosCorrigidos: Seq[Long] = Nil)
 
 /** Manifest persistence: a `Dataset[ManifestEntry]` checkpointed as JSON
   * (SURVEY §1.3). Saved after every per-file state transition, matching the
@@ -109,6 +115,14 @@ object Manifest {
             val i = r.fieldIndex(n)
             if (r.isNullAt(i)) Nil else r.getSeq[String](i).toSeq
           }
+          def nums(n: String): Seq[Long] = {
+            val i = r.fieldIndex(n)
+            if (r.isNullAt(i)) Nil
+            else r.getSeq[Any](i).map {
+              case x: Number => x.longValue
+              case _ => -1L // a null count: unknown, the load rescans
+            }.toSeq
+          }
           ManifestEntry(
             arquivo = r.getAs[String]("arquivo"),
             url = s("url", ""),
@@ -125,7 +139,8 @@ object Manifest {
             linhasOriginais = num("linhasOriginais", d.linhasOriginais),
             linhasCorrigidas = num("linhasCorrigidas", d.linhasCorrigidas),
             registrosCarregados =
-              num("registrosCarregados", d.registrosCarregados))
+              num("registrosCarregados", d.registrosCarregados),
+            registrosCorrigidos = nums("registrosCorrigidos"))
         }
     }
   }

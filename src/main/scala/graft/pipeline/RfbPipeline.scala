@@ -337,11 +337,12 @@ class RfbPipeline(
     * driver JVM (the round-1 formulation transcoded file-by-file on the
     * driver — the ingestion scale-killer at 100 TB). Executors write the
     * corrected files to shared storage and return only (path, linesRead,
-    * linesWritten) metric tuples. JDK decoder semantics (U+FFFD replace,
-    * BOM strip, universal newlines) are preserved exactly because the same
-    * [[Charsets.transcode]] kernel runs in the task; a `spark.read` text
-    * scan would split lines on '\n' bytes only and change the line-count
-    * audit for CR-terminated files. Granularity is per file — the right
+    * linesWritten, recordsWritten) metric tuples; the record counts become
+    * the load's expected counts (`registrosCorrigidos`). JDK decoder
+    * semantics (U+FFFD replace, BOM strip, universal newlines) are
+    * preserved exactly because the same [[Charsets.transcode]] kernel
+    * runs in the task; a `spark.read` text scan would split lines on '\n'
+    * bytes only and change the line-count audit for CR-terminated files. Granularity is per file — the right
     * unit here because the RFB dump ships many mid-sized members; a single
     * monster file would call for a splittable binary-chunk variant.
     */
@@ -389,26 +390,28 @@ class RfbPipeline(
       }
     }
     // executors: transcode + count in one distributed pass, metrics only back
-    val metrics: Map[(Int, String), (String, Long, Long)] =
+    val metrics: Map[(Int, String), (String, Long, Long, Long)] =
       if (specs.isEmpty) Map.empty
       else spark.sparkContext.parallelize(specs, specs.size).map {
         case (i, srcF, csName, destF) =>
           try {
-            val (read, written) = Charsets.transcode(Paths.get(srcF),
-              java.nio.charset.Charset.forName(csName), Paths.get(destF))
-            ((i, srcF), (destF, read, written))
+            val (read, written, records) = Charsets.transcode(
+              Paths.get(srcF), java.nio.charset.Charset.forName(csName),
+              Paths.get(destF))
+            ((i, srcF), (destF, read, written, records))
           } catch { // unreadable file → count mismatch → entry falhou
-            case _: Exception => ((i, srcF), (destF, -1L, -2L))
+            case _: Exception => ((i, srcF), (destF, -1L, -2L, -1L))
           }
       }.collect().toMap
     work.foreach { case (e, i) =>
       val results = e.arquivosExtraidos.map(f => metrics((i, f)))
-      val allOk = results.forall { case (_, o, c) => o == c && o != -1L }
+      val allOk = results.forall { case (_, o, c, _) => o == c && o != -1L }
       entries = entries.updated(i, e.copy(
         statusCorrecao = if (allOk) Status.Sucesso else Status.Falhou,
         arquivosCorrigidos = results.map(_._1),
         linhasOriginais = results.map(_._2).sum,
-        linhasCorrigidas = results.map(_._3).sum))
+        linhasCorrigidas = results.map(_._3).sum,
+        registrosCorrigidos = results.map(_._4)))
       save(entries)
     }
     entries
@@ -444,31 +447,40 @@ class RfbPipeline(
     // tables this run must (re)load = tables with >= 1 pending contributor
     val pendingTables: Set[String] =
       routedAll.filter(x => candIdx(x._1)).flatMap(_._3).toSet
-    // Per-file expected line counts, computed on executors (one task per
-    // file — same no-full-bytes-on-the-driver rule as the fix phase).
+    // Per-file expected counts. RECORD counts, not physical-line counts:
+    // Spark's CSV reader skips fully-empty lines, so one blank line in a
+    // corrected file made the audit fail a table whose data was fully
+    // loaded — manifest contradicting the lake (r10 review; countLines
+    // stays for the reference-parity linhas* telemetry). The fix pass
+    // counted each corrected file it wrote when it re-read it from disk
+    // (`registrosCorrigidos`), so the expectation still describes the file,
+    // never the loaded frame, and a file changed after the fix fails the
+    // audit. Only files without a recorded count (a manifest written
+    // before the field existed) are counted here, on executors (one task
+    // per file — same no-full-bytes-on-the-driver rule as the fix phase).
     // Routed FIRST: route() is a pure driver-side string op, so files no
     // table claims (layout/readme members) never cost a full-file scan;
     // contributors of untouched tables are never scanned either.
     val routable = routedAll
       .filter(_._3.exists(pendingTables)).map(_._2).distinct
-    val lineCounts: Map[String, Long] =
-      if (routable.isEmpty) Map.empty
+    val recorded: Map[String, Long] = contributors.flatMap { case (e, _) =>
+      if (e.registrosCorrigidos.size != e.arquivosCorrigidos.size) Nil
+      else e.arquivosCorrigidos.zip(e.registrosCorrigidos).filter(_._2 >= 0)
+    }.toMap
+    val unrecorded = routable.filterNot(recorded.contains)
+    val recordCounts: Map[String, Long] = recorded ++ (
+      if (unrecorded.isEmpty) Map.empty
       else spark.sparkContext
-        .parallelize(routable, routable.size)
-        // RECORD count, not physical-line count: Spark's CSV reader skips
-        // fully-empty lines, so one blank line in a corrected file made
-        // the audit fail a table whose data was fully loaded — manifest
-        // contradicting the lake (r10 review; countLines stays for the
-        // reference-parity linhas* telemetry)
+        .parallelize(unrecorded, unrecorded.size)
         .map(f => f -> Charsets.countCsvRecords(
           Paths.get(f), java.nio.charset.StandardCharsets.UTF_8))
-        .collect().toMap
-    // (entryIdx, correctedFile, table?, lineCount) — the PENDING entries'
+        .collect().toMap)
+    // (entryIdx, correctedFile, table?, recordCount) — the PENDING entries'
     // per-file routing, for ignorada classification and per-entry status
     // propagation; unroutable files carry -1 (never read by table groups)
     val files = candidates.flatMap { case (e, i) =>
       e.arquivosCorrigidos.map { f =>
-        (i, f, RfbTables.route(f), lineCounts.getOrElse(f, -1L))
+        (i, f, RfbTables.route(f), recordCounts.getOrElse(f, -1L))
       }
     }
     // unroutable-only entries → ignorada (reference main.py:192-194)
@@ -486,7 +498,7 @@ class RfbPipeline(
     // the tables this run actually owes a load
     val byTable = routedAll.collect {
       case (i, f, Some(t)) if pendingTables(t) =>
-        (t, i, f, lineCounts.getOrElse(f, -1L))
+        (t, i, f, recordCounts.getOrElse(f, -1L))
     }.groupBy(_._1)
     val tableOk = byTable.map { case (table, group) =>
       val paths = group.map(_._3)
@@ -519,16 +531,17 @@ class RfbPipeline(
               "file:" + Paths.get(f).toAbsolutePath.toString): _*)
           // Single-pass write-side metrics (SURVEY §1.3: row-count audits →
           // observe()): the row count must agree with the corrected-file
-          // line counts AND the sink read-back (reference main.py:207-216);
-          // integrity audits (null keys, column shift) ride the same pass.
-          // Sinks whose write path can't surface observe() metrics (JDBC)
-          // get audited on the read-back — still one scan.
+          // record counts AND the rows the sink holds now (reference
+          // main.py:207-216; the lake answers from its parquet footers,
+          // no Spark job); integrity audits (null keys, column shift) ride
+          // the same pass. Sinks whose write path can't surface observe()
+          // metrics (JDBC) get audited on the read-back — still one scan.
           val (audit, loaded) =
             if (sink.observesWrites) {
               val (audited, auditObs) = Audits.observed(df, table)
               sink.overwrite(audited, table, refMonth)
               (Audits.result(table, auditObs),
-                sink.readBack(spark, table, refMonth).count())
+                sink.loadedRows(spark, table, refMonth))
             } else {
               sink.overwrite(df, table, refMonth)
               val a = Audits.run(sink.readBack(spark, table, refMonth), table)

@@ -17,6 +17,13 @@ trait TableSink {
   def overwrite(df: DataFrame, table: String, refMonth: String): Unit
   def readBack(spark: SparkSession, table: String, refMonth: String): DataFrame
 
+  /** Rows the sink holds for (table, refMonth) now — the loaded side of the
+    * pipeline's count audit. Counts what [[readBack]] reads, never the
+    * frame that was written.
+    */
+  def loadedRows(spark: SparkSession, table: String, refMonth: String): Long =
+    readBack(spark, table, refMonth).count()
+
   /** Whether [[overwrite]] runs as a Dataset action that materializes
     * `observe()` metrics attached to `df`. True for file-format writers;
     * sinks that execute through a bare RDD job (Spark's V1 JDBC writer does
@@ -211,7 +218,22 @@ class ParquetSink(outDir: String, versioned: Boolean = false)
       p: org.apache.hadoop.fs.Path): Boolean =
     fs.exists(new org.apache.hadoop.fs.Path(p, SnapshotLayout.Success))
 
-  override def readBack(spark: SparkSession, table: String, refMonth: String): DataFrame = {
+  override def readBack(spark: SparkSession, table: String, refMonth: String): DataFrame =
+    graft.ParquetRead(spark, snapshotDir(spark, table, refMonth))
+
+  /** Sum of the row-group row counts in the footers of the snapshot dir
+    * [[readBack]] resolves — the counts Spark's own parquet `count()`
+    * answers from — read on the driver, so the audit costs no Spark job.
+    */
+  override def loadedRows(spark: SparkSession, table: String, refMonth: String): Long =
+    graft.ParquetRead.rowCount(spark, snapshotDir(spark, table, refMonth))
+
+  /** The one dir holding the snapshot's data files, after the layout check
+    * and crash recovery: the TxLog head's `v{N}-*` dir in versioned mode,
+    * else the final dir.
+    */
+  private def snapshotDir(spark: SparkSession, table: String,
+      refMonth: String): String = {
     if (versioned) {
       // head resolution IS the recovery story: an uncommitted (crashed or
       // losing) writer's dir has no commit record, so the log's head still
@@ -221,8 +243,7 @@ class ParquetSink(outDir: String, versioned: Boolean = false)
         versionedRoot(table, refMonth))
       assertLayout(rootPath.getFileSystem(
         spark.sparkContext.hadoopConfiguration), rootPath)
-      return graft.operators.TxLog.read(spark,
-        versionedRoot(table, refMonth))
+      return graft.operators.TxLog.headDir(versionedRoot(table, refMonth))
     }
     val finalPath = path(table, refMonth)
     val fs = finalPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -247,7 +268,7 @@ class ParquetSink(outDir: String, versioned: Boolean = false)
           fs.rename(backup, finalPath)
       } catch { case _: java.io.FileNotFoundException => () }
     }
-    graft.ParquetRead(spark, finalPath.toString)
+    finalPath.toString
   }
 }
 

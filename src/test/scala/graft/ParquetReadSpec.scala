@@ -11,6 +11,8 @@ import graft.ReadJobs.{assertSameAsPlainRead, jobsDuring}
   * schema from one parquet footer read on the driver ([[ParquetRead]]).
   * Each case pins the frame's schema and rows to `spark.read.parquet` on
   * the same path, and that building the frame launches no Spark job.
+  * [[ParquetRead.rowCount]] answers from the footers with no job, and
+  * every shape the footer path does not cover counts through Spark.
   */
 class ParquetReadSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -55,5 +57,60 @@ class ParquetReadSpec extends AnyFunSuite {
     assert(df.schema === plain.schema)
     assert(df.collect().map(_.toString).sorted ===
       plain.collect().map(_.toString).sorted)
+  }
+
+  test("rowCount: a single file and a dir of part files, from the footers") {
+    val sf = Files.createTempDirectory("parquet-count").toString
+    frame.repartition(3).write.parquet(s"$sf/t")
+    frame.coalesce(1).write.parquet(s"$sf/one")
+    val one = new java.io.File(s"$sf/one").listFiles()
+      .find(_.getName.endsWith(".parquet")).get.toString
+    Seq(s"$sf/t", one).foreach { path =>
+      val (n, jobs) = jobsDuring(ParquetRead.rowCount(spark, path))
+      assert(jobs === 0, path)
+      assert(n === 3L && n === spark.read.parquet(path).count(), path)
+    }
+  }
+
+  /** `rowCount(path)` equals `session`'s plain count and launched a Spark
+    * job, i.e. it fell through to `count()`.
+    */
+  private def assertCountedBySpark(session: org.apache.spark.sql.SparkSession,
+      path: String): Unit = {
+    val (n, jobs) = jobsDuring(ParquetRead.rowCount(session, path))
+    assert(jobs >= 1, s"$path was not counted by Spark")
+    assert(n === session.read.parquet(path).count())
+  }
+
+  test("rowCount falls through to Spark's count for shapes the footers " +
+    "do not settle") {
+    val sf = Files.createTempDirectory("parquet-count").toString
+    // a partitioned dir (subdirectories)
+    frame.write.partitionBy("s").parquet(s"$sf/parted")
+    assertCountedBySpark(spark, s"$sf/parted")
+    // a parquet summary file next to the part files
+    frame.repartition(2).write.parquet(s"$sf/summary")
+    val part = new java.io.File(s"$sf/summary").listFiles()
+      .find(_.getName.endsWith(".parquet")).get.toPath
+    Files.copy(part, Paths.get(s"$sf/summary/_common_metadata"))
+    assertCountedBySpark(spark, s"$sf/summary")
+    // schema merging on in the session
+    frame.repartition(2).write.parquet(s"$sf/merge")
+    val merging = spark.newSession()
+    merging.conf.set("spark.sql.parquet.mergeSchema", "true")
+    assertCountedBySpark(merging, s"$sf/merge")
+    // an unreadable footer: a zero-length data file, which Spark's scan
+    // skips
+    frame.repartition(2).write.parquet(s"$sf/corrupt")
+    Files.createFile(Paths.get(s"$sf/corrupt/part-zz-empty.parquet"))
+    assertCountedBySpark(spark, s"$sf/corrupt")
+    assert(spark.read.parquet(s"$sf/corrupt").count() === 3L)
+    // no data file at all: Spark's own error
+    val empty = Files.createTempDirectory("parquet-count").toString
+    val plain = intercept[org.apache.spark.sql.AnalysisException](
+      spark.read.parquet(empty).count())
+    val got = intercept[org.apache.spark.sql.AnalysisException](
+      ParquetRead.rowCount(spark, empty))
+    assert(got.getCondition === plain.getCondition)
   }
 }

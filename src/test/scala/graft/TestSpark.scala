@@ -22,4 +22,20 @@ object TestSpark {
   QuietLog(spark)
 
   val sf0001 = "/root/testdata/sf0.001"
+
+  /** A streaming spec's session: a clone of [[spark]] with AQE off, as
+    * `EventsStream`'s cloned sessions run (streaming turns AQE off for
+    * every query anyway, with a WARN each time it is left on).
+    */
+  def streamingSession(): SparkSession = {
+    val ss = spark.newSession()
+    ss.conf.set("spark.sql.adaptive.enabled", "false")
+    ss
+  }
+
+  /** A fresh checkpoint dir for one streaming query of a spec, so Spark
+    * does not create, and warn about, a temporary one.
+    */
+  def checkpointDir(): String =
+    java.nio.file.Files.createTempDirectory("spec-cp").toString
 }

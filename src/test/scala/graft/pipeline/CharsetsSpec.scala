@@ -85,8 +85,8 @@ class CharsetsSpec extends AnyFunSuite {
       Array(0x94, 0x20, 0x80).map(_.toByte) ++ "\n02;x\n".getBytes)
     val cs = Charsets.detect(src)
     val dest = Files.createTempFile("fixed", ".csv"); dest.toFile.deleteOnExit()
-    val (orig, fixed) = Charsets.transcode(src, cs, dest)
-    assert(orig == 2 && fixed == 2)
+    val (orig, fixed, records) = Charsets.transcode(src, cs, dest)
+    assert(orig == 2 && fixed == 2 && records == 2)
     val text = new String(Files.readAllBytes(dest), StandardCharsets.UTF_8)
     assert(text.contains("“Ok” €")) // “Ok” €
   }
@@ -96,8 +96,8 @@ class CharsetsSpec extends AnyFunSuite {
       val src = tmpFile("01;São Paulo\n02;Ação\n".getBytes(cs))
       assert(Charsets.detect(src) == cs, s"misdetected $cs")
       val dest = Files.createTempFile("fixed", ".csv"); dest.toFile.deleteOnExit()
-      val (orig, fixed) = Charsets.transcode(src, cs, dest)
-      assert(orig == 2 && fixed == 2)
+      val (orig, fixed, records) = Charsets.transcode(src, cs, dest)
+      assert(orig == 2 && fixed == 2 && records == 2)
       val text = new String(Files.readAllBytes(dest), StandardCharsets.UTF_8)
       assert(text.contains("São Paulo") && text.contains("Ação"))
     }
@@ -132,8 +132,9 @@ class CharsetsSpec extends AnyFunSuite {
       val src = tmpFile(text.getBytes(cs))
       assert(Charsets.detect(src) == cs, s"misdetected $cs for $text")
       val dest = Files.createTempFile("fixed", ".csv"); dest.toFile.deleteOnExit()
-      val (orig, fixed) = Charsets.transcode(src, cs, dest)
+      val (orig, fixed, records) = Charsets.transcode(src, cs, dest)
       assert(orig == fixed && orig == text.count(_ == '\n'))
+      assert(records == orig)
       val out = new String(Files.readAllBytes(dest), StandardCharsets.UTF_8)
       assert(out == text)
     }
@@ -165,8 +166,8 @@ class CharsetsSpec extends AnyFunSuite {
   test("transcode Latin-1 → UTF-8 preserves line count and fixes accents") {
     val src = tmpFile("01;São Paulo\n02;Ação\n".getBytes(StandardCharsets.ISO_8859_1))
     val dest = Files.createTempFile("fixed", ".csv"); dest.toFile.deleteOnExit()
-    val (orig, fixed) = Charsets.transcode(src, StandardCharsets.ISO_8859_1, dest)
-    assert(orig == 2 && fixed == 2)
+    val (orig, fixed, records) = Charsets.transcode(src, StandardCharsets.ISO_8859_1, dest)
+    assert(orig == 2 && fixed == 2 && records == 2)
     val text = new String(Files.readAllBytes(dest), StandardCharsets.UTF_8)
     assert(text.contains("São Paulo") && text.contains("Ação"))
   }
@@ -177,8 +178,8 @@ class CharsetsSpec extends AnyFunSuite {
       Array(0xC3, 0x28).map(_.toByte) ++ "\n".getBytes(StandardCharsets.UTF_8)
     val src = tmpFile(bytes)
     val dest = Files.createTempFile("fixed", ".csv"); dest.toFile.deleteOnExit()
-    val (orig, fixed) = Charsets.transcode(src, StandardCharsets.UTF_8, dest)
-    assert(orig == 2 && fixed == 2)
+    val (orig, fixed, records) = Charsets.transcode(src, StandardCharsets.UTF_8, dest)
+    assert(orig == 2 && fixed == 2 && records == 2)
     val text = new String(Files.readAllBytes(dest), StandardCharsets.UTF_8)
     assert(text.contains('�'))
   }
@@ -195,6 +196,20 @@ class CharsetsSpec extends AnyFunSuite {
   test("countLines returns -1 on missing file") {
     assert(Charsets.countLines(
       java.nio.file.Paths.get("/nonexistent/x.csv"), StandardCharsets.UTF_8) == -1L)
+  }
+
+  test("transcode counts the written file's lines and its non-empty records") {
+    // the load audit's expected count: blank lines are lines but not CSV
+    // records (Spark's reader skips them), CR and CRLF end lines too
+    val src = tmpFile("01;a\n\n02;b\r\n\r\n03;c\r\n".getBytes(StandardCharsets.UTF_8))
+    val dest = Files.createTempFile("fixed", ".csv"); dest.toFile.deleteOnExit()
+    assert(Charsets.transcode(src, StandardCharsets.UTF_8, dest) === ((5L, 5L, 3L)))
+    assert(Charsets.counts(dest, StandardCharsets.UTF_8) === ((5L, 3L)))
+    assert(Charsets.countLines(dest, StandardCharsets.UTF_8) === 5L)
+    assert(Charsets.countCsvRecords(dest, StandardCharsets.UTF_8) === 3L)
+    val missing = java.nio.file.Paths.get("/nonexistent/x.csv")
+    assert(Charsets.counts(missing, StandardCharsets.UTF_8) === ((-1L, -1L)))
+    assert(Charsets.countCsvRecords(missing, StandardCharsets.UTF_8) === -1L)
   }
 
   test("BOM probe survives a stingy stream (1 byte per read)") {

@@ -17,7 +17,9 @@ import graft.operators.TxLog
   * schema from one parquet footer read on the driver
   * ([[graft.ParquetRead]]). Each case pins the frame's schema and
   * rows to `spark.read.parquet` on the same dir, and that building the
-  * frame launches no Spark job.
+  * frame launches no Spark job. The audit's row count
+  * ([[ParquetSink.loadedRows]]) sums the footers of the same dir, also
+  * with no Spark job.
   */
 class LakeReadSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -95,6 +97,46 @@ class LakeReadSpec extends AnyFunSuite {
     assert(df.collect().map(_.toString).toSeq === Seq("[x,1]"))
   }
 
+  /** `sink.loadedRows` equals `spark.read.parquet(dir).count()` and
+    * launches no Spark job.
+    */
+  private def assertFooterCount(sink: ParquetSink, table: String,
+      dir: String, want: Long): Unit = {
+    val (n, jobs) = jobsDuring(sink.loadedRows(spark, table, "202401"))
+    assert(jobs === 0)
+    assert(n === spark.read.parquet(dir).count())
+    assert(n === want)
+  }
+
+  test("loadedRows sums the footers of a multi-file snapshot") {
+    val out = Files.createTempDirectory("lake-read").toString
+    val sink = new ParquetSink(out)
+    sink.overwrite(spark.range(0, 1000, 1, 4).toDF("k"), "t", "202401")
+    val dir = s"$out/t/ref_month=202401"
+    assert(new java.io.File(dir).list().count(_.startsWith("part-")) === 4)
+    assertFooterCount(sink, "t", dir, 1000L)
+    // a second overwrite: the count is the new snapshot's, not a sum
+    sink.overwrite(spark.range(0, 7, 1, 2).toDF("k"), "t", "202401")
+    assertFooterCount(sink, "t", dir, 7L)
+  }
+
+  test("loadedRows of an empty-frame overwrite is 0") {
+    val out = Files.createTempDirectory("lake-read").toString
+    val sink = new ParquetSink(out)
+    sink.overwrite(Seq.empty[(Long, String)].toDF("k", "v"), "t", "202401")
+    assertFooterCount(sink, "t", s"$out/t/ref_month=202401", 0L)
+  }
+
+  test("loadedRows of a versioned sink counts the head version only") {
+    val out = Files.createTempDirectory("lake-read").toString
+    val sink = new ParquetSink(out, versioned = true)
+    sink.overwrite(spark.range(0, 50, 1, 3).toDF("k"), "t", "202401")
+    sink.overwrite(spark.range(0, 20, 1, 2).toDF("k"), "t", "202401")
+    val root = s"$out/t/ref_month=202401"
+    assert(new java.io.File(root).list().count(_.matches("v\\d+-.*")) === 2)
+    assertFooterCount(sink, "t", TxLog.headDir(root), 20L)
+  }
+
   test("a dir whose data files are gone raises the plain read's error") {
     val out = Files.createTempDirectory("lake-read").toString
     val sink = new ParquetSink(out)
@@ -108,5 +150,8 @@ class LakeReadSpec extends AnyFunSuite {
     assert(got.getClass === plain.getClass)
     assert(got.getCondition === plain.getCondition)
     assert(got.getCondition === "UNABLE_TO_INFER_SCHEMA")
+    val counted = intercept[AnalysisException](
+      sink.loadedRows(spark, "t", "202401"))
+    assert(counted.getCondition === plain.getCondition)
   }
 }

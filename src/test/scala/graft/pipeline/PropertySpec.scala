@@ -32,8 +32,9 @@ class PropertySpec extends AnyFunSuite {
     try {
       val content = lines.map(_ + "\n").mkString
       Files.write(src, content.getBytes(cs))
-      val (orig, fixed) = Charsets.transcode(src, cs, dest)
-      orig == fixed && orig == lines.length
+      val (orig, fixed, records) = Charsets.transcode(src, cs, dest)
+      orig == fixed && orig == lines.length &&
+        records == lines.count(_.nonEmpty)
     } finally { Files.delete(src); Files.delete(dest) }
   }
 

@@ -15,7 +15,7 @@ import graft.streaming.Sessionize.Event
   * duplicate data.
   */
 class ForeachBatchSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
+  private lazy val spark = TestSpark.streamingSession()
 
   private def t(s: String) = Timestamp.valueOf(s)
 
@@ -33,6 +33,7 @@ class ForeachBatchSpec extends AnyFunSuite {
 
     val q = ms.toDF()
       .writeStream.foreachBatch(writeBatch _)
+      .option("checkpointLocation", TestSpark.checkpointDir())
       .start()
     try {
       ms.addData(Event(1L, t("2024-01-01 10:00:00"), 1.0),

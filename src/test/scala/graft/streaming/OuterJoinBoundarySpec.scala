@@ -25,7 +25,7 @@ case class JEv(event_id: Long, user_id: Long, ts: Timestamp,
   * watermark STRICTLY exceeds the closure horizon, matching the oracle.
   */
 class OuterJoinBoundarySpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
+  private lazy val spark = TestSpark.streamingSession()
 
   private def t(s: String) = Timestamp.valueOf(s)
 
@@ -37,6 +37,7 @@ class OuterJoinBoundarySpec extends AnyFunSuite {
     val q = EventsStream.intervalJoin(ms.toDF(), joinType)
       .select("purchase_id", "signup_id")
       .writeStream.outputMode("append")
+      .option("checkpointLocation", TestSpark.checkpointDir())
       .format("memory").queryName(sink).start()
     try {
       ms.addData(events)

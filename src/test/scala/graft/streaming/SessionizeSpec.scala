@@ -9,7 +9,7 @@ import graft.TestSpark
 import graft.streaming.Sessionize.Event
 
 class SessionizeSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
+  private lazy val spark = TestSpark.streamingSession()
 
   private def t(s: String) = Timestamp.valueOf(s)
 
@@ -19,6 +19,7 @@ class SessionizeSpec extends AnyFunSuite {
     val ms = MemoryStream[Event]
     val q = Sessionize.sessionize(ms.toDS())
       .writeStream.outputMode("append")
+      .option("checkpointLocation", TestSpark.checkpointDir())
       .format("memory").queryName("sess_test").start()
     try {
       // user 1: two bursts 40 min apart (→ 2 sessions); user 2: one event
@@ -67,6 +68,7 @@ class SessionizeSpec extends AnyFunSuite {
     val ms = MemoryStream[Event]
     val q = Sessionize.sessionize(ms.toDS())
       .writeStream.outputMode("append")
+      .option("checkpointLocation", TestSpark.checkpointDir())
       .format("memory").queryName("sess_weld").start()
     try {
       ms.addData(Event(1L, t("2024-01-01 11:00:00"), 1.0))
@@ -99,6 +101,7 @@ class SessionizeSpec extends AnyFunSuite {
     val ms = MemoryStream[Event]
     val q = Sessionize.sessionize(ms.toDS())
       .writeStream.outputMode("append")
+      .option("checkpointLocation", TestSpark.checkpointDir())
       .format("memory").queryName("sess_boundary").start()
     try {
       ms.addData(Event(1L, t("2024-01-01 10:00:00"), 1.0))
@@ -127,6 +130,7 @@ class SessionizeSpec extends AnyFunSuite {
     val ms = MemoryStream[Event]
     val q = Sessionize.sessionize(ms.toDS())
       .writeStream.outputMode("append")
+      .option("checkpointLocation", TestSpark.checkpointDir())
       .format("memory").queryName("sess_late").start()
     try {
       ms.addData(Event(1L, t("2024-01-01 12:00:00"), 1.0))
@@ -150,6 +154,7 @@ class SessionizeSpec extends AnyFunSuite {
     val ms = MemoryStream[Event]
     val q = Sessionize.sessionize(ms.toDS())
       .writeStream.outputMode("append")
+      .option("checkpointLocation", TestSpark.checkpointDir())
       .format("memory").queryName("sess_round").start()
     try {
       // 0.125 -> 0.13 (HALF_UP per event); 0.004+0.004 -> 0.00+0.00, not

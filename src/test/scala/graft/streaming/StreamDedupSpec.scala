@@ -17,7 +17,7 @@ case class KeyedEv(ts: Timestamp, key: String)
   * bounded variant is the only deployable one.
   */
 class StreamDedupSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
+  private lazy val spark = TestSpark.streamingSession()
 
   private def t(s: String) = Timestamp.valueOf(s)
 
@@ -30,6 +30,7 @@ class StreamDedupSpec extends AnyFunSuite {
       .withWatermark("ts", "30 minutes")
       .dropDuplicatesWithinWatermark("key")
       .writeStream.outputMode("append")
+      .option("checkpointLocation", TestSpark.checkpointDir())
       .format("memory").queryName("sdw_test").start()
     try {
       // A appears twice within the watermark window → one survivor

@@ -12,7 +12,7 @@ import graft.TestSpark
   * r11 10× rehearsal's streaming column: 0.2 s across the board).
   */
 class StreamingDirSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
+  private lazy val spark = TestSpark.streamingSession()
   private val src = TestSpark.sf0001
 
   private lazy val dirLayout: String = {
@@ -45,7 +45,9 @@ class StreamingDirSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("slate").toString
     val schema = spark.read.parquet(s"$src/documents.parquet").schema
     val df = graft.Tables.streamRaw(spark, dir, "documents", schema)
-    val q = df.writeStream.format("memory").queryName("late_tbl").start()
+    val q = df.writeStream
+      .option("checkpointLocation", TestSpark.checkpointDir())
+      .format("memory").queryName("late_tbl").start()
     try {
       q.processAllAvailable()
       assert(spark.table("late_tbl").count() === 0L,

@@ -14,7 +14,7 @@ case class Ev(ts: Timestamp, event_type: String, value: Double)
   * streaming row — the late-data-drop contract).
   */
 class WatermarkSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
+  private lazy val spark = TestSpark.streamingSession()
 
   private def t(s: String) = Timestamp.valueOf(s)
 
@@ -24,6 +24,7 @@ class WatermarkSpec extends AnyFunSuite {
     val ms = MemoryStream[Ev]
     val q = EventsStream.hourlyAgg(ms.toDF())
       .writeStream.outputMode("append")
+      .option("checkpointLocation", TestSpark.checkpointDir())
       .format("memory").queryName("wm_test").start()
     try {
       // open windows, nothing emitted yet (watermark = max(ts) - 10 min)

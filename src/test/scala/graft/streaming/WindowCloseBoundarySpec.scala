@@ -21,7 +21,7 @@ import graft.TestSpark
   * round-4 ADVICE flagged for st11/st12.
   */
 class WindowCloseBoundarySpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
+  private lazy val spark = TestSpark.streamingSession()
 
   private def t(s: String) = Timestamp.valueOf(s)
 
@@ -34,6 +34,7 @@ class WindowCloseBoundarySpec extends AnyFunSuite {
       .agg(count(lit(1)).as("n"))
       .select(col("user_id"), col("n"))
       .writeStream.outputMode("append")
+      .option("checkpointLocation", TestSpark.checkpointDir())
       .format("memory").queryName("swb_mem").start()
     try {
       ms.addData(Seq(
@@ -67,6 +68,7 @@ class WindowCloseBoundarySpec extends AnyFunSuite {
       .select(date_format(col("window.start"), "yyyy-MM-dd").as("day"),
         col("user_id"), col("n"))
       .writeStream.outputMode("append")
+      .option("checkpointLocation", TestSpark.checkpointDir())
       .format("memory").queryName("cwb_mem").start()
     try {
       ms.addData(Seq(
@@ -100,6 +102,7 @@ class WindowCloseBoundarySpec extends AnyFunSuite {
     val q = Sessionize.sessionize(ms.toDS())
       .select(col("user_id"), col("n_events"))
       .writeStream.outputMode("append")
+      .option("checkpointLocation", TestSpark.checkpointDir())
       .format("memory").queryName("fmb_mem").start()
     try {
       ms.addData(Seq(

@@ -29,6 +29,24 @@ if grep -rnE 'conf\.(set|unset)\(' src/main/scala/graft/operators; then
 fi
 echo "operators conf OK"
 
+# The load's count audit reads the lake's parquet footers
+# (TableSink.loadedRows), not a Spark scan of the read-back. A
+# `readBack(...)` followed by `.count()`, also across a line break, is
+# allowed only as the trait's non-override `def loadedRows` default, which
+# sinks with no cheaper answer (JDBC) inherit.
+echo "== gate 0b: no readBack(...).count() under graft.pipeline =="
+if perl -0777 -ne '
+  while (/readBack\([^()]*\)\s*\.count\(\)/g) {
+    my $pre = substr($_, 0, $-[0]);
+    next if $pre =~ /(?<!override )def loadedRows\([^)]*\)\s*:\s*Long\s*=\s*\z/;
+    print "$ARGV:", ($pre =~ tr/\n//) + 1, "\n"; $bad = 1;
+  }
+  END { exit($bad ? 0 : 1) }' src/main/scala/graft/pipeline/*.scala; then
+  echo "PREFLIGHT FAIL: readBack(...).count() under src/main/scala/graft/pipeline"
+  exit 1
+fi
+echo "pipeline audit OK"
+
 echo "== gate 1: compile + Test/compile =="
 sbt -batch compile Test/compile >/tmp/preflight_compile.log 2>&1 || {
   tail -30 /tmp/preflight_compile.log; echo "PREFLIGHT FAIL: compile"; exit 1; }
