@@ -1,8 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, CollationFactory}
 import org.apache.spark.sql.graft.ColumnBridge
@@ -620,15 +621,32 @@ object GraftFunctions {
     es
   }
 
+  /** The SQL functions: identifier, info and builder, the one definition
+    * [[register]] and [[GraftExtensions]] install.
+    */
+  private[functions] val sqlFunctions: Seq[(FunctionIdentifier,
+      ExpressionInfo, Seq[Expression] => Expression)] = {
+    def fn(name: String, cls: Class[_], n: Int)(
+        build: Seq[Expression] => Expression) =
+      (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name),
+        (es: Seq[Expression]) => build(arity(name, n)(es)))
+    Seq(
+      fn("cnpj_valid", classOf[CnpjValid], 1)(es => CnpjValid(es(0))),
+      fn("dot_product", classOf[DotProduct], 2)(es => DotProduct(es(0), es(1))),
+      fn("nfc_normalize", classOf[NfcNormalize], 1)(es => NfcNormalize(es(0))))
+  }
+
+  /** Installs the SQL functions into `spark`'s registry. A name already
+    * holding the same function (a session built with [[GraftExtensions]],
+    * or an earlier call) is left as it is, so a repeat call replaces
+    * nothing; a different function under one of the names is replaced.
+    */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("cnpj_valid",
-      es => CnpjValid(arity("cnpj_valid", 1)(es).head), "scala_udf")
-    reg.createOrReplaceTempFunction("dot_product",
-      es => { val a = arity("dot_product", 2)(es); DotProduct(a(0), a(1)) },
-      "scala_udf")
-    reg.createOrReplaceTempFunction("nfc_normalize",
-      es => NfcNormalize(arity("nfc_normalize", 1)(es).head), "scala_udf")
+    sqlFunctions.foreach { case (id, info, build) =>
+      if (!reg.lookupFunction(id).exists(_.getClassName == info.getClassName))
+        reg.registerFunction(id, info, build)
+    }
   }
 
   private def toExpr(c: Column): Expression = ColumnBridge.expression(c)
@@ -641,22 +659,7 @@ object GraftFunctions {
   */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-    e.injectFunction((FunctionIdentifier("cnpj_valid"),
-      new ExpressionInfo(classOf[CnpjValid].getName, "cnpj_valid"),
-      (es: Seq[Expression]) =>
-        CnpjValid(GraftFunctions.arity("cnpj_valid", 1)(es).head)))
-    e.injectFunction((FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
-      (es: Seq[Expression]) => {
-        val a = GraftFunctions.arity("dot_product", 2)(es)
-        DotProduct(a(0), a(1))
-      }))
-    e.injectFunction((FunctionIdentifier("nfc_normalize"),
-      new ExpressionInfo(classOf[NfcNormalize].getName, "nfc_normalize"),
-      (es: Seq[Expression]) =>
-        NfcNormalize(GraftFunctions.arity("nfc_normalize", 1)(es).head)))
+    GraftFunctions.sqlFunctions.foreach(e.injectFunction)
     e.injectOptimizerRule(_ => graft.plans.BoundedLevenshteinRule)
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
   }

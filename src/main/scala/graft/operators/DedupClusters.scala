@@ -97,7 +97,7 @@ object DedupClusters extends QuerySuite {
     val violations =
       g.src.indices.count(k => root(g.src(k)) != root(g.dst(k)))
     if (violations > 0) throw certificateFailure(violations)
-    val labels = LocalGraph.frame(s, ("id", "lab"), g.ids, root.map(g.ids))
+    val labels = LocalGraph.frame(s, "id" -> g.ids, "lab" -> root.map(g.ids))
       .select(col("id").cast(idType), col("lab").cast(idType))
     val nullId =
       if (g.sawNull) Seq(s.range(1).select(lit(null).cast(idType).as("id"),

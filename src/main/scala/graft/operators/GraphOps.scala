@@ -5,7 +5,7 @@ import scala.collection.immutable.ListMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.QuerySuite
+import graft.{QuerySuite, Tables}
 
 /** Graph analytics over the near-duplicate graph — the step after clustering
   * (dd06/dd08): WHICH member of a duplicate group is the canonical one?
@@ -115,11 +115,17 @@ object GraphOps extends QuerySuite {
   /** The ONE materialized near-dup pair table all four graph queries
     * build on (gr02/rec01 always used it; gr01/gr03 used to re-run the
     * LSH candidate join + cosine scoring into their own edge tables).
+    * Keyed on the embeddings table: pairs found on the driver come as a
+    * frame with no input files, whose own key would outlive a rewrite.
+    * Peeked first, as finding the pairs on the driver is an eager job.
     */
-  private def sharedPairs(s: SparkSession, dir: String): DataFrame =
-    Scratch.materialized(
+  private[operators] def sharedPairs(s: SparkSession, dir: String)
+      : DataFrame = {
+    val inputs = Seq(Tables(s, dir, "embeddings"))
+    Scratch.peek(s, "gr_pairs", dir, inputs).getOrElse(Scratch.materialized(
       SimilarityOps.embeddingNearDupPairs(s, dir)
-        .select(col("id1"), col("id2")), "gr_pairs", dir)
+        .select(col("id1"), col("id2")), "gr_pairs", dir, inputs))
+  }
 
   /** The ONE symmetrized (src, dst, deg-of-src) edge table the distributed
     * gr01 and gr03 loops share — gr03 projects (src, dst) off it. Built
@@ -160,8 +166,8 @@ object GraphOps extends QuerySuite {
     localPairs(pairs) match {
       case Some(g) =>
         lastKernel = "local"
-        materialize(LocalGraph.frame(s, ("node", "r"), g.ids,
-          LocalGraph.pageRank(g, Iters, Scale, Base))
+        materialize(LocalGraph.frame(s, "node" -> g.ids,
+          "r" -> LocalGraph.pageRank(g, Iters, Scale, Base))
           .select(col("node").cast(idType(pairs)), col("r")))
       case None =>
         lastKernel = "distributed"
@@ -226,8 +232,8 @@ object GraphOps extends QuerySuite {
           if (g.src.isEmpty) Array.empty[Int]
           else LocalGraph.bfs(g, g.src.min, MaxHops)
         val reached = hops.indices.filter(hops(_) >= 0).toArray
-        materialize(LocalGraph.frame(s, ("node", "h"),
-          reached.map(g.ids), reached.map(hops(_).toLong))
+        materialize(LocalGraph.frame(s, "node" -> reached.map(g.ids),
+          "h" -> reached.map(hops(_).toLong))
           .select(col("node").cast(idType(pairs)), col("h")))
       case None =>
         lastKernel = "distributed"

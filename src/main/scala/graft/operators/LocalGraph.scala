@@ -5,6 +5,7 @@ import java.util.Arrays
 import scala.util.DynamicVariable
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
@@ -16,7 +17,8 @@ import org.apache.spark.sql.types._
   * evaluates its edge plan once through [[collect]], runs the kernel here
   * and writes the result to scratch as before; above it [[collect]]
   * returns None and the caller runs its distributed loop. The bound comes
-  * from the driver heap, never from the data.
+  * from the driver heap, never from the data. [[take]], [[cap]] and
+  * [[frame]] also serve [[LocalPairs]], the near-duplicate pair kernel.
   */
 private[operators] object LocalGraph {
   /** Peak driver heap per collected edge: the decoded row (~100 B), the
@@ -26,17 +28,23 @@ private[operators] object LocalGraph {
     */
   private val BytesPerEdge = 256L
 
-  /** The ceiling whatever the heap: 10M edges (~160 MB of endpoints). */
-  private val EdgeCeiling = 10000000L
+  /** The ceiling whatever the heap: 10M items (~160 MB of edge endpoints). */
+  private val Ceiling = 10000000L
 
   private val capOverride = new DynamicVariable[Option[Long]](None)
 
-  /** Most edges a graph may have to run locally. */
-  def cap: Long = capOverride.value.getOrElse(
-    math.min(EdgeCeiling, Runtime.getRuntime.maxMemory / BytesPerEdge))
+  /** Most items a local kernel may hold when each takes `bytesEach` of
+    * driver heap.
+    */
+  def cap(bytesEach: Long): Long = capOverride.value.getOrElse(
+    math.min(Ceiling, Runtime.getRuntime.maxMemory / bytesEach))
 
-  /** Runs `body` with the cap forced to `c` on this thread, so specs can
-    * drive each path; `c = 0` sends every graph to the distributed path.
+  /** Most edges a graph may have to run locally. */
+  def cap: Long = cap(BytesPerEdge)
+
+  /** Runs `body` with every local kernel's cap forced to `c` on this
+    * thread, so specs can drive each path; `c = 0` sends every input to
+    * the distributed path.
     */
   private[operators] def withCap[T](c: Long)(body: => T): T =
     capOverride.withValue(Some(c))(body)
@@ -56,20 +64,30 @@ private[operators] object LocalGraph {
   final class Graph(val ids: Array[Long], val src: Array[Int],
       val dst: Array[Int], val sawNull: Boolean)
 
+  /** Evaluates `df` once, keeping at most `limit` + 1 rows: Some(rows)
+    * when `df` has at most `limit` rows, None otherwise (or when the limit
+    * is 0). The one driver-side collection under `graft.operators`, so
+    * every local kernel reads a bounded number of rows.
+    */
+  def take(df: DataFrame, limit: Long): Option[Array[InternalRow]] = {
+    if (limit <= 0) return None
+    val qe = df.queryExecution
+    // executeTake is what limit(n).collect() runs, minus the Row boxing
+    val rows = SQLExecution.withNewExecutionId(qe, Some("collect"))(
+      qe.executedPlan.executeTake((math.min(limit, Int.MaxValue - 1) + 1).toInt))
+    if (rows.length > limit) None else Some(rows)
+  }
+
   /** Evaluates `edges` once, keeping at most [[cap]] + 1 rows of its
     * columns `a` and `b`: Some(graph) when the edge count is within the
     * cap, None otherwise (or when the cap is 0). The columns must be
     * integral.
     */
-  def collect(edges: DataFrame, a: String, b: String): Option[Graph] = {
-    val c = cap
-    if (c <= 0) return None
-    val qe = edges.select(col(a).cast(LongType), col(b).cast(LongType))
-      .queryExecution
-    // executeTake is what limit(n).collect() runs, minus the Row boxing
-    val rows = SQLExecution.withNewExecutionId(qe, Some("collect"))(
-      qe.executedPlan.executeTake((c + 1).toInt))
-    if (rows.length > c) return None
+  def collect(edges: DataFrame, a: String, b: String): Option[Graph] =
+    take(edges.select(col(a).cast(LongType), col(b).cast(LongType)), cap)
+      .map(graph)
+
+  private def graph(rows: Array[InternalRow]): Graph = {
     val ends = new Array[Long](2 * rows.length)
     var m = 0
     var nEdges = 0
@@ -95,7 +113,7 @@ private[operators] object LocalGraph {
         k += 1
       }
     }
-    Some(new Graph(ids, src, dst, sawNull))
+    new Graph(ids, src, dst, sawNull)
   }
 
   /** Union-find over the undirected edges: for each node, the index of
@@ -171,23 +189,36 @@ private[operators] object LocalGraph {
     rank
   }
 
-  /** Two Long columns as a DataFrame. The rows are parallelized in chunks,
-    * one per partition, so no plan carries them as a local relation.
+  /** Rows per partition of a [[frame]] before it takes another: a small
+    * frame is one partition, so collecting it again or writing it to
+    * scratch is one task over one file.
     */
-  def frame(s: SparkSession, names: (String, String),
-      c1: Array[Long], c2: Array[Long]): DataFrame = {
-    val n = c1.length
-    val slices = math.max(1, math.min(s.sparkContext.defaultParallelism, n))
+  private val RowsPerSlice = 100000L
+
+  /** Equal-length Long or Double columns as a non-nullable DataFrame. The
+    * rows are parallelized in chunks, one per partition, so no plan carries
+    * them as a local relation.
+    */
+  def frame(s: SparkSession, cols: (String, Array[_])*): DataFrame = {
+    val n = cols.head._2.length
+    val slices = math.max(1, math.min(s.sparkContext.defaultParallelism.toLong,
+      (n + RowsPerSlice - 1) / RowsPerSlice).toInt)
     val chunks = (0 until slices).map { k =>
       val (lo, hi) = ((n.toLong * k / slices).toInt,
         (n.toLong * (k + 1) / slices).toInt)
-      (Arrays.copyOfRange(c1, lo, hi), Arrays.copyOfRange(c2, lo, hi))
+      cols.map(_._2 match {
+        case c: Array[Long] => Arrays.copyOfRange(c, lo, hi): Array[_]
+        case c: Array[Double] => Arrays.copyOfRange(c, lo, hi): Array[_]
+      })
     }
-    val rows = s.sparkContext.parallelize(chunks, slices).flatMap {
-      case (x, y) => Iterator.tabulate(x.length)(i => Row(x(i), y(i)))
+    val rows = s.sparkContext.parallelize(chunks, slices).flatMap { cs =>
+      Iterator.tabulate(cs.head.length)(i => Row.fromSeq(cs.map(_(i))))
     }
-    s.createDataFrame(rows, StructType(Seq(
-      StructField(names._1, LongType, nullable = false),
-      StructField(names._2, LongType, nullable = false))))
+    s.createDataFrame(rows, StructType(cols.map { case (name, c) =>
+      StructField(name, c match {
+        case _: Array[Long] => LongType
+        case _: Array[Double] => DoubleType
+      }, nullable = false)
+    }))
   }
 }

@@ -1,9 +1,12 @@
 package graft.operators
 
+import java.util.Arrays
+
 import scala.collection.immutable.ListMap
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.{QuerySuite, Tables}
 
@@ -41,6 +44,8 @@ import graft.{QuerySuite, Tables}
   * self-join branch reads it back — exactly what a lake deployment does
   * with its signature table. Without this the plan recomputes shingling
   * once per branch (4× for dd02: two band sides + two shingle join-backs).
+  * Below [[LocalPairs]]' caps dd02 joins its bands on the driver instead,
+  * from one pass, and materializes nothing.
   */
 object MinHashDedup extends QuerySuite {
   private val K = 32       // minhash functions
@@ -70,9 +75,29 @@ object MinHashDedup extends QuerySuite {
         graft.functions.GraftFunctions.word_ngrams(col("words"), 3))
         .as("shingles"))
 
+  /** The 16 band hashes of a minhash column: band j hashes minhashes
+    * 2j+1 and 2j+2. The one banding, shared by both paths of [[lshPairs]].
+    */
+  private def bandHashes(mhs: Column): Seq[Column] =
+    (0 until BANDS).map(j =>
+      xxhash64(element_at(mhs, 2 * j + 1), element_at(mhs, 2 * j + 2)))
+
+  /** Driver heap per collected document: its shingle row (~1.5 KB at the
+    * fixtures' ~55 words), the sorted shingle references and the band
+    * keys, with room for documents a few times that length.
+    */
+  private val BytesPerDoc = 16384L
+
   /** Near-dup pairs (id1 < id2, exact shingle-Jaccard ≥ `threshold`) with
     * LSH-banded candidate generation — the shared kernel behind dd02
     * (pair listing) and dd06 (cluster assignment).
+    *
+    * Two paths with one answer. A corpus within the [[LocalPairs]] caps
+    * with unique, non-null integral ids is collected once with its shingles
+    * and band hashes, bucketed and verified on the driver, and no scratch
+    * table is written. Any other corpus runs the distributed form: the
+    * shingles and the band table materialized to scratch, a self-join on
+    * (band, band-hash), and the shingles joined back per candidate pair.
     *
     * Threshold contract: the fixed 16×2 banding makes recall effectively
     * exact only at `threshold` ≥ 0.8 (per-pair miss ~1e-8); looser values
@@ -85,6 +110,44 @@ object MinHashDedup extends QuerySuite {
     */
   private[operators] def lshPairs(
       s: SparkSession, dir: String, threshold: Double = 0.8): DataFrame = {
+    val docs = shingled(s, dir)
+      .select(col("doc_id"), col("shingles"),
+        graft.functions.MinHashArray(col("shingles"), K).as("mhs"))
+      .select(col("doc_id"), array(bandHashes(col("mhs")): _*).as("bh"),
+        col("shingles"))
+    LocalPairs(docs, BytesPerDoc, "jaccard") { rows =>
+      // each shingle set sorted by bytes, the order array_intersect's
+      // binary equality agrees with; the sets are distinct already
+      val sh = rows.map { r =>
+        val a = r.getArray(2)
+        val xs = Array.tabulate(a.numElements())(a.getUTF8String)
+        Arrays.sort(xs, (p: UTF8String, q: UTF8String) => p.compareTo(q))
+        xs
+      }
+      Some { (i, j) =>
+        val inter = common(sh(i), sh(j))
+        // Spark's arithmetic: an int denominator widened to double
+        val jac = inter.toDouble / (sh(i).length + sh(j).length - inter)
+        if (jac >= threshold) LocalPairs.round(jac) else Double.NaN
+      }
+    }.getOrElse(distributedPairs(s, dir, threshold))
+  }
+
+  /** Elements two sorted, distinct arrays share. */
+  private def common(a: Array[UTF8String], b: Array[UTF8String]): Int = {
+    var (x, y, n) = (0, 0, 0)
+    while (x < a.length && y < b.length) {
+      val c = a(x).compareTo(b(y))
+      if (c <= 0) x += 1
+      if (c >= 0) y += 1
+      if (c == 0) n += 1
+    }
+    n
+  }
+
+  /** [[lshPairs]] on the cluster. */
+  private def distributedPairs(
+      s: SparkSession, dir: String, threshold: Double): DataFrame = {
     val sh = Scratch.materialized(shingled(s, dir), "dd02_shingles", dir)
     val mh = sh.select(col("doc_id"),
       graft.functions.MinHashArray(col("shingles"), K).as("mhs"))
@@ -92,11 +155,8 @@ object MinHashDedup extends QuerySuite {
     // shingle arrays are joined back per *candidate pair*, not per band.
     // Materialized so the self-join's two sides don't re-minhash the corpus.
     val bands = Scratch.materialized(
-      mh.select(col("doc_id"), explode(array(
-        (0 until BANDS).map(j => struct(lit(j).as("band"),
-          xxhash64(element_at(col("mhs"), 2 * j + 1),
-            element_at(col("mhs"), 2 * j + 2)).as("bh"))): _*)).as("b"))
-        .select(col("doc_id"), col("b.band"), col("b.bh")),
+      mh.select(col("doc_id"), posexplode(array(bandHashes(col("mhs")): _*))
+        .as(Seq("band", "bh"))),
       "dd02_bands", dir)
     val cands = bands.select(col("doc_id").as("id1"), col("band"), col("bh"))
       .join(bands.select(col("doc_id").as("id2"), col("band"), col("bh")),

@@ -5,6 +5,7 @@ import scala.collection.immutable.ListMap
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
 import graft.{QuerySuite, Tables}
 import graft.functions.GraftFunctions
@@ -151,11 +152,22 @@ object SimilarityOps extends QuerySuite {
         .otherwise(0)
     }.reduce(_ + _)
 
+  /** One hyperplane signature per LSH table for a corpus of `n` vectors,
+    * table t's planes seeded 42 + t — the table geometry both
+    * [[multiTableSigs]] and the local path of [[embeddingNearDupPairs]]
+    * evaluate.
+    */
+  private def tableSigs(n: Long): Seq[Column] = {
+    val nPlanes = planesFor(n)
+    (0 until bandTablesFor(nPlanes)).map(t =>
+      hyperplaneSig(planesSeeded(42 + t, nPlanes, 64)))
+  }
+
   /** Multi-table hyperplane LSH signatures — (vec_id, tb, sig) with one row
     * per (vector, table). Independent tables amplify recall (candidate if
     * ANY table agrees). Materialized once per (tag, input dir) via
-    * the [[Scratch]] cache, so dd07, dd08 and ss05 all share one
-    * signature pass instead of re-shingling the corpus.
+    * the [[Scratch]] cache, so ss05 and the distributed path of
+    * [[embeddingNearDupPairs]] share one signature pass.
     */
   private[operators] def multiTableSigs(
       s: SparkSession, dir: String): DataFrame =
@@ -166,27 +178,66 @@ object SimilarityOps extends QuerySuite {
     * second identical count job per invocation (r13 review).
     */
   private[operators] def multiTableSigs(
-      s: SparkSession, dir: String, n: Long): DataFrame = {
-    val nPlanes = planesFor(n)
-    val nTables = bandTablesFor(nPlanes)
-    val e = emb(s, dir)
+      s: SparkSession, dir: String, n: Long): DataFrame =
     Scratch.materialized(
-      e.select(col("vec_id"), explode(array(
-        (0 until nTables).map(t => struct(lit(t).as("tb"),
-          hyperplaneSig(planesSeeded(42 + t, nPlanes, 64)).as("sig"))): _*)).as("ts"))
-        .select(col("vec_id"), col("ts.tb"), col("ts.sig")),
+      emb(s, dir).select(col("vec_id"),
+        posexplode(array(tableSigs(n): _*)).as(Seq("tb", "sig"))),
       "dd07_sigs", dir)
-  }
 
-  /** dd07's kernel, shared with the semantic-cluster operator (dd08):
-    * multi-table hyperplane LSH candidates → exact cosine ≥ 0.4 pairs.
-    * Only ids travel through the bucket shuffle; vectors join back per
-    * candidate pair.
+  /** Driver heap per collected vector: the row with its 64 dims as doubles
+    * (~600 B) and their decoded copy (~530 B), with headroom.
+    */
+  private val BytesPerVector = 2048L
+
+  /** dd07's kernel, shared with the semantic-cluster operator (dd08) and
+    * the graph queries: multi-table hyperplane LSH candidates → exact
+    * cosine ≥ 0.4 pairs.
+    *
+    * Two paths with one answer. A corpus within the [[LocalPairs]] caps
+    * with unique, non-null integral ids and finite, non-zero norms is
+    * collected once with its signatures, bucketed by (table, signature)
+    * and verified on the driver, and no scratch table is written. The
+    * candidates are the LSH buckets either way, never all pairs. Any other
+    * corpus runs the distributed form.
     */
   private[operators] def embeddingNearDupPairs(
       s: SparkSession, dir: String): DataFrame = {
     val n = embCount(s, dir)
     val e = emb(s, dir)
+    val rows = e.select(col("vec_id"), array(tableSigs(n): _*).as("sigs"),
+      col("v").cast(ArrayType(DoubleType)), col("nrm"))
+    LocalPairs(rows, BytesPerVector, "cosine") { rs =>
+      val nrm = rs.map(r => if (r.isNullAt(3)) Double.NaN else r.getDouble(3))
+      // a zero norm is a null or an error in Spark's division and a NaN
+      // compares above every number there: the distributed path keeps
+      // those semantics. A finite norm means a vector without nulls.
+      if (!nrm.forall(x => x > 0 && x < Double.PositiveInfinity)) None
+      else {
+        val v = rs.map(_.getArray(2).toDoubleArray())
+        Some { (i, j) =>
+          val c = LocalPairs.round(dot(v(i), v(j)) / (nrm(i) * nrm(j)))
+          if (c >= 0.4) c else Double.NaN
+        }
+      }
+    }.getOrElse(distributedPairs(s, dir, n, e))
+  }
+
+  /** [[graft.functions.DotProduct]]'s sum, in its order; NaN (no pair)
+    * where its lengths differ and it returns null.
+    */
+  private def dot(a: Array[Double], b: Array[Double]): Double =
+    if (a.length != b.length) Double.NaN
+    else {
+      var acc = 0.0
+      for (k <- a.indices) acc += a(k) * b(k)
+      acc
+    }
+
+  /** [[embeddingNearDupPairs]] on the cluster. Only ids travel through the
+    * bucket shuffle; vectors join back per candidate pair.
+    */
+  private def distributedPairs(s: SparkSession, dir: String, n: Long,
+      e: DataFrame): DataFrame = {
     val sigs = multiTableSigs(s, dir, n)
     val cands = sigs.select(col("vec_id").as("id1"), col("tb"), col("sig"))
       .join(sigs.select(col("vec_id").as("id2"), col("tb"), col("sig")),

@@ -226,4 +226,21 @@ class FunctionsSpec extends AnyFunSuite {
       .collect()(0)
     assert(viaKernel.isNullAt(0) && viaLambda.isNullAt(0))
   }
+
+  test("register installs missing SQL functions and replaces none it finds") {
+    // a session of its own: the shared one's registry already holds them
+    val ss = spark.newSession()
+    val reg = ss.sessionState.functionRegistry
+    val ids = GraftFunctions.sqlFunctions.map(_._1)
+    ids.foreach(reg.dropFunction)
+    intercept[org.apache.spark.sql.AnalysisException](
+      ss.sql("SELECT cnpj_valid('11222333000181')").collect())
+    GraftFunctions.register(ss)
+    assert(ss.sql("SELECT cnpj_valid('11222333000181')").head().getBoolean(0))
+    val infos = ids.map(reg.lookupFunction(_).get)
+    GraftFunctions.register(ss)
+    assert(ids.map(reg.lookupFunction(_).get).zip(infos).forall {
+      case (a, b) => a eq b
+    })
+  }
 }

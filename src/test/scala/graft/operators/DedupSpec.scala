@@ -132,20 +132,25 @@ class DedupSpec extends AnyFunSuite {
         .filter(_.startsWith("graft_dd")).toSet
       finally s.close()
     }
+    // dd02 builds its scratch tables on the distributed path only: the
+    // cap is forced to 0 (LocalPairsSpec pins that the local path writes
+    // none)
+    def dd02() = LocalGraph.withCap(0)(
+      MinHashDedup.queries("dd02_minhash_lsh")(spark, dir).collect())
     // measure DELTAS vs the pre-test tmpdir (other JVMs' garbage is not ours)
     val before = scratch()
-    MinHashDedup.queries("dd02_minhash_lsh")(spark, dir).collect()
+    dd02()
     MinHashDedup.queries("dd03_simhash")(spark, dir).collect()
     val first = scratch() -- before
     assert(first.size === 3) // dd02 shingles + dd02 bands + dd03 sigs
     // re-running reuses the cached materializations — no accumulation
-    MinHashDedup.queries("dd02_minhash_lsh")(spark, dir).collect()
+    dd02()
     assert((scratch() -- before) === first)
     // eager cleanup leaves nothing of ours behind (no waiting for JVM exit)
     Scratch.clear()
     assert((scratch() -- before).isEmpty)
     // and the next invocation re-materializes from scratch
-    assert(MinHashDedup.queries("dd02_minhash_lsh")(spark, dir).collect().nonEmpty)
+    assert(dd02().nonEmpty)
     Scratch.clear()
   }
 
@@ -165,14 +170,17 @@ class DedupSpec extends AnyFunSuite {
       docs.map { case (id, t) => (id, t, "en", "s", t.length.toLong) }
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .coalesce(1).write.mode("overwrite").parquet(s"$d/documents.parquet")
+    // the distributed path, the one with scratch tables (cap forced to 0)
+    def dd02() = LocalGraph.withCap(0)(
+      MinHashDedup.queries("dd02_minhash_lsh")(spark, d).count())
     write(Seq((0L, "alpha beta gamma delta"), (1L, "alpha beta gamma delta")))
     val before = scratch()
-    assert(MinHashDedup.queries("dd02_minhash_lsh")(spark, d).count() === 1)
+    assert(dd02() === 1)
     val first = scratch() -- before
     // same path, new content: the fingerprint must force a re-materialize
     // (not serve the stale 2-doc signature table) and the answer must change
     write(Seq((0L, "alpha beta gamma delta"), (1L, "totally unrelated words here")))
-    assert(MinHashDedup.queries("dd02_minhash_lsh")(spark, d).count() === 0)
+    assert(dd02() === 0)
     assert((scratch() -- before).size > first.size) // new entries, not reuse
     Scratch.clear()
   }

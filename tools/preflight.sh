@@ -47,6 +47,19 @@ if perl -0777 -ne '
 fi
 echo "pipeline audit OK"
 
+# A driver-side collection under graft.operators is bounded: it goes
+# through LocalGraph.take, which reads at most cap + 1 rows and reports an
+# over-cap input so the caller can run its distributed path. No other
+# operator file may collect to the driver.
+echo "== gate 0c: driver-side collects under graft.operators only in LocalGraph =="
+if grep -rnE 'executeTake\(|\.collect\(\)|toLocalIterator' \
+    --include='*.scala' src/main/scala/graft/operators |
+    grep -v '^src/main/scala/graft/operators/LocalGraph\.scala:'; then
+  echo "PREFLIGHT FAIL: uncapped driver-side collect under src/main/scala/graft/operators"
+  exit 1
+fi
+echo "operators collect OK"
+
 echo "== gate 1: compile + Test/compile =="
 sbt -batch compile Test/compile >/tmp/preflight_compile.log 2>&1 || {
   tail -30 /tmp/preflight_compile.log; echo "PREFLIGHT FAIL: compile"; exit 1; }
