@@ -51,19 +51,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    (a 100k-commit table costs the same read as a 10-commit one). The
   *    pointer is a hint: corrupt/stale/missing degrades to the listing
   *    path, never to a wrong answer.
-  *  - '''Time travel''' = pin any committed version.
-  *  - '''Vacuum''' = delete data dirs no commit references. Guarded by a
-  *    retention window (default 15 min, like Delta's VACUUM): an IN-FLIGHT
-  *    writer's staging dir — written but not yet committed — looks exactly
-  *    like a crash orphan, and deleting it would publish a version whose
-  *    data is gone. Age-gating makes vacuum safe alongside live writers
-  *    whose write→commit gap is shorter than the window; `retainMs = 0` is
-  *    for tests/offline maintenance ONLY.
-  *  - '''Cleanup''' = [[cleanupBefore]] caps `_txlog/` growth by dropping
-  *    commit files older than a checkpointed horizon. Checkpoint files are
-  *    always kept, so time travel to checkpointed versions survives;
-  *    cleaned non-checkpoint versions become unreadable — the same
-  *    retention trade Delta's `logRetentionDuration` makes.
+  *  - '''Time travel''' = pin any committed version. Nothing deletes a
+  *    commit file or a committed data dir, so every version stays readable.
   *
   * Scale notes: the hot read path is one pointer read + a handful of
   * existence probes — the same per-PLAN (never per-task) metadata cost a
@@ -83,23 +72,14 @@ object TxLog {
   /** A checkpoint (+ pointer update) is written every N commits. */
   val checkpointInterval: Int = 10
 
-  /** Default vacuum retention: staging dirs younger than this are presumed
-    * in-flight (written, not yet committed) and never reclaimed.
-    */
-  val defaultVacuumRetainMs: Long = 15L * 60 * 1000
-
   private val mapper = new ObjectMapper
 
   /** Reject scheme-prefixed roots AT THE LAYER THAT OWNS THE INVARIANT:
     * this log is java.nio (hard links), so a "file:/mnt/lake/t" root
     * resolves as a CWD-relative LITERAL directory here while Spark's
     * Hadoop side writes the data under /mnt/lake/t — a split-brain table
-    * whose vacuum, run from another CWD, sees zero commits and reclaims
-    * every live data dir. TableSink.overwrite carries the same guard with
-    * a friendlier deployment message, but TxLog is a public object with
-    * direct callers, and the guard only protected that one entry (r15
-    * review; the r13 split-brain scenario). Applied on every mutating
-    * entry (commit, vacuum, cleanupBefore — write reaches commit).
+    * whose log no reader from another CWD finds (the r13 split-brain
+    * scenario). Applied on [[commit]], which [[write]] reaches.
     */
   private def requirePosixRoot(table: String): Unit =
     // `*` not `+` after the first letter: RFC 3986 allows SINGLE-letter
@@ -118,7 +98,7 @@ object TxLog {
     * publish is pure metadata — on a delayed-allocation journaled FS a
     * power loss can surface a PUBLISHED <version>.json with zero/torn
     * bytes, which latestVersion counts as the head and commitRecord then
-    * rejects on every read, wedging vacuum and time travel permanently —
+    * rejects on every read, wedging the table's head permanently —
     * the r14 atomic-checkpoint fix closed that for process crashes, this
     * closes it for machine crashes (r15 review). Residual caveat, out of
     * java.nio's portable reach: full durability of the published NAME
@@ -141,26 +121,20 @@ object TxLog {
   private def pointerFile(table: String): Path =
     logDir(table).resolve("_last_checkpoint")
 
-  /** Versions with a published commit OR checkpoint file, ascending (one
-    * directory listing — the cold/maintenance path; hot reads go through
-    * [[latestVersion]]'s pointer+probe). Checkpoint files count so that
-    * [[vacuum]] after [[cleanupBefore]] still sees checkpointed versions'
-    * data dirs as referenced.
+  /** Versions with a published commit file, ascending (one directory
+    * listing — the path before the first checkpoint; later reads go
+    * through [[latestVersion]]'s pointer+probe).
     */
-  def versions(table: String): Seq[Long] = {
+  private def versions(table: String): Seq[Long] = {
     val dir = logDir(table)
     if (!Files.isDirectory(dir)) Seq.empty
     else {
       val s = Files.list(dir)
       try s.iterator().asScala
         .map(_.getFileName.toString)
-        .flatMap { n =>
-          if (n.endsWith(".checkpoint.json"))
-            n.stripSuffix(".checkpoint.json").toLongOption
-          else if (n.endsWith(".json")) n.stripSuffix(".json").toLongOption
-          else None
-        }
-        .toSeq.distinct.sorted
+        .filter(_.endsWith(".json"))
+        .flatMap(_.stripSuffix(".json").toLongOption)
+        .toSeq.sorted
       finally s.close()
     }
   }
@@ -176,8 +150,7 @@ object TxLog {
         .filter(_.canConvertToLong).map(_.asLong)
         // guard: a hint pointing past the head (possible only via manual
         // log surgery) must not make latestVersion invent versions
-        .filter(v => Files.isRegularFile(commitFile(table, v)) ||
-          Files.isRegularFile(checkpointFile(table, v)))
+        .filter(v => Files.isRegularFile(commitFile(table, v)))
     } catch { case _: Exception => None }
 
   /** Latest committed version: pointer read + forward existence probes
@@ -191,39 +164,16 @@ object TxLog {
       while (Files.isRegularFile(commitFile(table, v + 1))) v += 1
       v
     }
-    var v = probeFrom(checkpointHint(table) match {
+    val v = probeFrom(checkpointHint(table) match {
       case Some(h) => h
       case None => versions(table).lastOption.getOrElse(0L)
     })
-    // re-read the hint after probing: a concurrent cleanupBefore may have
-    // re-anchored the pointer and DELETED the range the probe walked, in
-    // which case the probe stalled below the true head — a stale answer a
-    // subsequent commit would fork the log against (r10 review). Hints
-    // only move forward, so this loop terminates.
-    var hint = checkpointHint(table)
-    while (hint.exists(_ > v)) {
-      v = probeFrom(hint.get)
-      hint = checkpointHint(table)
-    }
     if (v == 0L) None else Some(v)
   }
 
   def commitRecord(table: String, version: Long): Commit = {
-    val f = commitFile(table, version)
-    // cleaned-up versions survive through their checkpoint record; the
-    // fallback also covers the TOCTOU where a concurrent cleanupBefore
-    // deletes the plain file between the existence check and the read —
-    // the checkpoint record it anchored to is still there (r10 review)
-    val txt =
-      try {
-        val src = if (Files.isRegularFile(f)) f else checkpointFile(table, version)
-        new String(Files.readAllBytes(src), StandardCharsets.UTF_8)
-      } catch {
-        case _: java.nio.file.NoSuchFileException
-            if Files.isRegularFile(checkpointFile(table, version)) =>
-          new String(Files.readAllBytes(checkpointFile(table, version)),
-            StandardCharsets.UTF_8)
-      }
+    val txt = new String(Files.readAllBytes(commitFile(table, version)),
+      StandardCharsets.UTF_8)
     val node = mapper.readTree(txt)
     def field(k: String): String =
       Option(node.get(k)).map(_.asText).getOrElse(
@@ -257,16 +207,6 @@ object TxLog {
     recNode.put("action", action)
     val bytes = mapper.writeValueAsString(recNode)
       .getBytes(StandardCharsets.UTF_8)
-    // last-instant stale-head guard: if a cleanup re-anchored the pointer
-    // PAST this version since `cur` was computed, our link would recreate
-    // a just-deleted commit below the pointer — a forked log. (The
-    // latestVersion re-probe makes this window sub-microsecond; checking
-    // the hint here collapses the remaining practical exposure.)
-    // report the OBSERVED head (re-probed), not the attempted version: a
-    // retry loop that trusts the exception's current-version field would
-    // otherwise compute a wrong expected version (r10 ADVICE)
-    if (checkpointHint(table).exists(_ >= version))
-      throw CommitConflict(table, latestVersion(table).getOrElse(0L))
     val tmp = Files.createTempFile(logDir(table), s".tmp-$version-", ".json")
     // the write sits INSIDE the try: a failed write (disk full) must not
     // leak the temp file past the finally — no cleanup path ever removes
@@ -282,13 +222,10 @@ object TxLog {
     if (version % checkpointInterval == 0)
       try {
         // checkpoint records get the same atomicity as commits (temp +
-        // ATOMIC_MOVE), NOT an in-place Files.write: a truncated
-        // .checkpoint.json survives the swallowed exception below, then a
-        // later cleanup anchored above it deletes the plain commit — and
-        // from then on commitRecord throws a parse error vacuum's
-        // NoSuchFile guard does not catch, wedging maintenance and time
-        // travel permanently (r14 review). Two racing checkpointers write
-        // identical bytes; the replacing atomic move is idempotent.
+        // ATOMIC_MOVE), NOT an in-place Files.write, which can leave a
+        // truncated .checkpoint.json behind the swallowed exception below
+        // (r14 review). Two racing checkpointers write identical bytes;
+        // the replacing atomic move is idempotent.
         val ctmp = Files.createTempFile(
           logDir(table), s".ckpt-$version-", ".json")
         try {
@@ -303,53 +240,23 @@ object TxLog {
   }
 
   /** Atomically replace `_last_checkpoint` with `version`, but only if it
-    * moves the pointer FORWARD. Monotonicity is load-bearing, not cosmetic:
-    * [[cleanupBefore]] deletes plain commits below the pointer's anchor, so
-    * a STALE checkpointer (slept between its checkpoint write and its
-    * pointer move while newer commits + a cleanup happened) that rewound
-    * the pointer would strand [[latestVersion]]'s forward probe below the
-    * deleted range — a stale head, and a forked log once the next writer
-    * commits against it. The check-then-move pair runs under a FileLock on
-    * `_pointer.lock` (plus a per-table JVM monitor: POSIX file locks are
-    * process-scoped, and a second lock attempt from the same JVM throws
-    * OverlappingFileLockException instead of blocking), making the
-    * forward-only update a genuine CAS — a checkpointer that pauses
-    * arbitrarily long between its hint read and its move now re-reads
-    * INSIDE the exclusive section, so it can never rewind a pointer that
-    * a concurrent cleanup just re-anchored (the r9 ADVICE window). Lock
-    * unavailability (filesystems without byte-range locks) degrades to the
-    * pre-lock check-then-move, never to a failed checkpoint.
+    * moves the pointer forward. The check and the move are not one atomic
+    * step: a checkpointer that pauses between them can still move the
+    * pointer back below a newer one. That costs only extra forward probes in
+    * [[latestVersion]], since every commit above any checkpoint stays on
+    * disk.
     */
-  private[operators] def movePointerForward(table: String, version: Long): Unit = {
-    val monitor = pointerMonitors.computeIfAbsent(table, _ => new Object)
-    monitor.synchronized {
-      val locked =
-        try {
-          val ch = java.nio.channels.FileChannel.open(
-            logDir(table).resolve("_pointer.lock"),
-            java.nio.file.StandardOpenOption.CREATE,
-            java.nio.file.StandardOpenOption.WRITE)
-          try Some((ch, ch.lock()))
-          catch { case _: Exception => ch.close(); None }
-        } catch { case _: Exception => None }
-      try {
-        if (checkpointHint(table).exists(_ >= version)) return
-        val ptmp = Files.createTempFile(logDir(table), ".tmp-ptr-", ".json")
-        try {
-          writeDurable(ptmp, s"""{"version":$version}""".getBytes(
-            StandardCharsets.UTF_8))
-          Files.move(ptmp, pointerFile(table),
-            StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
-        } finally Files.deleteIfExists(ptmp) // a failed move (e.g. no
-        // ATOMIC_MOVE on this fs) must not deposit an orphan per attempt
-      } finally locked.foreach { case (ch, lk) =>
-        try { lk.release(); ch.close() } catch { case _: Exception => () }
-      }
-    }
+  private def movePointerForward(table: String, version: Long): Unit = {
+    if (checkpointHint(table).exists(_ >= version)) return
+    val ptmp = Files.createTempFile(logDir(table), ".tmp-ptr-", ".json")
+    try {
+      writeDurable(ptmp, s"""{"version":$version}""".getBytes(
+        StandardCharsets.UTF_8))
+      Files.move(ptmp, pointerFile(table),
+        StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
+    } finally Files.deleteIfExists(ptmp) // a failed move (e.g. no
+    // ATOMIC_MOVE on this fs) must not deposit an orphan per attempt
   }
-
-  private val pointerMonitors =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
   /** Write `df` as the next version of `table` with an expected-version CAS:
     * data lands in a fresh UNIQUELY-NAMED staging dir first (never visible
@@ -360,7 +267,7 @@ object TxLog {
     * TxLogSpec's stale-writer case). Only the log assigns versions; data
     * dir names are writer-unique, exactly like Delta's uniquely-named data
     * files. Returns the committed version; a losing writer's staging dir
-    * becomes an orphan that [[vacuum]] reclaims.
+    * becomes an inert orphan no commit points at.
     */
   def write(spark: SparkSession, table: String, df: DataFrame,
       expected: Long, action: String = "write"): Long = {
@@ -387,104 +294,7 @@ object TxLog {
   /** The data dir of the latest committed version; throws if never
     * committed.
     */
-  def headDir(table: String): String =
+  private def headDir(table: String): String =
     versionDir(table, latestVersion(table).getOrElse(
       throw new IllegalStateException(s"$table has no committed versions")))
-
-  /** Delete data dirs no commit references (orphans from crashed or losing
-    * writers), SKIPPING dirs modified within `retainMs` — an in-flight
-    * writer between write() and commit() is indistinguishable from a crash
-    * orphan, and reclaiming its staging dir would commit a version with no
-    * data behind it. Never touches the log or committed dirs. Returns the
-    * removed dir names. `retainMs = 0` (reclaim everything unreferenced,
-    * the pre-retention behavior) requires NO concurrent writers — tests and
-    * offline maintenance only.
-    */
-  def vacuum(table: String,
-      retainMs: Long = defaultVacuumRetainMs): Seq[String] = {
-    requirePosixRoot(table)
-    // A version listed a moment ago can lose its record to a CONCURRENT
-    // cleanupBefore. If both its files are verifiably gone now, that is
-    // cleanup's documented outcome — the data dir becomes an intentional
-    // orphan, so skipping it from the committed set is correct. Any other
-    // read failure (corrupt record, transient IO) must ABORT: an unreadable
-    // record means an unknown dataDir, and guessing it uncommitted would
-    // vacuum live data.
-    val committed = versions(table).flatMap { v =>
-      try Some(commitRecord(table, v).dataDir)
-      catch {
-        case _: java.nio.file.NoSuchFileException
-            if !Files.isRegularFile(commitFile(table, v)) &&
-              !Files.isRegularFile(checkpointFile(table, v)) => None
-      }
-    }.toSet
-    val root = Paths.get(table)
-    if (!Files.isDirectory(root)) return Seq.empty
-    val cutoff = System.currentTimeMillis - retainMs
-    val s = Files.list(root)
-    val orphans =
-      try s.iterator().asScala
-        .filter(p => Files.isDirectory(p) &&
-          p.getFileName.toString.startsWith("v") &&
-          !committed.contains(p.getFileName.toString) &&
-          Files.getLastModifiedTime(p).toMillis <= cutoff)
-        .toSeq
-      finally s.close()
-    orphans.foreach(deleteRecursively)
-    orphans.map(_.getFileName.toString)
-  }
-
-  /** Cap `_txlog/` growth: drop plain commit files for versions strictly
-    * below `horizon`, where `horizon` must be at or below an existing
-    * checkpoint (so [[latestVersion]]'s probe path and [[versions]] both
-    * stay anchored). Checkpoint files and the pointer are never removed.
-    * Cleaned versions lose time travel unless checkpointed — Delta's
-    * `logRetentionDuration` trade. Their data dirs become vacuum-eligible
-    * orphans unless a checkpoint still references them. Returns the removed
-    * file names.
-    */
-  /** Versions with a checkpoint record, ascending — the cleanup anchors.
-    * Shared with the maintenance entry point ([[graft.tools.Maintain]])
-    * so the two can never drift on the checkpoint file naming.
-    */
-  private[graft] def checkpointVersions(table: String): Seq[Long] = {
-    val dir = logDir(table)
-    if (!Files.isDirectory(dir)) Seq.empty[Long]
-    else {
-      val s = Files.list(dir)
-      try s.iterator().asScala.map(_.getFileName.toString)
-        .filter(_.endsWith(".checkpoint.json"))
-        .flatMap(_.stripSuffix(".checkpoint.json").toLongOption)
-        .toSeq.sorted
-      finally s.close()
-    }
-  }
-
-  def cleanupBefore(table: String, horizon: Long): Seq[String] = {
-    requirePosixRoot(table)
-    val ckpts = checkpointVersions(table)
-    require(ckpts.exists(_ >= horizon),
-      s"cleanup horizon $horizon has no checkpoint at or above it — " +
-        "readers would lose the log head anchor")
-    // Re-anchor the pointer BEFORE deleting: latestVersion's probe walks
-    // plain commits strictly above the pointer, so the invariant "every
-    // commit above the pointer exists" must hold across cleanup. A stale
-    // or missing pointer (best-effort checkpoint writes can lose it) that
-    // sat below `horizon` would otherwise strand the probe in the deleted
-    // range — stale head, then a forked log on the next commit.
-    movePointerForward(table, ckpts.filter(_ >= horizon).min)
-    val doomed = versions(table)
-      .filter(v => v < horizon && Files.isRegularFile(commitFile(table, v)))
-    doomed.foreach(v => Files.deleteIfExists(commitFile(table, v)))
-    doomed.map(v => commitFile(table, v).getFileName.toString)
-  }
-
-  private def deleteRecursively(p: Path): Unit = {
-    if (Files.isDirectory(p)) {
-      val s = Files.list(p)
-      try s.iterator().asScala.toSeq.foreach(deleteRecursively)
-      finally s.close()
-    }
-    Files.deleteIfExists(p)
-  }
 }

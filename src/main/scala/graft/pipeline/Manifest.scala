@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{Encoders, SparkSession}
 
 /** Pipeline status machine values (reference `main.py:65-71`). */
 object Status {
@@ -143,11 +143,5 @@ object Manifest {
             registrosCorrigidos = nums("registrosCorrigidos"))
         }
     }
-  }
-
-  def toDataset(spark: SparkSession, entries: Seq[ManifestEntry])
-      : Dataset[ManifestEntry] = {
-    import spark.implicits._
-    spark.createDataset(entries)
   }
 }

@@ -6,7 +6,6 @@ import java.util.zip.{ZipException, ZipFile}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 object RfbPipeline {
   /** `.zip` anchors from a directory-listing page (reference
@@ -584,13 +583,6 @@ class RfbPipeline(
     val (ok, bad) = entries.partition(_.statusCarga == Status.Sucesso)
     PipelineReport(ok.size.toLong, bad.size.toLong, bad)
   }
-
-  /** Status aggregation as a DataFrame (the `groupBy(status).count()` shape
-    * of SURVEY §2.1 #16).
-    */
-  def statusSummary(entries: Seq[ManifestEntry]): DataFrame =
-    Manifest.toDataset(spark, entries).groupBy("statusCarga")
-      .agg(count(lit(1)).as("n")).orderBy("statusCarga")
 
   /** Full run: all phases in order (reference `main.py:272-279`). */
   def run(listingUrl: String): Seq[ManifestEntry] = {

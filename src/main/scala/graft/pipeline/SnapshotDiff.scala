@@ -18,20 +18,14 @@ object SnapshotDiff {
     * `removed` (only in `m1`), `changed` (key in both, any column differs).
     * `keyCols` defaults to the first raw column (the RFB code).
     *
-    * Snapshots are read THROUGH the sink (`sink0`, default a rename-mode
-    * [[ParquetSink]] on `outDir`), never via a raw directory read: a
-    * versioned (TxLog) table's root holds every published version's
-    * `v{N}-{uuid}` data dir, so a parquet read of `root` unions ALL
-    * versions into one frame — every key doubled, the diff silently wrong
-    * — and a raw read also skips readBack's mid-swap crash recovery in
-    * rename mode (r15 review). Callers of versioned tables pass their
-    * versioned sink.
+    * Snapshots are read through [[ParquetSink.readBack]], never via a raw
+    * directory read, so a diff over a table caught mid-swap gets the
+    * sink's crash recovery (r15 review).
     */
   def diff(spark: SparkSession, outDir: String, table: String,
       m1: String, m2: String,
-      keyCols: Seq[String] = Seq("c0"),
-      sink0: TableSink = null): DataFrame = {
-    val sink = Option(sink0).getOrElse(new ParquetSink(outDir))
+      keyCols: Seq[String] = Seq("c0")): DataFrame = {
+    val sink = new ParquetSink(outDir)
     def snap(m: String): DataFrame = sink.readBack(spark, table, m)
     def keyed(df: DataFrame): DataFrame = {
       val dataCols = df.columns.filterNot(keyCols.contains).sorted
@@ -54,7 +48,7 @@ object SnapshotDiff {
 
   /** Summary counts per status. */
   def summary(spark: SparkSession, outDir: String, table: String,
-      m1: String, m2: String, sink0: TableSink = null): DataFrame =
-    diff(spark, outDir, table, m1, m2, sink0 = sink0)
+      m1: String, m2: String): DataFrame =
+    diff(spark, outDir, table, m1, m2)
       .groupBy("status").agg(count(lit(1)).as("n")).orderBy("status")
 }

@@ -36,31 +36,14 @@ trait TableSink {
 /** Lake sink: one parquet directory per (table, snapshot) — the side-by-side
   * time-travel layout of the reference's per-month DB schemas
   * (`main.py:177`), with the atomic-overwrite upgrade documented in
-  * [[RfbPipeline]].
-  *
-  * Two overwrite protocols, selected by `versioned`:
-  *  - `false` (default): staging dir + rename+rename swap. Atomic and O(1)
-  *    on HDFS/local rename semantics — the right default for those stores.
-  *    On S3-class object stores rename is a non-atomic O(data) copy+delete,
-  *    which breaks BOTH properties the swap relies on (r10 verdict gap #2).
-  *  - `true`: write-once versioned data dirs published through the
-  *    [[graft.operators.TxLog]] commit protocol — ZERO renames of existing
-  *    data, ever. Each overwrite writes a fresh `v{N}-{uuid}` dir under the
-  *    snapshot root and then atomically publishes it as version N; readers
-  *    ([[readBack]]) resolve the log's head and read exactly that dir, so
-  *    a reader sees the old snapshot or the new one, never a mix, and a
-  *    crash at any point leaves the previous version fully readable (the
-  *    losing/crashed writer's dir is inert — no commit record points at
-  *    it; [[graft.operators.TxLog.vacuum]] reclaims such orphans later).
-  *    Concurrent overwrites of the same snapshot CAS on the version: one
-  *    wins, the other gets `CommitConflict` with nothing corrupted.
-  *    The bundled TxLog publishes via java.nio hard links, so this mode
-  *    wants a POSIX-reachable path (local/NFS); an actual S3 deployment
-  *    swaps the link for the store's put-if-absent, as documented on TxLog
-  *    — the protocol and this sink's use of it are unchanged by that swap.
+  * [[RfbPipeline]]. The swap is atomic where rename is atomic (local
+  * filesystem, HDFS), and not on an object store, where rename is a copy.
   */
-class ParquetSink(outDir: String, versioned: Boolean = false)
-    extends TableSink {
+class ParquetSink(outDir: String) extends TableSink {
+  private val Success = "_SUCCESS"
+  private val StagingPrefix = "_staging_"
+  private val BackupPrefix = "_backup_"
+
   private def path(table: String, refMonth: String, prefix: String = "") =
     new org.apache.hadoop.fs.Path(s"$outDir/$table/${prefix}ref_month=$refMonth")
 
@@ -78,93 +61,12 @@ class ParquetSink(outDir: String, versioned: Boolean = false)
     * gone and the new still hidden, with no recovery path — the r9 ADVICE
     * finding.
     */
-  /** Versioned-mode snapshot root (a TxLog table). SAME path as rename
-    * mode's final dir — the two protocols write incompatible layouts there
-    * (part files + `_SUCCESS` directly vs `_txlog/` + write-once `v{N}-*`
-    * data dirs), so every entry point guards against the other mode's
-    * markers ([[assertLayout]]) instead of silently mixing: a rename-mode
-    * overwrite of a versioned root would swap ALL published versions aside
-    * and vaporize time travel; a versioned overwrite of a rename-mode dir
-    * would leave readers of either mode seeing half a table.
-    */
-  private def versionedRoot(table: String, refMonth: String): String =
-    s"$outDir/$table/ref_month=$refMonth"
-
-  /** Refuse loudly when `p` carries the OTHER protocol's layout.
-    * Discriminators: rename mode leaves `_SUCCESS` directly under the dir
-    * (the FileOutputCommitter contract this sink's recovery already relies
-    * on) — or, after a mid-swap crash, NO final dir at all but live data in
-    * the `_staging_`/`_backup_` siblings, which the rename-mode recovery
-    * will later rename over whatever now occupies the final path; a
-    * versioned root has `_txlog/` — or, before its FIRST commit lands, only
-    * a `v{N}-*` data dir (TxLog.write writes data before the commit
-    * creates the log dir), which the rename swap would silently move aside
-    * under a live writer. So the versioned branch probes all three rename
-    * artifacts (r13 ADVICE — the `_SUCCESS`-only probe let a versioned
-    * sink initialize a TxLog root at a crashed rename table's path, and
-    * the recovery then renamed the staging dir onto the TxLog root) and
-    * the rename branch probes the log dir AND the data-dir glob (r14
-    * review — the asymmetric mirror). A handful of `getFileStatus`-class
-    * probes + one glob per call — noise next to the write they guard.
-    * (r11 order #3 / r12 verdict item.) Marker names are the shared
-    * [[SnapshotLayout]] vocabulary.
-    */
-  private def assertLayout(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Unit = {
-    val found: Option[org.apache.hadoop.fs.Path] =
-      if (versioned) {
-        val parent = p.getParent
-        val name = p.getName
-        Seq(new org.apache.hadoop.fs.Path(p, SnapshotLayout.Success),
-          new org.apache.hadoop.fs.Path(parent,
-            s"${SnapshotLayout.StagingPrefix}$name"),
-          new org.apache.hadoop.fs.Path(parent,
-            s"${SnapshotLayout.BackupPrefix}$name"))
-          .find(fs.exists)
-      } else {
-        val tx = new org.apache.hadoop.fs.Path(p, SnapshotLayout.TxLogDirName)
-        if (fs.exists(tx)) Some(tx)
-        else Option(fs.globStatus(
-            new org.apache.hadoop.fs.Path(p, SnapshotLayout.VersionDirGlob)))
-          .flatMap(_.headOption).map(_.getPath)
-      }
-    found.foreach(m =>
-      throw new IllegalStateException(
-        s"$p holds a ${if (versioned) "rename-mode (staging-swap)"
-          else "versioned (TxLog)"} table (found $m), but this sink " +
-          s"was constructed with versioned=$versioned; the two overwrite " +
-          "protocols cannot share one table dir — use a sink matching the " +
-          "existing layout, or a different outDir"))
-  }
-
   override def overwrite(df: DataFrame, table: String, refMonth: String): Unit = {
-    if (versioned) {
-      val root = versionedRoot(table, refMonth)
-      // reject ANY scheme-prefixed root, including Hadoop's canonical
-      // single-slash form ("file:/mnt/lake"): the old "://" probe let that
-      // one through, and TxLog's java.nio side then resolved "file:/..."
-      // as a CWD-relative literal directory while Spark's Hadoop side wrote
-      // the data under /mnt/lake — a split-brain table whose vacuum (run
-      // from another CWD) would see zero commits and reclaim every live
-      // data dir (r13 review wave)
-      require(!root.matches("^[A-Za-z][A-Za-z0-9+.-]+:/.*"),
-        "versioned mode publishes through the bundled TxLog (java.nio hard " +
-          s"links) and needs a plain POSIX path (no URI scheme), got $root " +
-          "— see the class doc for the object-store deployment note")
-      val rootPath = new org.apache.hadoop.fs.Path(root)
-      assertLayout(rootPath.getFileSystem(
-        df.sparkSession.sparkContext.hadoopConfiguration), rootPath)
-      val expected = graft.operators.TxLog.latestVersion(root).getOrElse(0L)
-      graft.operators.TxLog.write(df.sparkSession, root, df, expected,
-        action = "overwrite")
-      return
-    }
     val finalPath = path(table, refMonth)
-    val staging = path(table, refMonth, SnapshotLayout.StagingPrefix)
-    val backup = path(table, refMonth, SnapshotLayout.BackupPrefix)
+    val staging = path(table, refMonth, StagingPrefix)
+    val backup = path(table, refMonth, BackupPrefix)
     val fs = finalPath.getFileSystem(
       df.sparkSession.sparkContext.hadoopConfiguration)
-    assertLayout(fs, finalPath) // BEFORE staging: never swap a TxLog root aside
     df.write.mode(SaveMode.Overwrite).parquet(staging.toString)
     fs.delete(backup, true) // stale backup from an earlier crashed swap
     if (fs.exists(finalPath) && !fs.rename(finalPath, backup))
@@ -216,7 +118,7 @@ class ParquetSink(outDir: String, versioned: Boolean = false)
     */
   private def isComplete(fs: org.apache.hadoop.fs.FileSystem,
       p: org.apache.hadoop.fs.Path): Boolean =
-    fs.exists(new org.apache.hadoop.fs.Path(p, SnapshotLayout.Success))
+    fs.exists(new org.apache.hadoop.fs.Path(p, Success))
 
   override def readBack(spark: SparkSession, table: String, refMonth: String): DataFrame =
     graft.ParquetRead(spark, snapshotDir(spark, table, refMonth))
@@ -228,26 +130,13 @@ class ParquetSink(outDir: String, versioned: Boolean = false)
   override def loadedRows(spark: SparkSession, table: String, refMonth: String): Long =
     graft.ParquetRead.rowCount(spark, snapshotDir(spark, table, refMonth))
 
-  /** The one dir holding the snapshot's data files, after the layout check
-    * and crash recovery: the TxLog head's `v{N}-*` dir in versioned mode,
-    * else the final dir.
+  /** The one dir holding the snapshot's data files: the final dir, after
+    * crash recovery.
     */
   private def snapshotDir(spark: SparkSession, table: String,
       refMonth: String): String = {
-    if (versioned) {
-      // head resolution IS the recovery story: an uncommitted (crashed or
-      // losing) writer's dir has no commit record, so the log's head still
-      // names the last fully-published snapshot — nothing to promote or
-      // restore
-      val rootPath = new org.apache.hadoop.fs.Path(
-        versionedRoot(table, refMonth))
-      assertLayout(rootPath.getFileSystem(
-        spark.sparkContext.hadoopConfiguration), rootPath)
-      return graft.operators.TxLog.headDir(versionedRoot(table, refMonth))
-    }
     val finalPath = path(table, refMonth)
     val fs = finalPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assertLayout(fs, finalPath)
     if (!fs.exists(finalPath)) {
       // crash inside a swap: prefer the complete NEW snapshot (it was
       // fully written — the swap just didn't finish), else the backup.
@@ -260,8 +149,8 @@ class ParquetSink(outDir: String, versioned: Boolean = false)
       // the read. The backup leg re-probes finalPath right before its
       // rename: renaming onto a now-existing final would otherwise fall
       // back to a COPY INTO the new snapshot dir on the local filesystem.
-      val staging = path(table, refMonth, SnapshotLayout.StagingPrefix)
-      val backup = path(table, refMonth, SnapshotLayout.BackupPrefix)
+      val staging = path(table, refMonth, StagingPrefix)
+      val backup = path(table, refMonth, BackupPrefix)
       try {
         if (isComplete(fs, staging)) fs.rename(staging, finalPath)
         else if (fs.exists(backup) && !fs.exists(finalPath))

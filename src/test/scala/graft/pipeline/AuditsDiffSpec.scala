@@ -79,26 +79,4 @@ class AuditsDiffSpec extends AnyFunSuite {
       .collect().map(r => (r.getString(0), r.getLong(1))).toMap
     assert(s == Map("added" -> 1L, "removed" -> 1L, "changed" -> 1L))
   }
-
-  test("snapshot diff reads VERSIONED tables through the sink, not the raw dir") {
-    import spark.implicits._
-    // a TxLog table's root holds EVERY published version's v{N}-{uuid}
-    // data dir; the old raw spark.read.parquet(root) unioned them all —
-    // every key doubled, the diff silently wrong (r15 review). Two
-    // versions per month prove readBack's head resolution is what feeds
-    // the diff.
-    val out = Files.createTempDirectory("diffv-out").toString
-    val sink = new ParquetSink(out, versioned = true)
-    sink.overwrite(Seq(("001", "stale"), ("099", "stale"))
-      .toDF("c0", "c1"), "rfb_cnaes", "202601")
-    sink.overwrite(Seq(("001", "Alpha"), ("002", "Beta"), ("003", "Gamma"))
-      .toDF("c0", "c1"), "rfb_cnaes", "202601")
-    sink.overwrite(Seq(("001", "stale"), ("098", "stale"))
-      .toDF("c0", "c1"), "rfb_cnaes", "202602")
-    sink.overwrite(Seq(("002", "Beta"), ("003", "Gamma v2"), ("004", "Delta"))
-      .toDF("c0", "c1"), "rfb_cnaes", "202602")
-    val d = SnapshotDiff.diff(spark, out, "rfb_cnaes", "202601", "202602",
-      sink0 = sink).collect().map(r => (r.getString(0), r.getString(1))).toSet
-    assert(d == Set(("004", "added"), ("001", "removed"), ("003", "changed")))
-  }
 }

@@ -19,7 +19,7 @@ import graft.operators.TxLog
   * rows to `spark.read.parquet` on the same dir, and that building the
   * frame launches no Spark job. The audit's row count
   * ([[ParquetSink.loadedRows]]) sums the footers of the same dir, also
-  * with no Spark job.
+  * with no Spark job, including after the staging swap's crash recovery.
   */
 class LakeReadSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -77,8 +77,7 @@ class LakeReadSpec extends AnyFunSuite {
     assert(df.columns.toSeq === Seq("k", "v"))
   }
 
-  test("a versioned TxLog version, through readVersion and the versioned " +
-    "sink") {
+  test("a TxLog version, through readVersion") {
     val root = Files.createTempDirectory("lake-read").toString
     val v1 = TxLog.write(spark, root, Seq((1, "a"), (2, "b")).toDF("k", "v"), 0L)
     val v2 = TxLog.write(spark, root, Seq((3, 4.5)).toDF("k", "x"), v1)
@@ -89,12 +88,6 @@ class LakeReadSpec extends AnyFunSuite {
       assert(jobs === 0, s"version $v")
       assertSameAsPlainRead(df, dataDir(v))
     }
-    val out = Files.createTempDirectory("lake-read").toString
-    val sink = new ParquetSink(out, versioned = true)
-    sink.overwrite(Seq(("x", 1L)).toDF("c0", "c1"), "t", "202401")
-    val (df, jobs) = jobsDuring(sink.readBack(spark, "t", "202401"))
-    assert(jobs === 0)
-    assert(df.collect().map(_.toString).toSeq === Seq("[x,1]"))
   }
 
   /** `sink.loadedRows` equals `spark.read.parquet(dir).count()` and
@@ -127,14 +120,41 @@ class LakeReadSpec extends AnyFunSuite {
     assertFooterCount(sink, "t", s"$out/t/ref_month=202401", 0L)
   }
 
-  test("loadedRows of a versioned sink counts the head version only") {
+  /** A 5-row snapshot of `t` plus a 12-row staging dir beside it, as an
+    * overwrite that stopped inside its swap leaves them; `complete = false`
+    * drops the staging dir's `_SUCCESS`, as a crash mid-write does.
+    */
+  private def crashedSwap(complete: Boolean): (ParquetSink, Path, Path) = {
     val out = Files.createTempDirectory("lake-read").toString
-    val sink = new ParquetSink(out, versioned = true)
-    sink.overwrite(spark.range(0, 50, 1, 3).toDF("k"), "t", "202401")
-    sink.overwrite(spark.range(0, 20, 1, 2).toDF("k"), "t", "202401")
-    val root = s"$out/t/ref_month=202401"
-    assert(new java.io.File(root).list().count(_.matches("v\\d+-.*")) === 2)
-    assertFooterCount(sink, "t", TxLog.headDir(root), 20L)
+    val sink = new ParquetSink(out)
+    sink.overwrite(spark.range(0, 5, 1, 2).toDF("k"), "t", "202401")
+    val staging = new Path(s"$out/t/_staging_ref_month=202401")
+    spark.range(0, 12, 1, 3).toDF("k").write.parquet(staging.toString)
+    val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!complete) assert(fs.delete(new Path(staging, "_SUCCESS"), false))
+    (sink, new Path(s"$out/t/ref_month=202401"), staging)
+  }
+
+  test("loadedRows after a crash inside the swap promotes the complete " +
+    "staging dir and counts it") {
+    val (sink, dir, staging) = crashedSwap(complete = true)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // the swap's first rename ran (final moved aside), its second did not
+    assert(fs.rename(dir, new Path(dir.getParent, "_backup_ref_month=202401")))
+    assertFooterCount(sink, "t", dir.toString, 12L)
+    assert(!fs.exists(staging))
+  }
+
+  test("loadedRows beside a partial staging dir counts the old snapshot") {
+    val (sink, dir, staging) = crashedSwap(complete = false)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // crash mid-write: the final dir is untouched
+    assertFooterCount(sink, "t", dir.toString, 5L)
+    // a retried write crashed after an earlier swap had moved final aside:
+    // the backup is restored and counted, the partial staging ignored
+    assert(fs.rename(dir, new Path(dir.getParent, "_backup_ref_month=202401")))
+    assertFooterCount(sink, "t", dir.toString, 5L)
+    assert(fs.exists(staging))
   }
 
   test("a dir whose data files are gone raises the plain read's error") {

@@ -2,8 +2,6 @@ package graft.pipeline
 
 import java.nio.file.Files
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.fs.Path
 
 import org.scalatest.funsuite.AnyFunSuite
@@ -69,194 +67,6 @@ class ParquetSinkSpec extends AnyFunSuite {
       .select("c0").as[String].collect().toSet === Set("v2"))
   }
 
-  // ---- versioned mode (object-store-safe: zero renames of existing data) --
-
-  test("versioned: overwrite publishes atomically and never touches old data") {
-    val out = Files.createTempDirectory("psinkv").toString
-    val sink = new ParquetSink(out, versioned = true)
-    sink.overwrite(Seq(("1", "a")).toDF("c0", "c1"), "rfb_paises", "202401")
-    val root = java.nio.file.Paths.get(s"$out/rfb_paises/ref_month=202401")
-    val v1Dir = {
-      val s = Files.list(root)
-      try s.iterator().asScala.filter(_.getFileName.toString.startsWith("v1-"))
-        .toSeq.head
-      finally s.close()
-    }
-    // snapshot v1's exact file set + mtimes: the second overwrite must be
-    // purely ADDITIVE (this is what makes the mode object-store safe — no
-    // rename of existing data ever happens, so S3's non-atomic O(data)
-    // rename never runs)
-    def fingerprint(p: java.nio.file.Path): Set[(String, Long)] = {
-      val s = Files.walk(p)
-      try s.iterator().asScala.filter(Files.isRegularFile(_))
-        .map(f => (f.toString, Files.getLastModifiedTime(f).toMillis)).toSet
-      finally s.close()
-    }
-    val v1Before = fingerprint(v1Dir)
-    sink.overwrite(Seq(("2", "b"), ("3", "c")).toDF("c0", "c1"),
-      "rfb_paises", "202401")
-    assert(fingerprint(v1Dir) === v1Before,
-      "previous version's data dir must be untouched by an overwrite")
-    assert(sink.readBack(spark, "rfb_paises", "202401").count() === 2)
-    // time travel to the superseded snapshot still works through the log
-    assert(graft.operators.TxLog.readVersion(spark, root.toString, 1L)
-      .select("c0").as[String].collect().toSet === Set("1"))
-    // no rename-mode residue: versioned mode uses neither staging nor backup
-    val table = new Path(s"$out/rfb_paises")
-    val names = fs(table).listStatus(table).map(_.getPath.getName).toSet
-    assert(names === Set("ref_month=202401"), names.toString)
-  }
-
-  test("versioned: crash mid-write (partial uncommitted dir) — old snapshot stays the truth") {
-    val out = Files.createTempDirectory("psinkv").toString
-    val sink = new ParquetSink(out, versioned = true)
-    sink.overwrite(Seq(("old", "x")).toDF("c0", "c1"), "rfb_cnaes", "202401")
-    val root = s"$out/rfb_cnaes/ref_month=202401"
-    // a crashed writer's partial dir: parquet files, no _SUCCESS, no commit
-    Seq(("partial", "p")).toDF("c0", "c1").write.parquet(s"$root/v2-deadbeef")
-    Files.delete(java.nio.file.Paths.get(s"$root/v2-deadbeef/_SUCCESS"))
-    assert(sink.readBack(spark, "rfb_cnaes", "202401")
-      .select("c0").as[String].collect().toSet === Set("old"))
-    // the next overwrite publishes cleanly alongside the orphan
-    sink.overwrite(Seq(("v2", "w")).toDF("c0", "c1"), "rfb_cnaes", "202401")
-    assert(sink.readBack(spark, "rfb_cnaes", "202401")
-      .select("c0").as[String].collect().toSet === Set("v2"))
-  }
-
-  test("versioned: crash after write, before publish — complete dir is invisible until committed") {
-    val out = Files.createTempDirectory("psinkv").toString
-    val sink = new ParquetSink(out, versioned = true)
-    sink.overwrite(Seq(("old", "x")).toDF("c0", "c1"), "rfb_motivos", "202401")
-    val root = s"$out/rfb_motivos/ref_month=202401"
-    // COMPLETE data (with _SUCCESS) whose writer died before the commit:
-    // unlike rename mode there is nothing to promote — the publish step is
-    // the commit record, and it never happened, so readers keep the old
-    // snapshot (write-once dirs make this safe: the data can't be half-old)
-    Seq(("unpublished", "u")).toDF("c0", "c1").write.parquet(s"$root/v2-cafe0000")
-    assert(sink.readBack(spark, "rfb_motivos", "202401")
-      .select("c0").as[String].collect().toSet === Set("old"))
-    // vacuum with retention 0 reclaims the orphan, committed data untouched
-    val removed = graft.operators.TxLog.vacuum(root, retainMs = 0L)
-    assert(removed === Seq("v2-cafe0000"))
-    assert(sink.readBack(spark, "rfb_motivos", "202401")
-      .select("c0").as[String].collect().toSet === Set("old"))
-  }
-
-  test("versioned: concurrent overwrite loses the CAS cleanly, winner's data intact") {
-    val out = Files.createTempDirectory("psinkv").toString
-    val sink = new ParquetSink(out, versioned = true)
-    sink.overwrite(Seq(("w1", "x")).toDF("c0", "c1"), "rfb_quals", "202401")
-    val root = s"$out/rfb_quals/ref_month=202401"
-    // a second writer that resolved expected=0 BEFORE the first committed:
-    // its publish must CAS-fail, corrupting nothing
-    intercept[graft.operators.TxLog.CommitConflict] {
-      graft.operators.TxLog.write(spark, root,
-        Seq(("w2", "y")).toDF("c0", "c1"), expected = 0L)
-    }
-    assert(sink.readBack(spark, "rfb_quals", "202401")
-      .select("c0").as[String].collect().toSet === Set("w1"))
-  }
-
-  test("layout guard: rename-mode sink refuses a versioned (TxLog) root") {
-    // r11 order #3: the two protocols share the table path; a rename-mode
-    // overwrite of a TxLog root would swap EVERY published version aside —
-    // it must refuse before touching anything, and readBack likewise
-    val out = Files.createTempDirectory("psinkmix").toString
-    new ParquetSink(out, versioned = true)
-      .overwrite(Seq(("v", "x")).toDF("c0", "c1"), "rfb_mix", "202401")
-    val renameSink = new ParquetSink(out)
-    val exW = intercept[IllegalStateException] {
-      renameSink.overwrite(Seq(("r", "y")).toDF("c0", "c1"), "rfb_mix", "202401")
-    }
-    assert(exW.getMessage.contains("versioned (TxLog)"))
-    intercept[IllegalStateException] {
-      renameSink.readBack(spark, "rfb_mix", "202401")
-    }
-    // nothing was swapped or staged: the versioned table still reads
-    assert(new ParquetSink(out, versioned = true)
-      .readBack(spark, "rfb_mix", "202401")
-      .select("c0").as[String].collect().toSet === Set("v"))
-  }
-
-  test("layout guard: versioned sink refuses a rename-mode table dir") {
-    val out = Files.createTempDirectory("psinkmix").toString
-    new ParquetSink(out)
-      .overwrite(Seq(("r", "x")).toDF("c0", "c1"), "rfb_mix2", "202401")
-    val vSink = new ParquetSink(out, versioned = true)
-    val exW = intercept[IllegalStateException] {
-      vSink.overwrite(Seq(("v", "y")).toDF("c0", "c1"), "rfb_mix2", "202401")
-    }
-    assert(exW.getMessage.contains("rename-mode"))
-    intercept[IllegalStateException] {
-      vSink.readBack(spark, "rfb_mix2", "202401")
-    }
-    // the rename-mode table is untouched: no v*/dirs, no _txlog, still reads
-    assert(new ParquetSink(out).readBack(spark, "rfb_mix2", "202401")
-      .select("c0").as[String].collect().toSet === Set("r"))
-    val table = new Path(s"$out/rfb_mix2/ref_month=202401")
-    val names = fs(table).listStatus(table).map(_.getPath.getName)
-    assert(!names.exists(n => n == "_txlog" || n.startsWith("v1-")),
-      names.mkString(", "))
-  }
-
-  test("layout guard: versioned sink refuses a rename-mode table crashed mid-swap " +
-    "(final dir absent, staging/backup siblings live) — r13 ADVICE") {
-    // crash state between the swap's two renames: old data moved aside to
-    // _backup_, the complete new snapshot still in _staging_, final dir
-    // ABSENT. The old _SUCCESS-under-final probe saw nothing and let a
-    // versioned sink initialize a TxLog root there — which the rename-mode
-    // recovery would then rename the staging dir onto. Either sibling must
-    // trip the guard.
-    val out = Files.createTempDirectory("psinkmix").toString
-    val sink = new ParquetSink(out)
-    sink.overwrite(Seq(("r", "x")).toDF("c0", "c1"), "rfb_mix3", "202401")
-    val table = new Path(s"$out/rfb_mix3/ref_month=202401")
-    val staging = new Path(s"$out/rfb_mix3/_staging_ref_month=202401")
-    val backup = new Path(s"$out/rfb_mix3/_backup_ref_month=202401")
-    val f = fs(table)
-    assert(f.rename(table, staging)) // simulate: staged, not yet promoted
-    val vSink = new ParquetSink(out, versioned = true)
-    val exS = intercept[IllegalStateException] {
-      vSink.overwrite(Seq(("v", "y")).toDF("c0", "c1"), "rfb_mix3", "202401")
-    }
-    assert(exS.getMessage.contains("rename-mode") &&
-      exS.getMessage.contains("_staging_"))
-    intercept[IllegalStateException] { vSink.readBack(spark, "rfb_mix3", "202401") }
-    // same with only the backup sibling (crash after staging promoted but
-    // with the aside copy still present)
-    assert(f.rename(staging, backup))
-    val exB = intercept[IllegalStateException] {
-      vSink.overwrite(Seq(("v", "y")).toDF("c0", "c1"), "rfb_mix3", "202401")
-    }
-    assert(exB.getMessage.contains("_backup_"))
-    // nothing was initialized at the contested path: the rename-mode
-    // recovery still owns it
-    assert(!f.exists(new Path(table, "_txlog")))
-    assert(!f.exists(table))
-  }
-
-  test("layout guard: rename-mode sink refuses a versioned table before its " +
-    "FIRST commit (v-dir present, _txlog not yet created) — r14 review") {
-    // TxLog.write lands the v{N}-* data dir BEFORE commit() creates
-    // _txlog, so a versioned first write that crashed (or is in flight)
-    // shows only the data dir. The rename branch's _txlog-only probe
-    // passed and the swap would move the live writer's dir aside — the
-    // mirror of the r13 ADVICE staging-sibling gap.
-    val out = Files.createTempDirectory("psinkmix").toString
-    val inflight = new Path(s"$out/rfb_mix4/ref_month=202401/v1-deadbeef")
-    val f = fs(inflight)
-    f.mkdirs(inflight)
-    val renameSink = new ParquetSink(out)
-    val ex = intercept[IllegalStateException] {
-      renameSink.overwrite(Seq(("r", "y")).toDF("c0", "c1"), "rfb_mix4", "202401")
-    }
-    assert(ex.getMessage.contains("v1-deadbeef"))
-    intercept[IllegalStateException] { renameSink.readBack(spark, "rfb_mix4", "202401") }
-    // the in-flight dir is untouched — not swapped aside, not deleted
-    assert(f.exists(inflight))
-    assert(!f.exists(new Path(s"$out/rfb_mix4/_backup_ref_month=202401")))
-  }
-
   test("a concurrent reader's promotion of our staging is success, not failure") {
     // r13 review wave: writer between its two swap renames, a concurrent
     // readBack sees {final absent, staging complete}, promotes staging
@@ -294,19 +104,6 @@ class ParquetSinkSpec extends AnyFunSuite {
     }
     assert(sink.readBack(spark, "rfb_paises", "202401")
       .select("c0").as[String].collect().toSet === Set("old"))
-  }
-
-  test("versioned mode rejects scheme-prefixed roots, including file:/ (single slash)") {
-    // "file:/mnt/lake" slipped past the old "://" probe: TxLog's java.nio
-    // side then resolved it CWD-relative while Spark wrote under /mnt/lake
-    // — split-brain, and a vacuum from another CWD would reclaim live data
-    for (bad <- Seq("file:/tmp/lakeX", "file:///tmp/lakeX", "hdfs://nn/lake")) {
-      val ex = intercept[IllegalArgumentException] {
-        new ParquetSink(bad, versioned = true)
-          .overwrite(Seq(("1", "a")).toDF("c0", "c1"), "rfb_paises", "202401")
-      }
-      assert(ex.getMessage.contains("POSIX"), s"$bad: ${ex.getMessage}")
-    }
   }
 
   test("crash with final missing and staging partial: backup is restored") {

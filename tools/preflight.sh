@@ -18,16 +18,20 @@ SINCE="${1:-$(git log --grep 'end-of-round snapshot' -n1 --format=%H)}"
 [ -n "$SINCE" ] || SINCE=HEAD~1
 echo "preflight: diffing against $SINCE"
 
-# Operators run inside a caller's shared session, so none may change its
+# Queries run inside a caller's shared session, so no code may change its
 # conf at runtime: a concurrent query on the same session would plan under
-# the changed values. Cloned sessions (graft.streaming) are outside this
-# directory.
-echo "== gate 0: no session-conf mutation in graft.operators =="
-if grep -rnE 'conf\.(set|unset)\(' src/main/scala/graft/operators; then
-  echo "PREFLIGHT FAIL: conf.set/conf.unset under src/main/scala/graft/operators"
+# the changed values. Two files are allowed: EventsStream.scala, whose
+# clonedSession sets confs on the session it has just cloned, and
+# Tables.scala, whose rawEvents still toggles the nanos-as-long flag on the
+# caller's session (the one open exception, ROADMAP item 3). Builder
+# `.config(` calls do not match the pattern.
+echo "== gate 0: no session-conf mutation under src/main/scala =="
+if grep -rnE 'conf\.(set|unset)\(' --include='*.scala' src/main/scala |
+    grep -vE '^src/main/scala/graft/(streaming/EventsStream|Tables)\.scala:'; then
+  echo "PREFLIGHT FAIL: conf.set/conf.unset under src/main/scala"
   exit 1
 fi
-echo "operators conf OK"
+echo "session conf OK"
 
 # The load's count audit reads the lake's parquet footers
 # (TableSink.loadedRows), not a Spark scan of the read-back. A
