@@ -22,18 +22,20 @@ object Bench {
     "dd03_simhash" -> Seq("dd03_"),
     "dd07_embedding_lsh_neardup" -> Seq("dd07_"),
     "ss04_ann_ivf" -> Seq("ss04_"),
-    // gr01 also owns the gr_pairs table all four graph queries share AND
-    // the gr01_edges table gr03 now projects from (r14 consolidation) —
-    // gr02/gr03/rec01 measure marginal cost with both in place.
+    // gr01 also owns the gr_pairs table all four graph queries share, and
+    // the gr01_edges table that the distributed gr01 and gr03 loops share
+    // (built only above LocalGraph's cap) — gr02/gr03/rec01 measure
+    // marginal cost with both in place.
     "gr01_pagerank" -> Seq("gr01_", "gr_pairs"),
     // gr03 still owns its OWN output scratch (gr03_hops — clearing it makes
     // the timed pass recompute the BFS, not re-read parquet), but NOT the
-    // shared gr01_edges/gr_pairs it reads. Its number is therefore the
-    // marginal cost ONLY when gr01 ran earlier in the same pass (true in
-    // the full suite's forward pass; the reversed pass charges the build to
-    // gr03 and min-of-2 discards it). A standalone SPARK_GRAFT_ONLY=gr03
-    // run silently includes the shared edge build in BOTH passes — select
-    // gr01 alongside it for a marginal reading (r14 ADVICE).
+    // shared gr_pairs it reads (nor gr01_edges, which it reads only above
+    // the cap). Its number is therefore the marginal cost ONLY when gr01
+    // ran earlier in the same pass (true in the full suite's forward pass;
+    // the reversed pass charges the build to gr03 and min-of-2 discards
+    // it). A standalone SPARK_GRAFT_ONLY=gr03 run silently includes the
+    // shared pair build in BOTH passes — select gr01 alongside it for a
+    // marginal reading (r14 ADVICE).
     "gr03_bfs_hops" -> Seq("gr03_"),
     "dd06_dedup_clusters" -> Seq("dd06_"),
     "dd08_semantic_clusters" -> Seq("dd08_"),

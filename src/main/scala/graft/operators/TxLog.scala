@@ -1,7 +1,7 @@
 package graft.operators
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
@@ -10,7 +10,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Minimal lake transaction log — the commit protocol the versioned-dir
-  * writers (st16's `$lake/v$N`, the md01 scratch materializations) were
+  * writers (st16's micro-batch merge lake, md08's time-travel table) were
   * missing: without it a crashed writer leaves an orphan `v{N+1}` directory
   * that the next reader may pick up half-written, and two concurrent writers
   * silently clobber each other's version.
@@ -23,10 +23,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * {{{
   *   table/
-  *     _txlog/00000000000000000001.json            // one file per commit
-  *     _txlog/00000000000000000010.json
-  *     _txlog/00000000000000000010.checkpoint.json // every N commits
-  *     _txlog/_last_checkpoint                     // pointer (hint)
+  *     _txlog/00000000000000000001.json   // one file per commit
+  *     _txlog/00000000000000000002.json
   *     v1-3fa9c1d2/ part-*.parquet   // data dirs: writer-unique names,
   *     v2-8be40a77/ part-*.parquet   // immutable once committed
   * }}}
@@ -38,27 +36,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    This IS the expected-version CAS: a writer that prepared `v{N+1}`
   *    while another writer committed first gets [[CommitConflict]] and must
   *    re-read + retry against the new state; its orphan data dir is inert.
-  *  - '''Read''' = latest committed version only. Data dirs without a commit
-  *    file (crashed or losing writers) are invisible by construction —
-  *    readers never list data dirs, only the log.
-  *  - '''Checkpoint''' = every [[checkpointInterval]] commits the winning
-  *    writer duplicates its record as `<version>.checkpoint.json` and
-  *    atomically replaces the `_last_checkpoint` pointer (Delta's exact
-  *    layout). [[latestVersion]] then reads the pointer and PROBES forward
-  *    `<v+1>.json`, `<v+2>.json`, … — versions are contiguous by the CAS, so
-  *    existence probes from the last checkpoint find the head in
-  *    O(commits since checkpoint) without ever listing the log directory
-  *    (a 100k-commit table costs the same read as a 10-commit one). The
-  *    pointer is a hint: corrupt/stale/missing degrades to the listing
-  *    path, never to a wrong answer.
+  *  - '''Read''' = latest committed version only: the highest version in
+  *    one listing of the log. Data dirs without a commit file (crashed or
+  *    losing writers) are invisible by construction — readers never list
+  *    data dirs, only the log.
   *  - '''Time travel''' = pin any committed version. Nothing deletes a
   *    commit file or a committed data dir, so every version stays readable.
   *
-  * Scale notes: the hot read path is one pointer read + a handful of
-  * existence probes — the same per-PLAN (never per-task) metadata cost a
-  * 1000-executor driver pays once per query. Data stays in parquet dirs
-  * that Spark reads with full pushdown; the protocol adds zero cost to the
-  * scan path. A real multi-writer object-store deployment would swap
+  * Scale notes: the read path is one listing of the log — a per-PLAN
+  * (never per-task) metadata cost, linear in the commit count. The callers
+  * commit a few versions per table; Delta's pointer-and-probe read pays
+  * off only for logs of many thousands of commits. Data stays in parquet
+  * dirs that Spark reads with full pushdown; the protocol adds zero cost
+  * to the scan path. A real multi-writer object-store deployment would swap
   * `createLink` for the store's put-if-absent (S3 conditional PUT, ABFS
   * rename-without-overwrite) — the protocol shape is identical.
   */
@@ -68,9 +58,6 @@ object TxLog {
         s"version $version of $table was committed by another writer")
 
   final case class Commit(version: Long, dataDir: String, action: String)
-
-  /** A checkpoint (+ pointer update) is written every N commits. */
-  val checkpointInterval: Int = 10
 
   private val mapper = new ObjectMapper
 
@@ -94,13 +81,12 @@ object TxLog {
 
   /** Write bytes with StandardOpenOption.SYNC: the data (and file
     * metadata) reach the device BEFORE the caller publishes the name via
-    * createLink/ATOMIC_MOVE. Without it, Files.write buffers and the
+    * createLink. Without it, Files.write buffers and the
     * publish is pure metadata — on a delayed-allocation journaled FS a
     * power loss can surface a PUBLISHED <version>.json with zero/torn
     * bytes, which latestVersion counts as the head and commitRecord then
-    * rejects on every read, wedging the table's head permanently —
-    * the r14 atomic-checkpoint fix closed that for process crashes, this
-    * closes it for machine crashes (r15 review). Residual caveat, out of
+    * rejects on every read, wedging the table's head permanently (r15
+    * review). Residual caveat, out of
     * java.nio's portable reach: full durability of the published NAME
     * also needs a directory fsync; the failure mode there is a cleanly
     * MISSING head (the previous version serves), never a torn one.
@@ -115,15 +101,9 @@ object TxLog {
   private def commitFile(table: String, version: Long): Path =
     logDir(table).resolve(f"$version%020d.json")
 
-  private def checkpointFile(table: String, version: Long): Path =
-    logDir(table).resolve(f"$version%020d.checkpoint.json")
-
-  private def pointerFile(table: String): Path =
-    logDir(table).resolve("_last_checkpoint")
-
   /** Versions with a published commit file, ascending (one directory
-    * listing — the path before the first checkpoint; later reads go
-    * through [[latestVersion]]'s pointer+probe).
+    * listing; temp files and any other name that is not a bare version
+    * number are skipped).
     */
   private def versions(table: String): Seq[Long] = {
     val dir = logDir(table)
@@ -139,37 +119,10 @@ object TxLog {
     }
   }
 
-  /** The last-checkpoint pointer, if present and readable (a hint — stale
-    * or corrupt degrades to the listing path, never to a wrong answer).
+  /** Latest committed version: the highest one in one listing of the log
+    * (versions are contiguous by the CAS).
     */
-  private def checkpointHint(table: String): Option[Long] =
-    try {
-      val p = pointerFile(table)
-      if (!Files.isRegularFile(p)) None
-      else Option(mapper.readTree(Files.readAllBytes(p)).get("version"))
-        .filter(_.canConvertToLong).map(_.asLong)
-        // guard: a hint pointing past the head (possible only via manual
-        // log surgery) must not make latestVersion invent versions
-        .filter(v => Files.isRegularFile(commitFile(table, v)))
-    } catch { case _: Exception => None }
-
-  /** Latest committed version: pointer read + forward existence probes
-    * (versions are contiguous by the CAS), falling back to one listing when
-    * no checkpoint exists yet. Never lists the log when a checkpoint is
-    * present — O(commits since checkpoint), not O(commits).
-    */
-  def latestVersion(table: String): Option[Long] = {
-    def probeFrom(start: Long): Long = {
-      var v = start
-      while (Files.isRegularFile(commitFile(table, v + 1))) v += 1
-      v
-    }
-    val v = probeFrom(checkpointHint(table) match {
-      case Some(h) => h
-      case None => versions(table).lastOption.getOrElse(0L)
-    })
-    if (v == 0L) None else Some(v)
-  }
+  def latestVersion(table: String): Option[Long] = versions(table).lastOption
 
   def commitRecord(table: String, version: Long): Commit = {
     val txt = new String(Files.readAllBytes(commitFile(table, version)),
@@ -183,11 +136,7 @@ object TxLog {
 
   /** Publish `dataDir` as version `expected + 1` — the CAS step. The data
     * must already be fully written (it becomes immutable on publish).
-    * Throws [[CommitConflict]] if another writer committed first. Every
-    * [[checkpointInterval]]-th version also writes its checkpoint record and
-    * moves the `_last_checkpoint` pointer (best-effort: a failed checkpoint
-    * write leaves a committed version and a stale hint — slower reads, same
-    * answers).
+    * Throws [[CommitConflict]] if another writer committed first.
     */
   def commit(table: String, expected: Long, dataDir: String,
       action: String = "write"): Long = {
@@ -211,7 +160,7 @@ object TxLog {
     // the write sits INSIDE the try: a failed write (disk full) must not
     // leak the temp file past the finally — no cleanup path ever removes
     // .tmp-* orphans, so a retry loop accumulated one per attempt (r14
-    // review; matches movePointerForward's discipline)
+    // review)
     try {
       writeDurable(tmp, bytes) // synced BEFORE the link publishes the name
       Files.createLink(commitFile(table, version), tmp)
@@ -219,43 +168,7 @@ object TxLog {
       case _: java.nio.file.FileAlreadyExistsException =>
         throw CommitConflict(table, version)
     } finally Files.deleteIfExists(tmp)
-    if (version % checkpointInterval == 0)
-      try {
-        // checkpoint records get the same atomicity as commits (temp +
-        // ATOMIC_MOVE), NOT an in-place Files.write, which can leave a
-        // truncated .checkpoint.json behind the swallowed exception below
-        // (r14 review). Two racing checkpointers write identical bytes;
-        // the replacing atomic move is idempotent.
-        val ctmp = Files.createTempFile(
-          logDir(table), s".ckpt-$version-", ".json")
-        try {
-          writeDurable(ctmp, bytes)
-          Files.move(ctmp, checkpointFile(table, version),
-            StandardCopyOption.REPLACE_EXISTING,
-            StandardCopyOption.ATOMIC_MOVE)
-        } finally Files.deleteIfExists(ctmp)
-        movePointerForward(table, version)
-      } catch { case _: Exception => () }
     version
-  }
-
-  /** Atomically replace `_last_checkpoint` with `version`, but only if it
-    * moves the pointer forward. The check and the move are not one atomic
-    * step: a checkpointer that pauses between them can still move the
-    * pointer back below a newer one. That costs only extra forward probes in
-    * [[latestVersion]], since every commit above any checkpoint stays on
-    * disk.
-    */
-  private def movePointerForward(table: String, version: Long): Unit = {
-    if (checkpointHint(table).exists(_ >= version)) return
-    val ptmp = Files.createTempFile(logDir(table), ".tmp-ptr-", ".json")
-    try {
-      writeDurable(ptmp, s"""{"version":$version}""".getBytes(
-        StandardCharsets.UTF_8))
-      Files.move(ptmp, pointerFile(table),
-        StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
-    } finally Files.deleteIfExists(ptmp) // a failed move (e.g. no
-    // ATOMIC_MOVE on this fs) must not deposit an orphan per attempt
   }
 
   /** Write `df` as the next version of `table` with an expected-version CAS:

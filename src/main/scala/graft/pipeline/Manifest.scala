@@ -1,6 +1,13 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Encoders, SparkSession}
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths, StandardCopyOption}
+
+import scala.jdk.CollectionConverters._
+import scala.util.Try
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 
 /** Pipeline status machine values (reference `main.py:65-71`). */
 object Status {
@@ -41,107 +48,86 @@ case class ManifestEntry(
     registrosCarregados: Long = -1L,
     registrosCorrigidos: Seq[Long] = Nil)
 
-/** Manifest persistence: a `Dataset[ManifestEntry]` checkpointed as JSON
+/** Manifest persistence: one JSON object per entry, one line per object
   * (SURVEY §1.3). Saved after every per-file state transition, matching the
   * reference's crash-resume granularity (`main.py:103,120,162,220`).
   *
-  * Writes go driver-side via java.nio (atomic rename) — the manifest is tiny
-  * (~37 rows/month) so a Spark job per save would be pure overhead; reads go
-  * through the Spark JSON source so the schema stays the Encoder's.
+  * Both directions go driver-side via java.nio through one Jackson
+  * `mapper`, so this object is the one owner of the format. The manifest is
+  * tiny (~37 rows/month): a Spark job per save or load would be pure
+  * overhead, and a driver-local file needs no filesystem scheme.
   */
 object Manifest {
-  private val schema = Encoders.product[ManifestEntry].schema
-
-  def exists(path: String): Boolean =
-    java.nio.file.Files.exists(java.nio.file.Paths.get(path))
+  def exists(path: String): Boolean = Files.exists(Paths.get(path))
 
   // Jackson (Spark's own bundled copy + scala module) instead of the old
   // hand-rolled field-by-field writer: that one had to be kept in lockstep
   // with ManifestEntry by hand, and a field added to the case class but
   // not to save() silently vanished on the round-trip (r10 review)
   private val mapper = {
-    val m = new com.fasterxml.jackson.databind.ObjectMapper()
-    m.registerModule(com.fasterxml.jackson.module.scala.DefaultScalaModule)
+    val m = new ObjectMapper()
+    m.registerModule(DefaultScalaModule)
     m
   }
 
   def save(path: String, entries: Seq[ManifestEntry]): Unit = {
     val lines = entries.map(mapper.writeValueAsString)
-    val p = java.nio.file.Paths.get(path)
-    if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
-    val tmp = java.nio.file.Paths.get(path + ".tmp")
-    java.nio.file.Files.write(tmp,
-      lines.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp, p,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    val p = Paths.get(path)
+    if (p.getParent != null) Files.createDirectories(p.getParent)
+    val tmp = Paths.get(path + ".tmp")
+    Files.write(tmp, lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
+    Files.move(tmp, p, StandardCopyOption.REPLACE_EXISTING,
+      StandardCopyOption.ATOMIC_MOVE)
   }
 
-  def load(spark: SparkSession, path: String): Seq[ManifestEntry] = {
+  /** The entries [[save]] wrote at `path`; empty when there is no file.
+    *
+    * NULL-TOLERANT field mapping, not a typed decode of the case class: a
+    * manifest written by a previous build lacks every field added since,
+    * and crash-resume must work exactly when the code changed (r11
+    * review). So an absent or null field takes the case-class default, a
+    * null count inside `registrosCorrigidos` reads as -1 (the load rescans
+    * that file), and unknown fields are ignored. Blank lines are skipped.
+    * A line that does not parse, or has no `arquivo`, is unidentifiable
+    * (externally corrupt; save() is atomic): dropped, so its work is
+    * re-planned as new — idempotent repeat, never silent data loss.
+    */
+  def load(path: String): Seq[ManifestEntry] =
     if (!exists(path)) Seq.empty
-    // pin the file: scheme: save/exists are driver-local java.nio, but a
-    // schemeless path here would resolve against fs.defaultFS — on an HDFS
-    // cluster exists() says true and the read then misses the file,
-    // breaking exactly the crash-resume this manifest exists for (r10
-    // review). Raw path after the scheme, NOT toUri's percent-encoded
-    // form: Hadoop Path never decodes %XX, so a non-ASCII workDir (the
-    // lake uses pt-BR folder names) would percent-encode here and read a
-    // nonexistent literal %-named file (r15 review — the same latent bug
-    // the corrected-CSV read hit on cp437 member names)
-    else {
-      val d = ManifestEntry("", "")
-      spark.read.schema(schema)
-        .json("file:" +
-          java.nio.file.Paths.get(path).toAbsolutePath.toString)
-        .collect().toSeq
-        // NULL-TOLERANT row mapping, not .as[ManifestEntry]: the typed
-        // deserializer threw 'Null value appeared in non-nullable field'
-        // on any line missing a primitive field — i.e. every manifest
-        // written by a previous build after a field is ADDED — making
-        // crash-resume impossible exactly when the code changed (r11
-        // review). Missing fields take the case-class defaults. A line
-        // whose `arquivo` itself is null is unidentifiable (externally
-        // corrupt; save() is atomic): dropped, so its work is re-planned
-        // as new — idempotent repeat, never silent data loss.
-        .filter(r => r.getAs[String]("arquivo") != null)
-        .map { r =>
-          def s(n: String, dv: String): String =
-            Option(r.getAs[String](n)).getOrElse(dv)
-          def num(n: String, dv: Long): Long = {
-            val i = r.fieldIndex(n)
-            if (r.isNullAt(i)) dv else r.getAs[Number](i).longValue
-          }
-          def sq(n: String): Seq[String] = {
-            val i = r.fieldIndex(n)
-            if (r.isNullAt(i)) Nil else r.getSeq[String](i).toSeq
-          }
-          def nums(n: String): Seq[Long] = {
-            val i = r.fieldIndex(n)
-            if (r.isNullAt(i)) Nil
-            else r.getSeq[Any](i).map {
-              case x: Number => x.longValue
-              case _ => -1L // a null count: unknown, the load rescans
-            }.toSeq
-          }
-          ManifestEntry(
-            arquivo = r.getAs[String]("arquivo"),
-            url = s("url", ""),
-            statusDownload = s("statusDownload", d.statusDownload),
-            statusExtracao = s("statusExtracao", d.statusExtracao),
-            statusCorrecao = s("statusCorrecao", d.statusCorrecao),
-            statusCarga = s("statusCarga", d.statusCarga),
-            tentativasDownload =
-              num("tentativasDownload", d.tentativasDownload.toLong).toInt,
-            caminhoZip = s("caminhoZip", d.caminhoZip),
-            arquivosExtraidos = sq("arquivosExtraidos"),
-            arquivosCorrigidos = sq("arquivosCorrigidos"),
-            tabelasDestino = sq("tabelasDestino"),
-            linhasOriginais = num("linhasOriginais", d.linhasOriginais),
-            linhasCorrigidas = num("linhasCorrigidas", d.linhasCorrigidas),
-            registrosCarregados =
-              num("registrosCarregados", d.registrosCarregados),
-            registrosCorrigidos = nums("registrosCorrigidos"))
-        }
-    }
+    else Files.readAllLines(Paths.get(path), StandardCharsets.UTF_8)
+      .asScala.toSeq
+      .filter(_.trim.nonEmpty)
+      .flatMap(line => Try(mapper.readTree(line)).toOption)
+      .flatMap(entry)
+
+  private def entry(node: JsonNode): Option[ManifestEntry] = {
+    def get(n: String): Option[JsonNode] =
+      Option(node.get(n)).filterNot(_.isNull)
+    def s(n: String, dv: String): String = get(n).fold(dv)(_.asText)
+    def num(n: String, dv: Long): Long =
+      get(n).filter(_.isNumber).fold(dv)(_.asLong)
+    def sq(n: String): Seq[String] = get(n).fold(Seq.empty[String])(
+      _.asScala.map(e => if (e.isNull) null else e.asText).toSeq)
+    def nums(n: String): Seq[Long] = get(n).fold(Seq.empty[Long])(
+      _.asScala.map(e => if (e.isNumber) e.asLong else -1L).toSeq)
+    val d = ManifestEntry("", "")
+    get("arquivo").map(a => ManifestEntry(
+      arquivo = a.asText,
+      url = s("url", d.url),
+      statusDownload = s("statusDownload", d.statusDownload),
+      statusExtracao = s("statusExtracao", d.statusExtracao),
+      statusCorrecao = s("statusCorrecao", d.statusCorrecao),
+      statusCarga = s("statusCarga", d.statusCarga),
+      tentativasDownload =
+        num("tentativasDownload", d.tentativasDownload.toLong).toInt,
+      caminhoZip = s("caminhoZip", d.caminhoZip),
+      arquivosExtraidos = sq("arquivosExtraidos"),
+      arquivosCorrigidos = sq("arquivosCorrigidos"),
+      tabelasDestino = sq("tabelasDestino"),
+      linhasOriginais = num("linhasOriginais", d.linhasOriginais),
+      linhasCorrigidas = num("linhasCorrigidas", d.linhasCorrigidas),
+      registrosCarregados =
+        num("registrosCarregados", d.registrosCarregados),
+      registrosCorrigidos = nums("registrosCorrigidos")))
   }
 }

@@ -85,8 +85,8 @@ object RfbMain {
     * genuinely orphaned dirs (r16 ADVICE).
     * Returns whether anything was moved or deleted.
     */
-  def migrateLegacyWorkspace(spark: SparkSession,
-      workDir: Path, periodWork: Path, refMonth: String): Boolean = {
+  def migrateLegacyWorkspace(workDir: Path, periodWork: Path,
+      refMonth: String): Boolean = {
     val legacyDirs = Seq("downloads", "extracted", "fixed")
       .map(workDir.resolve).filter(Files.exists(_))
     val legacyManifest = workDir.resolve(s"manifesto_$refMonth.json")
@@ -138,7 +138,7 @@ object RfbMain {
           newRootP.resolve(oldRootP.relativize(ap)).toString
         else p
       }
-      val entries = Manifest.load(spark, legacyManifest.toString).map(e =>
+      val entries = Manifest.load(legacyManifest.toString).map(e =>
         e.copy(caminhoZip = re(e.caminhoZip),
           arquivosExtraidos = e.arquivosExtraidos.map(re),
           arquivosCorrigidos = e.arquivosCorrigidos.map(re)))
@@ -236,8 +236,7 @@ object RfbMain {
     val periodWork = workDir.resolve(Period.refMonth(year, month))
     // adopt (or clean) any pre-namespacing root-level workspace BEFORE the
     // fresh-run wipe decision reads the manifest (see the method doc)
-    migrateLegacyWorkspace(spark, workDir, periodWork,
-      Period.refMonth(year, month))
+    migrateLegacyWorkspace(workDir, periodWork, Period.refMonth(year, month))
     Files.createDirectories(periodWork)
     val pipe = new RfbPipeline(spark, periodWork, outDir.toString,
       Period.refMonth(year, month), fetcher, backoffMs = 5000L,

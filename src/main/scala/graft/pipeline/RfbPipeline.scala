@@ -161,7 +161,7 @@ class RfbPipeline(
     * anchors and create pending entries.
     */
   def plan(listingUrl: String): Seq[ManifestEntry] = {
-    if (Manifest.exists(manifestPath)) Manifest.load(spark, manifestPath)
+    if (Manifest.exists(manifestPath)) Manifest.load(manifestPath)
     else {
       val html = fetcher.fetchText(listingUrl)
       val entries = parseListing(html).map { name =>
@@ -511,17 +511,16 @@ class RfbPipeline(
           // the line-count audit still passed (the reference's pandas
           // reader infers per file; the layout map is the stronger form)
           val nCols = RfbTables.typedColumns(table).size
-          // paths qualified file: like Manifest.load (r10): corrected
-          // files are written via java.nio, so they live on a
-          // POSIX-visible mount by construction — schemeless strings
-          // would resolve against fs.defaultFS and miss every file on an
-          // HDFS-default cluster, with the miss swallowed into a bare
-          // falhou below (r15 review; the Manifest fix stopped short of
-          // this, the much bigger read). RAW path after the scheme, not
-          // java.net.URI's percent-encoded form: Hadoop Path does not
-          // decode %XX, so a pre-encoded URI breaks every non-ASCII
-          // member name (Domicílio → Domic%C3%ADlio, file not found —
-          // caught by the cp437 spec when this fix first used toUri)
+          // paths qualified file:, as corrected files are written via
+          // java.nio, so they live on a POSIX-visible mount by
+          // construction — schemeless strings would resolve against
+          // fs.defaultFS and miss every file on an HDFS-default cluster,
+          // with the miss swallowed into a bare falhou below (r15
+          // review). RAW path after the scheme, not java.net.URI's
+          // percent-encoded form: Hadoop Path does not decode %XX, so a
+          // pre-encoded URI breaks every non-ASCII member name
+          // (Domicílio → Domic%C3%ADlio, file not found — caught by the
+          // cp437 spec when this fix first used toUri)
           val df = spark.read
             .options(Map("sep" -> ";", "header" -> "false",
               "encoding" -> "UTF-8", "mode" -> "PERMISSIVE"))

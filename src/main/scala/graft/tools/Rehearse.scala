@@ -287,8 +287,8 @@ object Rehearse {
     * entry contributes to from ALL its contributors (RfbPipeline.load's
     * full-refresh contributor rule), not just the late arrival.
     */
-  private def resetDownload(spark: SparkSession, manifestPath: String): Unit = {
-    val entries = Manifest.load(spark, manifestPath)
+  private def resetDownload(manifestPath: String): Unit = {
+    val entries = Manifest.load(manifestPath)
     val reset = entries.map { e =>
       if (e.statusDownload == Status.Falhou)
         e.copy(statusDownload = Status.Pendente)
@@ -319,7 +319,7 @@ object Rehearse {
         runOnce(spark, Paths.get(src), Paths.get(work), out, failFirst,
           sys.env.get("REHEARSE_KILL_AFTER_TABLES").map(_.toInt).getOrElse(-1))
       case "reset-download" :: manifest :: Nil =>
-        resetDownload(spark, manifest)
+        resetDownload(manifest)
       case "compare" :: outA :: outB :: refMonth :: Nil =>
         compare(spark, outA, outB, refMonth)
       case other =>

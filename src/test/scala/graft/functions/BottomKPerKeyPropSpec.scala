@@ -39,6 +39,12 @@ class BottomKPerKeyPropSpec extends AnyFunSuite {
     })
   }
 
+  test("k is validated up front: k <= 0 or k > 4096 fails fast") {
+    intercept[IllegalArgumentException] { BottomKPerKey.bottomK(0) }
+    intercept[IllegalArgumentException] { BottomKPerKey.bottomK(-5) }
+    intercept[IllegalArgumentException] { BottomKPerKey.bottomK(5000) } // > recursion-safe bound
+  }
+
   test("null sort keys order FIRST (Spark ASC default), never NPE") {
     val agg = BottomKPerKey.BottomK(2)
     val xs = List((null: String, 5L), ("a", 1L), (null: String, 2L))

@@ -3,6 +3,8 @@ package graft.operators
 import java.nio.file.Files
 import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -98,29 +100,32 @@ class TxLogSpec extends AnyFunSuite {
       Set((1, "a")))
   }
 
-  test("1000 commits: checkpoint pointer + probe read") {
+  test("1000 commits: the head is one listing, no checkpoint files") {
     val t = freshTable()
     // log-protocol-only commits (no parquet behind the fake dirs — this
     // test exercises the metadata path, not the scan)
     (1 to 1000).foreach(v => TxLog.commit(t, v - 1, s"d$v"))
     assert(TxLog.latestVersion(t).contains(1000L))
     val log = java.nio.file.Paths.get(t, "_txlog")
-    assert(Files.isRegularFile(log.resolve("_last_checkpoint")))
-    assert(Files.isRegularFile(
-      log.resolve(f"${1000L}%020d.checkpoint.json")))
+    assert(!Files.exists(log.resolve("_last_checkpoint")))
+    val listing = Files.list(log)
+    val checkpoints =
+      try listing.iterator().asScala
+        .count(_.getFileName.toString.endsWith(".checkpoint.json"))
+      finally listing.close()
+    assert(checkpoints === 0)
     assert(TxLog.commitRecord(t, 995L).dataDir == "d995")
   }
 
-  test("a stale pointer cannot fork the log") {
+  test("a leftover `_last_checkpoint` pointer is ignored") {
     val t = freshTable()
     (1 to 20).foreach(v => TxLog.commit(t, v - 1, s"d$v"))
     val log = java.nio.file.Paths.get(t, "_txlog")
-    // a checkpointer that wrote its checkpoint, slept, then moved the
-    // pointer AFTER newer checkpoints landed: the pointer is rewound
+    // a log written by a build that kept a checkpoint pointer, left
+    // rewound below the head
     Files.write(log.resolve("_last_checkpoint"),
       """{"version":10}""".getBytes("UTF-8"))
-    // latestVersion probes forward from 10 through the commits still on
-    // disk, so the head is still 20
+    // the head comes from the listing of the commit files, so it is 20
     assert(TxLog.latestVersion(t).contains(20L))
     // a commit against the stale head must CAS-fail, not mint version 11
     intercept[TxLog.CommitConflict] { TxLog.commit(t, 10L, "fork") }

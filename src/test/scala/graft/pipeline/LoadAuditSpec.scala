@@ -65,7 +65,7 @@ class LoadAuditSpec extends AnyFunSuite {
         "K1.D509__corrigido.LEIAME"))
     assert(mix.registrosCorrigidos === Seq(3L, 1L, 1L))
     // the counts survive the manifest round trip
-    assert(Manifest.load(spark, pipe.manifestPath) === fixed)
+    assert(Manifest.load(pipe.manifestPath) === fixed)
 
     val (loaded, jobs) = jobsDuring(pipe.load(fixed))
     assert(outcome(loaded) === Seq(("Cnaes.zip", Status.Sucesso, 2L),
@@ -79,7 +79,7 @@ class LoadAuditSpec extends AnyFunSuite {
     val old = json.replaceAll(",\"registrosCorrigidos\":\\[[^\\]]*\\]", "")
     assert(!old.contains("registrosCorrigidos"))
     Files.write(Paths.get(pipe.manifestPath), old.getBytes(StandardCharsets.UTF_8))
-    val reloaded = Manifest.load(spark, pipe.manifestPath)
+    val reloaded = Manifest.load(pipe.manifestPath)
       .map(_.copy(statusCarga = Status.Pendente, registrosCarregados = -1L))
     assert(reloaded.forall(_.registrosCorrigidos.isEmpty))
     val (rescanned, jobs2) = jobsDuring(pipe.load(reloaded))

@@ -292,14 +292,18 @@ class PipelineSpec extends AnyFunSuite {
         |"statusCarga":"sucesso","caminhoZip":"/w/A.zip",
         |"arquivosExtraidos":["/w/x"],"arquivosCorrigidos":["/w/y"]}"""
         .stripMargin.replace("\n", ""),
-      """{"not":"a manifest line"}""" // externally corrupt: dropped
+      """{"not":"a manifest line"}""", // externally corrupt: dropped
+      """{"arquivo":"B.zip","url":""", // truncated: dropped
+      // a null count: unknown, so the load rescans that file
+      """{"arquivo":"C.zip","registrosCorrigidos":[3,null]}"""
     ).mkString("\n").getBytes(StandardCharsets.UTF_8))
-    val loaded = Manifest.load(spark, p.toString)
-    assert(loaded.length === 1, loaded.toString)
+    val loaded = Manifest.load(p.toString)
+    assert(loaded.map(_.arquivo) === Seq("A.zip", "C.zip"), loaded.toString)
     val e = loaded.head
     assert(e.arquivo === "A.zip" && e.statusCarga === Status.Sucesso)
     assert(e.tentativasDownload === 0 && e.registrosCarregados === -1L)
     assert(e.tabelasDestino === Nil && e.arquivosCorrigidos === Seq("/w/y"))
+    assert(loaded(1).registrosCorrigidos === Seq(3L, -1L))
   }
 
   test("intra-archive duplicate DOTLESS basenames still route (subdir, not prefix)") {
@@ -407,7 +411,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(byName("Dead.zip").statusDownload == Status.Falhou)
     assert(byName("Dead.zip").tentativasDownload == 1)
     // persisted manifest agrees with the in-memory result
-    val persisted = Manifest.load(spark, pipe.manifestPath)
+    val persisted = Manifest.load(pipe.manifestPath)
       .map(e => e.arquivo -> e.statusCarga).toMap
     assert(persisted == done.map(e => e.arquivo -> e.statusCarga).toMap)
   }
@@ -478,16 +482,15 @@ class PipelineSpec extends AnyFunSuite {
         tabelasDestino = Seq("rfb_cnaes")),
       ManifestEntry("B — ação;\"quoted\".zip", "u/B.zip"))
     Manifest.save(p.toString, entries)
-    val loaded = Manifest.load(spark, p.toString)
+    // the manifest is a driver-local file: reading it launches no job
+    val (loaded, jobs) = graft.ReadJobs.jobsDuring(Manifest.load(p.toString))
     assert(loaded.toSet == entries.toSet)
-    // non-ASCII workDir (the lake's own folder names are pt-BR, "Março"):
-    // the load's file: qualification must not percent-encode the path —
-    // Hadoop Path never decodes %XX, so toUri's encoded form read a
-    // nonexistent literal %-named file (r15 review)
+    assert(jobs === 0)
+    // non-ASCII workDir (the lake's own folder names are pt-BR, "Março")
     val p2 = Files.createTempDirectory("mani-Março")
       .resolve("manifesto.json")
     Manifest.save(p2.toString, entries)
-    assert(Manifest.load(spark, p2.toString).toSet == entries.toSet)
+    assert(Manifest.load(p2.toString).toSet == entries.toSet)
   }
 
   test("listing parser keeps only .zip anchors (main.py:61-64)") {

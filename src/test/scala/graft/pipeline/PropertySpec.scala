@@ -84,7 +84,7 @@ class PropertySpec extends AnyFunSuite {
     check("manifest", Prop.forAll(Gen.listOf(entryGen)) { entries =>
       val p = Files.createTempDirectory("mani-prop").resolve("m.json")
       Manifest.save(p.toString, entries)
-      val loaded = Manifest.load(graft.TestSpark.spark, p.toString)
+      val loaded = Manifest.load(p.toString)
       loaded.toSet == entries.toSet
     }, n = 15)
   }

@@ -200,8 +200,7 @@ class RfbMainSpec extends AnyFunSuite {
       Seq(ManifestEntry(arquivo = "partial.zip", url = "http://x/partial.zip",
         caminhoZip = partial.toString)))
     val periodWork = work.resolve("202607")
-    assert(RfbMain.migrateLegacyWorkspace(TestSpark.spark, work, periodWork,
-      "202607"))
+    assert(RfbMain.migrateLegacyWorkspace(work, periodWork, "202607"))
     assert(Files.exists(periodWork.resolve("manifesto_202607.json")))
     assert(Files.exists(periodWork.resolve("downloads")
       .resolve("partial.zip")))
@@ -210,13 +209,12 @@ class RfbMainSpec extends AnyFunSuite {
     // the adopted manifest's recorded ABSOLUTE paths are rewritten to the
     // namespace — verbatim they would point at the files just moved, and
     // resume would re-download (vanished-zip self-heal) instead of resuming
-    val adopted = Manifest.load(TestSpark.spark,
+    val adopted = Manifest.load(
       periodWork.resolve("manifesto_202607.json").toString)
     assert(adopted.map(_.caminhoZip) ===
       Seq(periodWork.resolve("downloads").resolve("partial.zip").toString))
     // second call: nothing left to migrate
-    assert(!RfbMain.migrateLegacyWorkspace(TestSpark.spark, work, periodWork,
-      "202607"))
+    assert(!RfbMain.migrateLegacyWorkspace(work, periodWork, "202607"))
   }
 
   test("orphaned legacy dirs (no root manifest) are cleaned; another period's are not") {
@@ -227,7 +225,7 @@ class RfbMainSpec extends AnyFunSuite {
     Files.createDirectories(work.resolve("extracted").resolve("sub"))
     Files.write(work.resolve("extracted").resolve("sub").resolve("f.csv"),
       "x".getBytes(StandardCharsets.UTF_8))
-    assert(RfbMain.migrateLegacyWorkspace(TestSpark.spark, work,
+    assert(RfbMain.migrateLegacyWorkspace(work,
       work.resolve("202608"), "202608"))
     assert(!Files.exists(work.resolve("extracted")))
 
@@ -236,7 +234,7 @@ class RfbMainSpec extends AnyFunSuite {
     val work2 = Files.createTempDirectory("rfb-legacy3")
     Files.createDirectories(work2.resolve("downloads"))
     Manifest.save(work2.resolve("manifesto_202605.json").toString, Seq.empty)
-    assert(!RfbMain.migrateLegacyWorkspace(TestSpark.spark, work2,
+    assert(!RfbMain.migrateLegacyWorkspace(work2,
       work2.resolve("202608"), "202608"))
     assert(Files.exists(work2.resolve("downloads")))
   }
@@ -265,9 +263,9 @@ class RfbMainSpec extends AnyFunSuite {
     val periodWork = work.resolve("202610")
     Files.createDirectories(periodWork.resolve("downloads")) // the race
 
-    assert(RfbMain.migrateLegacyWorkspace(spark, work, periodWork, "202610"))
+    assert(RfbMain.migrateLegacyWorkspace(work, periodWork, "202610"))
     assert(Files.exists(legacyZip), "collided dir must be left in place")
-    val adopted = Manifest.load(spark,
+    val adopted = Manifest.load(
       periodWork.resolve("manifesto_202610.json").toString)
     // NOT rewritten: the file never moved, so the legacy path is the one
     // that still resolves (in-place resume stays possible this run)
@@ -313,8 +311,8 @@ class RfbMainSpec extends AnyFunSuite {
         caminhoZip =
           work.resolve("downloads").resolve("partial.zip").toString)))
 
-    assert(RfbMain.migrateLegacyWorkspace(spark, work, periodWork, "202612"))
-    val adopted = Manifest.load(spark,
+    assert(RfbMain.migrateLegacyWorkspace(work, periodWork, "202612"))
+    val adopted = Manifest.load(
       periodWork.resolve("manifesto_202612.json").toString)
     assert(adopted.map(_.caminhoZip) === Seq(movedZip.toString),
       "rerun must rewrite to where the earlier attempt moved the files")
@@ -341,9 +339,8 @@ class RfbMainSpec extends AnyFunSuite {
           statusDownload = Status.Sucesso,
           caminhoZip = relZip.toString))) // RELATIVE, as recorded
       val periodWork = relWork.resolve("202701")
-      assert(RfbMain.migrateLegacyWorkspace(spark, relWork, periodWork,
-        "202701"))
-      val adopted = Manifest.load(spark,
+      assert(RfbMain.migrateLegacyWorkspace(relWork, periodWork, "202701"))
+      val adopted = Manifest.load(
         periodWork.resolve("manifesto_202701.json").toString)
       val expected = periodWork.toAbsolutePath.normalize
         .resolve("downloads").resolve("partial.zip")
@@ -373,7 +370,7 @@ class RfbMainSpec extends AnyFunSuite {
     Files.write(work.resolve("downloads").resolve("junk.zip"),
       Array[Byte](1, 2, 3))
 
-    assert(RfbMain.migrateLegacyWorkspace(spark, work, periodWork, "202611"))
+    assert(RfbMain.migrateLegacyWorkspace(work, periodWork, "202611"))
     assert(!Files.exists(work.resolve("manifesto_202611.json")),
       "stale root copy must be deleted")
     assert(Files.exists(periodWork.resolve("manifesto_202611.json")),
@@ -384,9 +381,9 @@ class RfbMainSpec extends AnyFunSuite {
     // the sweep also fires when NO legacy dirs remain (the stale file
     // would otherwise linger forever), and is idempotent after that
     Manifest.save(work.resolve("manifesto_202611.json").toString, Seq.empty)
-    assert(RfbMain.migrateLegacyWorkspace(spark, work, periodWork, "202611"))
+    assert(RfbMain.migrateLegacyWorkspace(work, periodWork, "202611"))
     assert(!Files.exists(work.resolve("manifesto_202611.json")))
-    assert(!RfbMain.migrateLegacyWorkspace(spark, work, periodWork, "202611"))
+    assert(!RfbMain.migrateLegacyWorkspace(work, periodWork, "202611"))
   }
 
   test("resumable period (manifest exists) keeps partial downloads") {

@@ -64,6 +64,18 @@ if grep -rnE 'executeTake\(|\.collect\(\)|toLocalIterator' \
 fi
 echo "operators collect OK"
 
+# The manifest is a small driver-local JSON-lines file, and Manifest is the
+# one owner of its format: save and load go through one Jackson mapper over
+# java.nio. A Spark read of it costs a job on every resume and resolves a
+# schemeless path against fs.defaultFS, where the java.nio writer never
+# put the file.
+echo "== gate 0d: Manifest.scala uses no Spark API =="
+if grep -n 'org\.apache\.spark' src/main/scala/graft/pipeline/Manifest.scala; then
+  echo "PREFLIGHT FAIL: Manifest.scala names org.apache.spark"
+  exit 1
+fi
+echo "manifest codec OK"
+
 echo "== gate 1: compile + Test/compile =="
 sbt -batch compile Test/compile >/tmp/preflight_compile.log 2>&1 || {
   tail -30 /tmp/preflight_compile.log; echo "PREFLIGHT FAIL: compile"; exit 1; }
