@@ -56,7 +56,9 @@ case class PipelineReport(
   * Scale notes (100 TB): the manifest loop is driver-side over ~37 rows —
   * correct, it is metadata; all row-level work (CSV scan, parquet write,
   * counts) is distributed. Per-table scans list all corrected files in one
-  * `csv(paths:_*)` read so Spark parallelizes by file/split.
+  * `csv(paths:_*)` read so Spark parallelizes by file/split, and write one
+  * task per `spark.sql.files.maxPartitionBytes` of input at most; the
+  * table groups run at once on a small driver pool.
   */
 class RfbPipeline(
     spark: SparkSession,
@@ -161,8 +163,16 @@ class RfbPipeline(
     * anchors and create pending entries.
     */
   def plan(listingUrl: String): Seq[ManifestEntry] = {
-    if (Manifest.exists(manifestPath)) Manifest.load(manifestPath)
-    else {
+    if (Manifest.exists(manifestPath)) {
+      // a zero-length or all-corrupt manifest loads as no entries; resuming
+      // it would report the month complete with zero work, the same
+      // silent outcome the empty-listing refusal below exists to stop
+      val entries = Manifest.load(manifestPath)
+      if (entries.isEmpty) throw new IllegalStateException(
+        s"manifest $manifestPath holds no readable entries — refusing to " +
+          "resume an empty month; delete it to re-plan from the listing")
+      entries
+    } else {
       val html = fetcher.fetchText(listingUrl)
       val entries = parseListing(html).map { name =>
         ManifestEntry(arquivo = name, url = listingUrl + name,
@@ -496,71 +506,17 @@ class RfbPipeline(
     // table groups over ALL contributors (full refresh), restricted to
     // the tables this run actually owes a load
     val byTable = routedAll.collect {
-      case (i, f, Some(t)) if pendingTables(t) =>
-        (t, i, f, recordCounts.getOrElse(f, -1L))
+      case (_, f, Some(t)) if pendingTables(t) =>
+        (t, f, recordCounts.getOrElse(f, -1L))
     }.groupBy(_._1)
-    val tableOk = byTable.map { case (table, group) =>
-      val paths = group.map(_._3)
-      val expected = group.map(_._4).sum
-      val ok =
-        try {
-          // arity from the routing layer's layout knowledge, NOT sniffed
-          // from the first line of the first file: a blank/short first
-          // line would shrink the schema for the WHOLE table and
-          // PERMISSIVE mode would silently drop every extra column while
-          // the line-count audit still passed (the reference's pandas
-          // reader infers per file; the layout map is the stronger form)
-          val nCols = RfbTables.typedColumns(table).size
-          // paths qualified file:, as corrected files are written via
-          // java.nio, so they live on a POSIX-visible mount by
-          // construction — schemeless strings would resolve against
-          // fs.defaultFS and miss every file on an HDFS-default cluster,
-          // with the miss swallowed into a bare falhou below (r15
-          // review). RAW path after the scheme, not java.net.URI's
-          // percent-encoded form: Hadoop Path does not decode %XX, so a
-          // pre-encoded URI breaks every non-ASCII member name
-          // (Domicílio → Domic%C3%ADlio, file not found — caught by the
-          // cp437 spec when this fix first used toUri)
-          val df = spark.read
-            .options(Map("sep" -> ";", "header" -> "false",
-              "encoding" -> "UTF-8", "mode" -> "PERMISSIVE"))
-            .schema(RfbTables.rawSchema(nCols))
-            .csv(paths.map(f =>
-              "file:" + Paths.get(f).toAbsolutePath.toString): _*)
-          // Single-pass write-side metrics (SURVEY §1.3: row-count audits →
-          // observe()): the row count must agree with the corrected-file
-          // record counts AND the rows the sink holds now (reference
-          // main.py:207-216; the lake answers from its parquet footers,
-          // no Spark job); integrity audits (null keys, column shift) ride
-          // the same pass. Sinks whose write path can't surface observe()
-          // metrics (JDBC) get audited on the read-back — still one scan.
-          val (audit, loaded) =
-            if (sink.observesWrites) {
-              val (audited, auditObs) = Audits.observed(df, table)
-              sink.overwrite(audited, table, refMonth)
-              (Audits.result(table, auditObs),
-                sink.loadedRows(spark, table, refMonth))
-            } else {
-              sink.overwrite(df, table, refMonth)
-              val a = Audits.run(sink.readBack(spark, table, refMonth), table)
-              (a, a.rows)
-            }
-          lastAudits += table -> audit
-          audit.rows == expected && loaded == expected &&
-            (!strictAudits || audit.passed)
-        } catch {
-          case e: Exception =>
-            // the failure becomes a falhou status either way, but the
-            // ACTUAL error (CommitConflict, AnalysisException, ...) must
-            // not vanish — Reporter.failed only fires on run-level
-            // crashes, so an operator debugging a per-table falhou had
-            // zero root-cause signal (r15 review)
-            lastLoadErrors += table -> e.toString
-            System.err.println(s"load: table $table failed: $e")
-            false
-        }
-      table -> ok
-    }
+    val tables = byTable.keys.toSeq.sorted
+    val loads = tables.zip(concurrently(tables) { table =>
+      val group = byTable(table)
+      loadTable(table, group.map(_._2), group.map(_._3).sum)
+    })
+    lastAudits = loads.collect { case (t, Right((audit, _))) => t -> audit }.toMap
+    lastLoadErrors = loads.collect { case (t, Left(error)) => t -> error }.toMap
+    val tableOk = loads.map { case (t, r) => t -> r.exists(_._2) }.toMap
     // propagate per-table audit to contributing entries
     candidates.foreach { case (_, i) =>
       val e = entries(i)
@@ -575,6 +531,99 @@ class RfbPipeline(
       }
     }
     entries
+  }
+
+  /** `fn` over `tables` on a driver pool of min(tables,
+    * defaultParallelism) threads, results in `tables` order. Each table is
+    * its own atomic overwrite, so the groups are independent; running them
+    * at once fills the slots one table's small write leaves idle. The pool
+    * is made per call and its threads start on the calling thread, so
+    * they inherit its Spark local properties (job group, description).
+    */
+  private def concurrently[A](tables: Seq[String])(fn: String => A): Seq[A] =
+    if (tables.isEmpty) Nil
+    else {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(
+        math.min(tables.size, spark.sparkContext.defaultParallelism))
+      try tables.map(t => pool.submit(new java.util.concurrent.Callable[A] {
+        override def call(): A = fn(t)
+      })).map { f =>
+        try f.get()
+        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+      } finally pool.shutdown()
+    }
+
+  /** Read every contributor's corrected file of `table`, overwrite the
+    * table with the audit riding the write, and check the counts: the
+    * audit and whether the count audit passed, or the error text. Any
+    * failure is this table's alone, returned, never thrown.
+    */
+  private def loadTable(table: String, paths: Seq[String],
+      expected: Long): Either[String, (Audits.AuditResult, Boolean)] = {
+    try {
+      // one write task per spark.sql.files.maxPartitionBytes of input, not
+      // one per input file: the scan opens every small file as its own
+      // split, and each write task pays fixed costs (Hadoop conf copies,
+      // parquet writer setup, file creates). coalesce is narrow (no
+      // shuffle, stage or job) and a no-op once the scan already has at
+      // most n splits, as at full RFB sizes.
+      val bytes = paths.map(f => Files.size(Paths.get(f))).sum
+      val cap = spark.sessionState.conf.filesMaxPartitionBytes
+      val parts = math.max(1L, (bytes + cap - 1) / cap).toInt
+      // arity from the routing layer's layout knowledge, NOT sniffed
+      // from the first line of the first file: a blank/short first
+      // line would shrink the schema for the WHOLE table and
+      // PERMISSIVE mode would silently drop every extra column while
+      // the line-count audit still passed (the reference's pandas
+      // reader infers per file; the layout map is the stronger form)
+      val nCols = RfbTables.typedColumns(table).size
+      // paths qualified file:, as corrected files are written via
+      // java.nio, so they live on a POSIX-visible mount by
+      // construction — schemeless strings would resolve against
+      // fs.defaultFS and miss every file on an HDFS-default cluster,
+      // with the miss swallowed into a bare falhou below (r15
+      // review). RAW path after the scheme, not java.net.URI's
+      // percent-encoded form: Hadoop Path does not decode %XX, so a
+      // pre-encoded URI breaks every non-ASCII member name
+      // (Domicílio → Domic%C3%ADlio, file not found — caught by the
+      // cp437 spec when this fix first used toUri)
+      val df = spark.read
+        .options(Map("sep" -> ";", "header" -> "false",
+          "encoding" -> "UTF-8", "mode" -> "PERMISSIVE"))
+        .schema(RfbTables.rawSchema(nCols))
+        .csv(paths.map(f =>
+          "file:" + Paths.get(f).toAbsolutePath.toString): _*)
+        .coalesce(parts)
+      // Single-pass write-side metrics (SURVEY §1.3: row-count audits →
+      // observe()): the row count must agree with the corrected-file
+      // record counts AND the rows the sink holds now (reference
+      // main.py:207-216; the lake answers from its parquet footers,
+      // no Spark job); integrity audits (null keys, column shift) ride
+      // the same pass. Sinks whose write path can't surface observe()
+      // metrics (JDBC) get audited on the read-back — still one scan.
+      val (audit, loaded) =
+        if (sink.observesWrites) {
+          val (audited, auditObs) = Audits.observed(df, table)
+          sink.overwrite(audited, table, refMonth)
+          (Audits.result(table, auditObs),
+            sink.loadedRows(spark, table, refMonth))
+        } else {
+          sink.overwrite(df, table, refMonth)
+          val a = Audits.run(sink.readBack(spark, table, refMonth), table)
+          (a, a.rows)
+        }
+      Right((audit, audit.rows == expected && loaded == expected &&
+        (!strictAudits || audit.passed)))
+    } catch {
+      case e: Exception =>
+        // the failure becomes a falhou status either way, but the
+        // ACTUAL error (CommitConflict, AnalysisException, ...) must
+        // not vanish — Reporter.failed only fires on run-level
+        // crashes, so an operator debugging a per-table falhou had
+        // zero root-cause signal (r15 review)
+        System.err.println(s"load: table $table failed: $e")
+        Left(e.toString)
+    }
   }
 
   /** Final report (reference `relatorio_final`, `main.py:222-237`). */

@@ -298,7 +298,10 @@ object Rehearse {
     println(s"REHEARSE reset ${entries.count(_.statusDownload == Status.Falhou)} falhou downloads to pendente")
   }
 
-  def main(args: Array[String]): Unit = {
+  /** `body` on a `local[$SPARK_GRAFT_CPUS]` session, stopped after; only
+    * the modes that read or write the lake start one.
+    */
+  private def withSpark(body: SparkSession => Unit): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -307,23 +310,25 @@ object Rehearse {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    try args.toList match {
-      case "gen" :: src :: rows :: Nil =>
-        val (zips, exp) = gen(Paths.get(src), rows.toInt)
-        println(s"REHEARSE gen: $zips zips, expected rows " +
-          exp.toSeq.sortBy(_._1).map { case (t, n) => s"$t=$n" }.mkString(","))
-      case "run" :: src :: work :: out :: rest =>
-        val failFirst = rest.flatMap(_.split(',')).filter(_.nonEmpty).map { kv =>
-          val Array(k, v) = kv.split(':'); k -> v.toInt
-        }.toMap
-        runOnce(spark, Paths.get(src), Paths.get(work), out, failFirst,
-          sys.env.get("REHEARSE_KILL_AFTER_TABLES").map(_.toInt).getOrElse(-1))
-      case "reset-download" :: manifest :: Nil =>
-        resetDownload(manifest)
-      case "compare" :: outA :: outB :: refMonth :: Nil =>
-        compare(spark, outA, outB, refMonth)
-      case other =>
-        System.err.println(s"unknown rehearse args: $other"); sys.exit(2)
-    } finally spark.stop()
+    try body(spark) finally spark.stop()
+  }
+
+  def main(args: Array[String]): Unit = args.toList match {
+    case "gen" :: src :: rows :: Nil =>
+      val (zips, exp) = gen(Paths.get(src), rows.toInt)
+      println(s"REHEARSE gen: $zips zips, expected rows " +
+        exp.toSeq.sortBy(_._1).map { case (t, n) => s"$t=$n" }.mkString(","))
+    case "run" :: src :: work :: out :: rest =>
+      val failFirst = rest.flatMap(_.split(',')).filter(_.nonEmpty).map { kv =>
+        val Array(k, v) = kv.split(':'); k -> v.toInt
+      }.toMap
+      withSpark(runOnce(_, Paths.get(src), Paths.get(work), out, failFirst,
+        sys.env.get("REHEARSE_KILL_AFTER_TABLES").map(_.toInt).getOrElse(-1)))
+    case "reset-download" :: manifest :: Nil =>
+      resetDownload(manifest)
+    case "compare" :: outA :: outB :: refMonth :: Nil =>
+      withSpark(compare(_, outA, outB, refMonth))
+    case other =>
+      System.err.println(s"unknown rehearse args: $other"); sys.exit(2)
   }
 }

@@ -76,9 +76,12 @@ class FunctionsSpec extends AnyFunSuite {
   test("wrong-typed arguments fail at ANALYSIS, not in codegen") {
     // without checkInputDataTypes these pass analysis and die deep in
     // generated Java / ClassCastException on an executor — an opaque
-    // runtime crash instead of an error naming the expected type
-    import spark.implicits._
-    GraftFunctions.register(spark)
+    // runtime crash instead of an error naming the expected type. On a
+    // fresh session: the shared one's observation listener logs a stack
+    // trace for every failed analysis
+    val fresh = spark.newSession()
+    import fresh.implicits._
+    GraftFunctions.register(fresh)
     Seq(1).toDF("i").createOrReplaceTempView("typecheck_t")
     for (bad <- Seq(
       "SELECT cnpj_valid(i) FROM typecheck_t",
@@ -86,7 +89,7 @@ class FunctionsSpec extends AnyFunSuite {
       "SELECT dot_product(array(1, 2), array(3, 4))", // int arrays
       "SELECT nfc_normalize(i) FROM typecheck_t")) {
       val e = intercept[org.apache.spark.sql.AnalysisException] {
-        spark.sql(bad).collect()
+        fresh.sql(bad).collect()
       }
       assert(e.getMessage.toLowerCase.contains("requires"), s"$bad: $e")
     }

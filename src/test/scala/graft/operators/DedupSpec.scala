@@ -107,9 +107,10 @@ class DedupSpec extends AnyFunSuite {
 
   test("SimHashArray rejects wrong input types at analysis; skips null elements") {
     import org.apache.spark.sql.functions._
-    // analysis-time type error, not a runtime ClassCastException
+    // analysis-time type error, not a runtime ClassCastException (on a
+    // fresh session, whose listeners log no stack trace for it)
     val bad = intercept[org.apache.spark.sql.AnalysisException] {
-      spark.range(1).select(
+      spark.newSession().range(1).select(
         graft.functions.SimHashArray(array(lit(1), lit(2)))).collect()
     }
     assert(bad.getMessage.toLowerCase.contains("type"))

@@ -112,12 +112,15 @@ class EdgeForksSpec extends AnyFunSuite {
   }
 
   test("a failing SQL-view query drops its invocation views on the error path") {
-    val before = spark.catalog.listTables().collect()
+    // a fresh session: the shared one's observation listener logs a stack
+    // trace for every failed analysis
+    val fresh = spark.newSession()
+    val before = fresh.catalog.listTables().collect()
       .count(_.name.startsWith("q37_"))
     intercept[Exception] {
-      Relational4.queries("q37_exists_subquery")(spark, "/nonexistent-dir-xyz")
+      Relational4.queries("q37_exists_subquery")(fresh, "/nonexistent-dir-xyz")
     }
-    val after = spark.catalog.listTables().collect()
+    val after = fresh.catalog.listTables().collect()
       .count(_.name.startsWith("q37_"))
     assert(after === before,
       "failure path must not strand invocation-unique temp views")

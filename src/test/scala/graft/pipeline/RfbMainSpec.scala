@@ -157,6 +157,33 @@ class RfbMainSpec extends AnyFunSuite {
     assert(rep.completedWith.isEmpty && rep.interruptedWith.isEmpty)
   }
 
+  test("a manifest with no entries is refused and reaches Reporter.failed") {
+    // a zero-length or all-corrupt manifest loads as no entries: resuming
+    // it reported the month complete with zero work and no alert, where
+    // an empty listing is refused loudly
+    val src = Files.createTempDirectory("rfb-src")
+    val root = Files.createTempDirectory("rfb-root")
+    val work = Files.createTempDirectory("rfb-work")
+    mkZip(src, "Paises.zip", Seq(
+      "K1.D509.PAIS" -> "105;Brasil\n".getBytes(StandardCharsets.UTF_8)))
+    writeListing(src, Seq("Paises.zip"))
+    Seq(9 -> "", 10 -> "{\"not\":\"a manifest line\"}\n{\"arquivo\":")
+      .foreach { case (month, body) =>
+        val manifest = work.resolve(f"2026$month%02d")
+          .resolve(f"manifesto_2026$month%02d.json")
+        Files.createDirectories(manifest.getParent)
+        Files.write(manifest, body.getBytes(StandardCharsets.UTF_8))
+        val rep = new RecordingReporter
+        val e = intercept[IllegalStateException] {
+          RfbMain.run(spark, 2026, month, "http://rfb/", root, work,
+            new LocalFetcher(src), reporter = rep)
+        }
+        assert(e.getMessage.contains("no readable entries"), e.getMessage)
+        assert(rep.failedWith.contains(e), s"month $month")
+        assert(rep.completedWith.isEmpty)
+      }
+  }
+
   test("a NEW period never resumes the previous period's manifest") {
     // one shared manifesto.json made month N+1 find month N's completed
     // manifest, skip the wipe, see every status sucesso and do ZERO work
