@@ -6,6 +6,7 @@ import java.util.zip.{ZipException, ZipFile}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.FilePartition
 
 object RfbPipeline {
   /** `.zip` anchors from a directory-listing page (reference
@@ -56,9 +57,9 @@ case class PipelineReport(
   * Scale notes (100 TB): the manifest loop is driver-side over ~37 rows —
   * correct, it is metadata; all row-level work (CSV scan, parquet write,
   * counts) is distributed. Per-table scans list all corrected files in one
-  * `csv(paths:_*)` read so Spark parallelizes by file/split, and write one
-  * task per `spark.sql.files.maxPartitionBytes` of input at most; the
-  * table groups run at once on a small driver pool.
+  * `csv(paths:_*)` read so Spark parallelizes by file/split, and write
+  * tasks are sized by input bytes with Spark's own split rule; the table
+  * groups run at once on a small driver pool.
   */
 class RfbPipeline(
     spark: SparkSession,
@@ -106,6 +107,41 @@ class RfbPipeline(
   private def save(entries: Seq[ManifestEntry]): Unit =
     Manifest.save(manifestPath, entries)
 
+  /** `fn` over `items` on a pool of at most `threads` threads made for
+    * this call, results in `items` order. The threads start on the calling
+    * thread, so they inherit its Spark local properties (job group,
+    * description). The first failure stops the remaining work and waits
+    * (best-effort: a task hung in un-interruptible IO can outlive the
+    * window) so in-flight manifest writes and table swaps quiesce before
+    * the caller unwinds; it rethrows the real cause, not the executor
+    * wrapper.
+    */
+  private def onPool[A, B](items: Seq[A], threads: Int)(fn: A => B): Seq[B] = {
+    if (items.isEmpty) return Nil
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.max(1, math.min(threads, items.size)))
+    try {
+      val futures = items.map(a =>
+        pool.submit(new java.util.concurrent.Callable[B] {
+          override def call(): B = fn(a)
+        }))
+      futures.map { f =>
+        try f.get()
+        catch {
+          case e: java.util.concurrent.ExecutionException =>
+            pool.shutdownNow()
+            val quiesced = pool.awaitTermination(
+              1, java.util.concurrent.TimeUnit.MINUTES)
+            val cause = e.getCause
+            if (!quiesced) cause.addSuppressed(new IllegalStateException(
+              "pool did not quiesce within 60 s; a hung task may still " +
+                "write the manifest or the sink"))
+            throw cause
+        }
+      }
+    } finally pool.shutdown()
+  }
+
   /** Run `fn` over the pending indices on a bounded pool, folding each
     * result into the manifest (and persisting it) AS EACH FILE COMPLETES —
     * the reference's crash-resume granularity (`main.py:103,120`), kept
@@ -120,41 +156,14 @@ class RfbPipeline(
       pending: Seq[Int])(
       fn: ManifestEntry => ManifestEntry): Seq[ManifestEntry] = {
     @volatile var entries = entries0
-    if (pending.isEmpty) return entries
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(ioParallelism, pending.size)))
-    try {
-      val lock = new Object
-      val futures = pending.map { i =>
-        pool.submit(new Runnable {
-          override def run(): Unit = {
-            val updated = fn(entries0(i))
-            lock.synchronized {
-              entries = entries.updated(i, updated)
-              save(entries)
-            }
-          }
-        })
+    val lock = new Object
+    onPool(pending, ioParallelism) { i =>
+      val updated = fn(entries0(i))
+      lock.synchronized {
+        entries = entries.updated(i, updated)
+        save(entries)
       }
-      futures.foreach { f =>
-        try f.get()
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            // stop the remaining work and wait (best-effort: a task hung in
-            // un-interruptible IO can outlive the window) so in-flight
-            // manifest writes quiesce before the caller unwinds; rethrow
-            // the real cause, not the executor wrapper
-            pool.shutdownNow()
-            val quiesced = pool.awaitTermination(
-              1, java.util.concurrent.TimeUnit.MINUTES)
-            val cause = e.getCause
-            if (!quiesced) cause.addSuppressed(new IllegalStateException(
-              "IO pool did not quiesce within 60 s; a hung task may still " +
-                "write the manifest"))
-            throw cause
-        }
-      }
-    } finally pool.shutdown()
+    }
     entries
   }
 
@@ -510,7 +519,12 @@ class RfbPipeline(
         (t, f, recordCounts.getOrElse(f, -1L))
     }.groupBy(_._1)
     val tables = byTable.keys.toSeq.sorted
-    val loads = tables.zip(concurrently(tables) { table =>
+    // the groups are independent atomic overwrites: running them at once
+    // fills the slots one table's small write leaves idle, up to what the
+    // sink allows (JDBC: one table at a time)
+    val threads = math.min(spark.sparkContext.defaultParallelism,
+      sink.concurrentOverwrites)
+    val loads = tables.zip(onPool(tables, threads) { table =>
       val group = byTable(table)
       loadTable(table, group.map(_._2), group.map(_._3).sum)
     })
@@ -533,26 +547,6 @@ class RfbPipeline(
     entries
   }
 
-  /** `fn` over `tables` on a driver pool of min(tables,
-    * defaultParallelism) threads, results in `tables` order. Each table is
-    * its own atomic overwrite, so the groups are independent; running them
-    * at once fills the slots one table's small write leaves idle. The pool
-    * is made per call and its threads start on the calling thread, so
-    * they inherit its Spark local properties (job group, description).
-    */
-  private def concurrently[A](tables: Seq[String])(fn: String => A): Seq[A] =
-    if (tables.isEmpty) Nil
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(tables.size, spark.sparkContext.defaultParallelism))
-      try tables.map(t => pool.submit(new java.util.concurrent.Callable[A] {
-        override def call(): A = fn(t)
-      })).map { f =>
-        try f.get()
-        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-      } finally pool.shutdown()
-    }
-
   /** Read every contributor's corrected file of `table`, overwrite the
     * table with the audit riding the write, and check the counts: the
     * audit and whether the count audit passed, or the error text. Any
@@ -561,15 +555,18 @@ class RfbPipeline(
   private def loadTable(table: String, paths: Seq[String],
       expected: Long): Either[String, (Audits.AuditResult, Boolean)] = {
     try {
-      // one write task per spark.sql.files.maxPartitionBytes of input, not
-      // one per input file: the scan opens every small file as its own
-      // split, and each write task pays fixed costs (Hadoop conf copies,
-      // parquet writer setup, file creates). coalesce is narrow (no
-      // shuffle, stage or job) and a no-op once the scan already has at
-      // most n splits, as at full RFB sizes.
+      // write tasks sized by bytes, not one per input file: the scan
+      // charges each file spark.sql.files.openCostInBytes, so every small
+      // corrected file became its own split and its own write task, each
+      // paying fixed costs (Hadoop conf copies, parquet writer setup, file
+      // creates). The split size is Spark's own rule over the raw bytes,
+      // min(maxPartitionBytes, max(openCostInBytes, bytes / parallelism)),
+      // so a small month writes one file per table while a large table
+      // keeps about the scan's split count, the parse's parallelism
+      // included (coalesce is narrow and never adds partitions).
       val bytes = paths.map(f => Files.size(Paths.get(f))).sum
-      val cap = spark.sessionState.conf.filesMaxPartitionBytes
-      val parts = math.max(1L, (bytes + cap - 1) / cap).toInt
+      val split = FilePartition.maxSplitBytes(spark, bytes)
+      val parts = math.max(1L, (bytes + split - 1) / split).toInt
       // arity from the routing layer's layout knowledge, NOT sniffed
       // from the first line of the first file: a blank/short first
       // line would shrink the schema for the WHOLE table and

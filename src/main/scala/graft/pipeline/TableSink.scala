@@ -31,6 +31,13 @@ trait TableSink {
     * read-back instead of trusting never-populated write-side metrics.
     */
   def observesWrites: Boolean = true
+
+  /** How many tables' [[overwrite]]s may run at once: the pipeline loads a
+    * month's table groups on a small driver pool, bounded by this. A sink
+    * whose fan-in bound holds per write returns 1 so it stays the whole
+    * load's bound.
+    */
+  def concurrentOverwrites: Int = Int.MaxValue
 }
 
 /** Lake sink: one parquet directory per (table, snapshot) — the side-by-side
@@ -171,7 +178,8 @@ class ParquetSink(outDir: String) extends TableSink {
   * Spark's default type mapping.
   *
   * Scale notes (100 TB): the INSERT fan-in is bounded by the database, not
-  * Spark — `numPartitions` caps concurrent connections and `batchsize`
+  * Spark — `numPartitions` caps concurrent connections (one table loads at
+  * a time, [[concurrentOverwrites]]) and `batchsize`
   * amortizes round-trips (the reference's `method='multi', chunksize=10000`,
   * `main.py:205`). [[readBack]] is used by the pipeline only for the
   * `COUNT(*)` audit, which the JDBC source pushes down to the database; a
@@ -293,4 +301,10 @@ class JdbcSink(
     * read the same rows once).
     */
   override def observesWrites: Boolean = false
+
+  /** One table at a time: `numPartitions` connections is then the bound for
+    * the whole load, not per table, and the per-month schema's
+    * `ensureSchema` and TRUNCATEs never run against each other.
+    */
+  override def concurrentOverwrites: Int = 1
 }

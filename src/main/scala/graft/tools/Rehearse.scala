@@ -207,6 +207,7 @@ object Rehearse {
     override def readBack(spark: SparkSession, table: String,
         refMonth: String): DataFrame = inner.readBack(spark, table, refMonth)
     override def observesWrites: Boolean = inner.observesWrites
+    override def concurrentOverwrites: Int = inner.concurrentOverwrites
   }
 
   /** One full pipeline pass. `killAfter > 0` arms the deterministic halt

@@ -346,6 +346,41 @@ class JdbcSinkSpec extends AnyFunSuite {
     assert(sink.readBack(spark, "rfb_paises", "202401").count() === 2)
   }
 
+  test("a several-table month through the JDBC sink loads one table at a " +
+    "time, so numPartitions bounds the whole load's connections") {
+    val url = freshDb()
+    val src = Files.createTempDirectory("rfb-src")
+    val work = Files.createTempDirectory("rfb-work")
+    val dims = Seq("PAIS" -> "rfb_paises", "CNAECSV" -> "rfb_cnaes",
+      "MOTIV" -> "rfb_motivos", "MUNIC" -> "rfb_municipios",
+      "NATJU" -> "rfb_naturezas", "QUALS" -> "rfb_qualificacoes")
+    dims.foreach { case (id, t) =>
+      mkZip(src, s"$id.zip", Seq(s"K1.D509.$id" ->
+        s"1;$t um\n2;$t dois\n3;$t tres\n".getBytes(StandardCharsets.UTF_8)))
+    }
+    writeListing(src, dims.map(d => s"${d._1}.zip"))
+    val inFlight = new java.util.concurrent.atomic.AtomicInteger(0)
+    val peak = new java.util.concurrent.atomic.AtomicInteger(0)
+    val sink = new JdbcSink(url, props, numPartitions = 2) {
+      override def overwrite(df: org.apache.spark.sql.DataFrame,
+          table: String, refMonth: String): Unit = {
+        peak.accumulateAndGet(inFlight.incrementAndGet(), math.max)
+        try super.overwrite(df, table, refMonth)
+        finally inFlight.decrementAndGet()
+      }
+    }
+    val pipe = new RfbPipeline(spark, work, outDir = "/unused", refMonth = "202401",
+      fetcher = new LocalFetcher(src), backoffMs = 0, sink0 = sink)
+    val entries = pipe.run("http://x/")
+    assert(entries.map(_.statusCarga).toSet === Set(Status.Sucesso))
+    assert(pipe.lastLoadErrors.isEmpty)
+    assert(pipe.lastAudits.keySet === dims.map(_._2).toSet)
+    assert(peak.get() === 1)
+    dims.foreach { case (_, t) =>
+      assert(sink.readBack(spark, t, "202401").count() === 3, t)
+    }
+  }
+
   test("count-audit gate: short read-back marks the load falhou") {
     val url = freshDb()
     val src = Files.createTempDirectory("rfb-src")

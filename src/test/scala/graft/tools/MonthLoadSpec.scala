@@ -95,6 +95,24 @@ class MonthLoadSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("size rule: a table past openCostInBytes x parallelism keeps one " +
+    "write task per slot, as the scan splits it") {
+    // the regime of a full-size RFB table on a real cluster, in miniature:
+    // Spark splits such a scan into about defaultParallelism pieces, and the
+    // write must not coalesce them down to bytes / maxPartitionBytes
+    val (pa, _) = control
+    val slots = spark.sparkContext.defaultParallelism
+    val cheap = spark.newSession()
+    cheap.conf.set("spark.sql.files.openCostInBytes", "1024")
+    val (pd, ed) = fullRun(cheap, "d")
+    assert(pd.lastAudits === pa.lastAudits)
+    assert(fingerprints("d") === fingerprints("a"))
+    Seq("rfb_empresas", "rfb_estabelecimentos", "rfb_socios").foreach { t =>
+      assert(correctedBytes(ed, t) > 1024L * slots, s"$t is below the regime")
+      assert(partFiles("d", t) >= slots, s"$t: ${partFiles("d", t)} files")
+    }
+  }
+
   test("determinism: two runs of one month give equal tables and manifests") {
     val (pa, ea) = control
     val (pc, ec) = fullRun(spark, "c")
